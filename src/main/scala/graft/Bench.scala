@@ -46,6 +46,11 @@ import org.apache.spark.sql.SparkSession
   *    process CPU), so a wall inflation accompanied by a steal jump on
   *    unchanged shuffle bytes is adjudicated as a hypervisor window
   *    directly from the artifact.
+  *
+  * Structural layers per query (`shuffle_bytes`, `stages`, `tasks`,
+  * `task_cpu_ms`, from one listener — see [[Tally]]) say where a query's
+  * time went without a re-run; `graft.Bench q1,q2` is the profiling path
+  * for a handful of queries.
   */
 object Bench {
 
@@ -88,17 +93,44 @@ object Bench {
     } finally src.close()
   } catch { case _: Throwable => -1L }
 
-  /** Running total of shuffle bytes WRITTEN across all completed stages —
-    * the direct per-query measure of exchange volume (what the 100 TB
-    * shuffle-shape claims in IMPLEMENTATION.md/SCALING.md are about). */
+  /** Structural per-query counters, read as deltas over a query's window:
+    * shuffle bytes WRITTEN (the direct measure of exchange volume the
+    * 100 TB shuffle-shape claims in IMPLEMENTATION.md/SCALING.md are
+    * about), completed stages and tasks (scheduling cost — per-task fixed
+    * overhead on tiny iterative stages shows up here), and summed task
+    * executor CPU. Unlike wall time, none of these depend on host phase. */
+  private final case class Tally(shuffleBytes: Long, stages: Long, tasks: Long, taskCpuMs: Long) {
+    def -(o: Tally): Tally = Tally(shuffleBytes - o.shuffleBytes,
+      stages - o.stages, tasks - o.tasks, taskCpuMs - o.taskCpuMs)
+  }
+
   private class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val bytes, stages, tasks, cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
+    def snapshot: Tally = Tally(bytes.get, stages.get, tasks.get, cpuNs.get / 1000000L)
     override def onStageCompleted(
         done: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
       val m = done.stageInfo.taskMetrics
       if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
     }
+    override def onTaskEnd(end: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = end.taskMetrics
+      if (m != null) cpuNs.addAndGet(m.executorCpuTime)
+    }
   }
+
+  /** One timed query: seconds (negative on failure) and the GC, process-CPU
+    * and steal deltas of its window, its listener [[Tally]], and whether
+    * the window filled one of the per-(session, dir) [[memos]]. */
+  private final case class Reading(secs: Double, gcMs: Long, cpuMs: Long, stealMs: Long,
+                                   tally: Tally, filledMemo: Boolean)
+
+  /** Which per-(session, dir) memos are filled: Dedup's component labels
+    * and Analytics' model fit. */
+  private def memos(spark: SparkSession, sfDir: String): Seq[Boolean] =
+    Seq(operators.Dedup.labelsMemoized(spark, sfDir),
+      operators.Analytics.fitMemoized(spark, sfDir))
 
   /** Listener events are delivered async; drain the bus so each query's
     * stage metrics land in its own tally window. `listenerBus` /
@@ -117,34 +149,11 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Optional 1st arg: comma-separated query names (dev iteration only;
-    // the driver passes no args and times the full battery).
+    // Optional 1st arg: comma-separated query names (dev iteration and
+    // per-query profiling); with no args the full battery is timed.
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Round 17 (guide §2.2 "fewer, larger blocks"): with reduce counts
-      // below spark.shuffle.sort.bypassMergeThreshold (default 200) the
-      // bypass-merge writer opens ONE FILE PER REDUCE PARTITION per map
-      // task — a 32×32 shuffle creates >1k files, and thread dumps of the
-      // battery showed task threads RUNNABLE in FileOutputStream.open plus
-      // a lock convoy on IndexShuffleBlockResolver. Threshold 0 selects
-      // the same sort-based writer (one data + one index file per map
-      // task) that ANY at-scale shuffle (>200 reducers) uses anyway, so
-      // local runs exercise the production write path instead of a
-      // small-shuffle special case. Measured: a tiny 32-partition groupBy
-      // dropped 0.8 s/12 core-s → 0.3 s/3 core-s. Env-overridable for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
     // Warm-up outside the timed region: JVM/codegen init and parquet footer
@@ -170,11 +179,11 @@ object Bench {
       s"[bench] ML warm-up failed: ${e.getClass.getName}: ${e.getMessage}") }
 
     // Sentinel pass 1: cheapest plan in the battery, timed on a warm JVM.
-    val sentinelFirst = timeQuery(spark, sfDir, "o3_limit", tally)._1
+    val sentinelFirst = timeQuery(spark, sfDir, "o3_limit", tally).secs
     val firstPass = runBattery(spark, sfDir, only, tally)
     // Sentinel pass 2: same trivial plan after the battery; on a healthy
     // host this matches pass 1 within noise. gc stays per-query below.
-    val sentinelLast = timeQuery(spark, sfDir, "o3_limit", tally)._1
+    val sentinelLast = timeQuery(spark, sfDir, "o3_limit", tally).secs
     // SELF-HEALING ANCHOR (round-16, closing the round-15 verdict's item
     // 2): a row whose own window was steal-contaminated — >= 1 core-second
     // of /proc/stat hypervisor steal per wall-second, the same mechanical
@@ -185,17 +194,16 @@ object Bench {
     // the reading from the quieter window (lower steal per wall-second)
     // becomes the primary number; BOTH readings and which was kept are
     // recorded in the JSON's `healed` map, so nothing is hidden.
-    // Round 17: memo-backed queries are EXCLUDED from healing. dd_canonical
-    // fills Dedup's per-(session,dir) component-label memo and nlp_analysis
-    // fills Analytics' model-fit cache during their first timed run; a
-    // battery-end re-run would ride the filled memo and measure a fraction
-    // of the query's standalone cost (observed: dd_canonical 4.7 s first,
-    // 0.5 s re-run). Their first reading stands even when steal-flagged —
+    // Round 17: memo-backed queries are EXCLUDED from healing. A query
+    // whose first timed run filled a memo (in the full battery: dd_canonical
+    // Dedup's component labels, nlp_analysis Analytics' model fit) would
+    // ride the filled memo on a battery-end re-run and measure a fraction
+    // of its standalone cost (observed: dd_canonical 4.7 s first, 0.5 s
+    // re-run). Its first reading stands even when steal-flagged —
     // overstating under steal is honest, understating via a memo is not.
-    val memoBacked = Set("dd_canonical", "nlp_analysis")
     val stealFlagged = firstPass.collect {
-      case (n, r) if r._1 > 0 && r._5 >= math.round(1000.0 * r._1) &&
-        !memoBacked.contains(n) => n
+      case (n, r) if r.secs > 0 && r.stealMs >= math.round(1000.0 * r.secs) &&
+        !r.filledMemo => n
     }.toSet
     if (stealFlagged.nonEmpty) System.err.println(
       s"[bench] steal-flagged rows, re-running once: ${stealFlagged.toSeq.sorted.mkString(", ")}")
@@ -203,29 +211,21 @@ object Bench {
     val results = firstPass.map {
       case (n, first) if stealFlagged.contains(n) =>
         val second = timeQuery(spark, sfDir, n, tally)
-        val keepSecond = second._1 > 0 &&
-          second._5.toDouble / second._1 < first._5.toDouble / first._1
+        val keepSecond = second.secs > 0 &&
+          second.stealMs.toDouble / second.secs < first.stealMs.toDouble / first.secs
         val kept = if (keepSecond) second else first
         healedInfo(n) =
-          s"""{"first_secs":${first._1},"first_steal_ms":${first._5},""" +
-            s""""rerun_secs":${second._1},"rerun_steal_ms":${second._5},""" +
+          s"""{"first_secs":${first.secs},"first_steal_ms":${first.stealMs},""" +
+            s""""rerun_secs":${second.secs},"rerun_steal_ms":${second.stealMs},""" +
             s""""kept":"${if (keepSecond) "rerun" else "first"}"}"""
         (n, kept)
       case kv => kv
     }
-    val qs = results.map { case (k, r) => "\"" + k + "\":" + r._1 }
-      .mkString("{", ",", "}")
-    val gcs = results.map { case (k, r) => "\"" + k + "\":" + r._2 }
-      .mkString("{", ",", "}")
-    val shfl = results.map { case (k, r) => "\"" + k + "\":" + r._3 }
-      .mkString("{", ",", "}")
-    val cpus_ = results.map { case (k, r) => "\"" + k + "\":" + r._4 }
-      .mkString("{", ",", "}")
-    val steals = results.map { case (k, r) => "\"" + k + "\":" + r._5 }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, r) if r._1 < 0 => "\"" + k + "\"" }
+    def perQuery(f: Reading => Any): String =
+      results.map { case (k, r) => "\"" + k + "\":" + f(r) }.mkString("{", ",", "}")
+    val failed = results.collect { case (k, r) if r.secs < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = results.collect { case (_, r) if r._1 >= 0 => r._1 }.sum
+    val total = results.collect { case (_, r) if r.secs >= 0 => r.secs }.sum
     val sentinel =
       s"""{"query":"o3_limit","first":$sentinelFirst,"last":$sentinelLast,""" +
         s""""ratio":${if (sentinelFirst > 0) sentinelLast / sentinelFirst else -1.0}}"""
@@ -235,7 +235,7 @@ object Bench {
       s""","partial":true,"only":${names.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}""")
     val healedJson = healedInfo.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_ms":$gcs,"shuffle_bytes":$shfl,"cpu_ms":$cpus_,"steal_ms":$steals,"sentinel":$sentinel,"failed":$failed,"healed":$healedJson$partial,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${perQuery(_.secs)},"gc_ms":${perQuery(_.gcMs)},"shuffle_bytes":${perQuery(_.tally.shuffleBytes)},"cpu_ms":${perQuery(_.cpuMs)},"steal_ms":${perQuery(_.stealMs)},"stages":${perQuery(_.tally.stages)},"tasks":${perQuery(_.tally.tasks)},"task_cpu_ms":${perQuery(_.tally.taskCpuMs)},"sentinel":$sentinel,"failed":$failed,"healed":$healedJson$partial,"sf":"$sfDir"}"""
     println(line)
     // The driver captures only a tail of stdout and has truncated the
     // per-query map two rounds running — persist the full line in-repo so
@@ -251,19 +251,18 @@ object Bench {
     spark.stop()
   }
 
-  /** Time one query: (seconds — negative on failure, GC-ms delta,
-    * shuffle bytes written, process-CPU-ms delta). The bus drain brackets
-    * the tally window so stage metrics land with the query that produced
+  /** Time one query into a [[Reading]]. The bus drain brackets the tally
+    * window so stage and task metrics land with the query that produced
     * them. The cache clear enforces the cold per-query contract (header
     * doc): no query may ride a CacheManager entry a sibling left behind. */
   private def timeQuery(spark: SparkSession, sfDir: String,
-                        name: String, tally: ShuffleTally)
-      : (Double, Long, Long, Long, Long) = {
+                        name: String, tally: ShuffleTally): Reading = {
     try spark.catalog.clearCache()
     catch { case e: Throwable => System.err.println(
       s"[bench] clearCache before $name failed: ${e.getMessage}") }
     drainListenerBus(spark)
-    val s0 = tally.bytes.get()
+    val s0 = tally.snapshot
+    val m0 = memos(spark, sfDir)
     val g0 = gcMillis()
     val c0 = cpuMillis()
     val st0 = stealMillis()
@@ -285,7 +284,8 @@ object Bench {
     drainListenerBus(spark)
     val cpu = { val c1 = cpuMillis(); if (c0 < 0 || c1 < 0) -1L else c1 - c0 }
     val steal = { val s1 = stealMillis(); if (st0 < 0 || s1 < 0) -1L else s1 - st0 }
-    ((if (ok) secs else -secs), gcMillis() - g0, tally.bytes.get() - s0, cpu, steal)
+    val filledMemo = m0.zip(memos(spark, sfDir)).exists { case (before, after) => !before && after }
+    Reading(if (ok) secs else -secs, gcMillis() - g0, cpu, steal, tally.snapshot - s0, filledMemo)
   }
 
   private def warmMlPath(spark: SparkSession): Unit = {
@@ -294,7 +294,6 @@ object Bench {
     import org.apache.spark.ml.feature.{CountVectorizer, StopWordsRemover, Tokenizer, IDF}
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.plans.VaderExpr.register(spark)
     // Round 17: the warm-up fit now mirrors the REAL fit's shape (K=20,
     // maxIter=10, a few hundred docs over a 64-partition layout) instead of
     // a 2-iteration K=2 toy. With the toy, the timed nlp_analysis was
@@ -336,7 +335,7 @@ object Bench {
   private def runBattery(spark: SparkSession, sfDir: String,
                          only: Option[Set[String]],
                          tally: ShuffleTally)
-      : Seq[(String, (Double, Long, Long, Long, Long))] = {
+      : Seq[(String, Reading)] = {
     // Stable ordering: cheap scans first is irrelevant to totals, but a
     // deterministic run order makes cross-round comparisons meaningful.
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev driver: build an sf1-equivalent testdata dir by replicating the
@@ -36,15 +36,7 @@ object ReplicateSf {
   def main(args: Array[String]): Unit = {
     val (src, dst, mult) = (args(0), args(1), args(2).toInt)
     val growParts = args.contains("growParts")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-replicate-sf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
 
     def write(df: DataFrame, name: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite")

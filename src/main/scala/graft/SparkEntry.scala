@@ -12,12 +12,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The §3.3 analytics pipeline: clean → VADER → TF-IDF → LDA → analysis. */
+    * The §3.3 analytics pipeline: clean → VADER → TF-IDF → LDA → analysis.
+    * Goes through [[queries]], so it runs on any caller's session. */
   def entry(spark: SparkSession): DataFrame =
     queries("nlp_analysis")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each first
+    * installs the custom functions its session lacks: the caller may have
+    * built the session without `GraftExtensions`. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
+    battery.map { case (name, q) =>
+      name -> { (s: SparkSession, dir: String) => plans.GraftExtensions.install(s); q(s, dir) }
+    }
+
+  private def battery: Map[String, (SparkSession, String) => DataFrame] =
     operators.Relational.queries ++
       operators.Relational2.queries ++
       operators.Relational3.queries ++

@@ -42,7 +42,6 @@ object Analytics {
 
   /** Cleaned corpus with sentiment — the pre-ML §3.3 prefix. */
   def corpus(s: SparkSession, dir: String): DataFrame = {
-    VaderExpr.register(s)
     load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
         TextClean.clean(col("text")).as("text"))
@@ -90,6 +89,11 @@ object Analytics {
       computed
     }
   }
+
+  /** Whether (s, dir)'s model fit is memoized — lets Bench see which query
+    * filled the memo. */
+  private[graft] def fitMemoized(s: SparkSession, dir: String): Boolean =
+    ldaCache.containsKey((s, dir))
 
   private def fitLdaUncached(s: SparkSession, dir: String) = {
     // Same shape as RedditProcessor.analyze: the corpus (clean + VADER) is

@@ -246,6 +246,11 @@ object Dedup {
     }
   }
 
+  /** Whether (s, dir)'s component labels are memoized — lets Bench see
+    * which query filled the memo. */
+  private[graft] def labelsMemoized(s: SparkSession, dir: String): Boolean =
+    labelsCache.containsKey((s, dir))
+
   private def computeComponentLabels(s: SparkSession, dir: String): DataFrame = {
     // Both group-key kinds (content hash, token-set fingerprint) ride ONE
     // documents scan and ONE shuffle: explode each doc into its two
@@ -891,7 +896,6 @@ object Dedup {
     // runs the codegen'd DotProduct expression — the fold order matches the
     // HOF/DuckDB formulation bit-for-bit, only faster.
     "dd_embed_cos" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val e = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))

@@ -107,7 +107,6 @@ object Embeddings {
     * consumer). */
   private def pqAllOn(s: SparkSession, base: DataFrame,
                       mCount: Int, subDim: Int, k: Int): (DataFrame, DataFrame) = {
-    graft.plans.ArrayExprs.register(s)
     import graft.plans.ArrayExprs.dotProduct
     val sub = base
       .select(col("vec_id"), explode(expr(
@@ -191,7 +190,6 @@ object Embeddings {
     * (round-16 restructure; see [[pqAllOn]]). */
   private def annPq(s: SparkSession, dir: String, mCount: Int,
                     subDim: Int, k: Int): DataFrame = {
-    graft.plans.ArrayExprs.register(s)
     val (codesL, cents) = pqAll(s, dir, mCount, subDim, k)
     val q = load(s, dir, "embeddings")
       .where(col("vec_id") < NumQueries)
@@ -305,7 +303,6 @@ object Embeddings {
     * Rayleigh λ) — all model-scale driver state. */
   private def pcaTop(s: SparkSession, dir: String)
       : (Double, Array[Double], Array[Double], Double) = {
-    graft.plans.GramianAgg.register(s)
     val dim = EmbD
     val g = quantized(s, dir)
       .agg(graft.plans.GramianAgg.gramian(col("qa"), dim).as("g"))
@@ -344,7 +341,6 @@ object Embeddings {
   }
 
   private def kmeansAssigned(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.ArrayExprs.register(s)
     import graft.plans.ArrayExprs.dotProduct
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"),
@@ -380,7 +376,6 @@ object Embeddings {
   /** The anchor/query subset shared by emb_knn_label and
     * emb_triplet_mine: the first KnnNq vectors with their norms. */
   private def anchors(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.ArrayExprs.register(s)
     import graft.plans.ArrayExprs.dotProduct
     load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"), col("label"))
@@ -398,7 +393,6 @@ object Embeddings {
     * cell-keyed joins — never all-pairs; per-anchor windows partition on
     * the anchor key. Columns: (q_id, q_label, n_id, label, score). */
   private def knnCandidates(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.ArrayExprs.register(s)
     import graft.plans.ArrayExprs.dotProduct
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"), col("label"))
@@ -470,7 +464,6 @@ object Embeddings {
     // A production run raises k with corpus size so clusters stay bounded;
     // the dataflow (cluster shuffle + within-cluster pairs) is identical.
     "emb_semdedup" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val a = kmeansAssigned(s, dir)
         .select(col("vec_id"), col("v"), col("cluster"))
@@ -547,7 +540,6 @@ object Embeddings {
     // each query probe the NProbe nearest cells and take cosine top-k among
     // their members.
     "ann_ivf" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val e = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))
@@ -610,7 +602,6 @@ object Embeddings {
     // scan + per-group top-k; the overlap is an integer count. The
     // battery twin of AnnRecallSpec's fidelity study, oracle-checked.
     "emb_recall" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val ivf = queries("ann_ivf")(s, dir).select(col("q_id"), col("n_id"))
       val e = load(s, dir, "embeddings")
@@ -867,7 +858,6 @@ object Embeddings {
     * candidate set (the 15 returned rows are too small a sample to measure
     * how well adist tracks the true distance). */
   private[graft] def ivfPqScored(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.ArrayExprs.register(s)
     import graft.plans.ArrayExprs.dotProduct
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
@@ -915,7 +905,6 @@ object Embeddings {
   /** Residual IVF-PQ candidates with ADC distances, PRE top-k cut — see
     * the ann_ivfpq_res query doc for the design. */
   private[graft] def ivfPqResScored(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.ArrayExprs.register(s)
     import graft.plans.ArrayExprs.dotProduct
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"),

@@ -1492,7 +1492,6 @@ object EventWindows {
     // calendar-bounded array row (the ev_holt collect discipline;
     // ~4M-day span ≈ 32 MB worst case bounds it).
     "ev_kendall_xcorr" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       val d = load(s, dir, "events")
         .select(col("event_type"), to_date(col("ts")).as("d"),
           floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))

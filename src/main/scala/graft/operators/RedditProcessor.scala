@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextClean
-import graft.plans.VaderExpr
+import graft.plans.{GraftExtensions, VaderExpr}
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.clustering.LDA
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, IDF, StopWordsRemover, Tokenizer}
@@ -46,8 +46,8 @@ object RedditProcessor {
   /** The §3.3 pipeline. Returns (analysis, topics). */
   def analyze(spark: SparkSession, posts: DataFrame, comments: DataFrame,
               batchId: String): (DataFrame, DataFrame) = {
-    VaderExpr.register(spark)
-
+    // The caller's session may lack GraftExtensions (VADER is a custom function).
+    GraftExtensions.install(spark)
     val p = posts
       .where(coffeeMatch(Seq(col("title"), col("selftext"))))
       .select(col("id"), col("created_utc"), col("subreddit"), col("score"),

@@ -144,7 +144,6 @@ object Relational {
     // explicit stack, one tree per row, no driver involvement. The oracle is
     // DuckDB's WITH RECURSIVE flatten of the same parent-pointer relation.
     "s2_tree_flatten" -> ((s, dir) => {
-      graft.plans.CommentTreeExplode.register(s)
       val docs = load(s, dir, "documents")
         .select(col("doc_id").cast("long").as("id"),
           (col("doc_id") % 4).cast("int").as("lvl"),

@@ -590,7 +590,6 @@ object Relational2 {
     // k pairs per group per partition cross the shuffle, and nothing is
     // sorted per-partition. The scale path for top-k at 100 TB.
     "o4_topk_heap" -> ((s, dir) => {
-      graft.plans.TopKAgg.register(s)
       load(s, dir, "part")
         .groupBy("p_brand")
         .agg(graft.plans.TopKAgg.topkPairs(col("p_retailprice"), col("p_partkey"), 10).as("top"))

@@ -259,7 +259,6 @@ object Relational3 {
     // ORDER BY h, event_id — and the value rides the heap as payload so
     // no second scan re-fetches the survivors.
     "samp_stratified" -> ((s, dir) => {
-      graft.plans.TopKAgg.register(s)
       load(s, dir, "events")
         .withColumn("h", graft.Exact.hash32(col("event_id").cast("string")))
         .groupBy("event_type")
@@ -437,7 +436,6 @@ object Relational3 {
     // deterministic off the house hash32; the one double expression is
     // shared literal-for-literal.
     "prof_kmv" -> ((s, dir) => {
-      graft.plans.TopKAgg.register(s)
       val hs = load(s, dir, "events")
         .select(col("event_type"),
           graft.Exact.hash32(concat(lit("u:"), col("user_id").cast("string")))
@@ -586,7 +584,6 @@ object Relational3 {
     // rank window over data rows). RNG-free and reproducible on any
     // cluster.
     "samp_neyman" -> ((s, dir) => {
-      graft.plans.TopKAgg.register(s)
       val ev = load(s, dir, "events")
         .select(col("event_type"), col("event_id"),
           floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
@@ -645,7 +642,6 @@ object Relational3 {
     // ordered (score desc, id asc) so the post-explode ordinal IS the
     // in-source quality rank.
     "samp_quality_budget" -> ((s, dir) => {
-      graft.plans.TopKAgg.register(s)
       val ws = filter(split(lower(col("text")), " "), w => w =!= "")
       // size(ws) = 0 guard: a whitespace-only doc would make TTR 0.0/0 —
       // NaN on Spark, engine-dependent in DuckDB — and NaN sorts

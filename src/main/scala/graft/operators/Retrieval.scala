@@ -371,7 +371,6 @@ object Retrieval {
     // Output: per-position rank/doc/grade with running dcg/idcg/ndcg —
     // all running sums over the k-row frame above TakeOrdered cuts.
     "ir_ndcg" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val rel = load(s, dir, "documents")
         .select(col("doc_id"),
@@ -426,7 +425,6 @@ object Retrieval {
     // engines. Single-row output: ERR@k, the residual continue mass,
     // and the relevant-in-list count.
     "ir_err" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val rel = load(s, dir, "documents")
         .select(col("doc_id"),
@@ -487,7 +485,6 @@ object Retrieval {
     // (sequential by frame definition, so the double stream is identical
     // on both engines — the ir_map precedent).
     "ir_bpref" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val rel = load(s, dir, "documents")
         .select(col("doc_id"),
@@ -569,7 +566,6 @@ object Retrieval {
     }),
 
     "ir_map" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val rel = load(s, dir, "documents")
         .select(col("doc_id"),
@@ -620,7 +616,6 @@ object Retrieval {
     // for scores, a K-bounded TakeOrdered run; the 11-level join rides
     // an 11×K broadcast frame.
     "ir_pr11" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val rel = load(s, dir, "documents")
         .select(col("doc_id"),
@@ -678,7 +673,6 @@ object Retrieval {
     // broadcast row; a query with no relevant doc in the top k
     // contributes rr = 0 on both engines.
     "ir_mrr" -> ((s, dir) => {
-      graft.plans.TopKAgg.register(s)
       val docs = load(s, dir, "documents")
       val tf = docs
         .select(col("doc_id"), explode(toks(col("text"))).as("term"))
@@ -719,7 +713,6 @@ object Retrieval {
     // arrive as shared Scala-computed literals (see [[RboWeights]]);
     // every other number is an integer or an integer ratio, round(6).
     "ir_rbo" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val wA = Window.orderBy(col("score").desc, col("doc_id"))
       val lex = bm25Top(s, dir).limit(RboK)
@@ -767,7 +760,6 @@ object Retrieval {
     // anchors, so the normalization arithmetic is the identical double
     // tree.
     "ir_combsum" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val lex = bm25Top(s, dir)
       val lmm = lex.groupBy().agg(min("score").as("mn"), max("score").as("mx"))
@@ -808,7 +800,6 @@ object Retrieval {
     }),
 
     "ir_rrf" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val lex = bm25Top(s, dir)
         .withColumn("lex_rank", row_number().over(
@@ -853,7 +844,6 @@ object Retrieval {
     // identical to ir_rrf — two top-k cuts (k-bounded) + one k-row
     // full-outer join; the fusion itself never touches the corpus.
     "ir_borda" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val lex = bm25Top(s, dir)
         .withColumn("lex_rank", row_number().over(

@@ -68,7 +68,6 @@ object Similarity {
     // Brute-force cosine top-k: exact ANN baseline. Norms precomputed per
     // vector; the pair loop is one codegen'd dot product.
     "ann_topk" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val e = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))
@@ -95,7 +94,6 @@ object Similarity {
     // governed by the plane count (each added plane halves expected bucket
     // size), which is the knob a 100 TB deployment sizes to its data volume.
     "ann_lsh" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val e = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))
@@ -185,7 +183,6 @@ object Similarity {
     // windows don't re-run the scan); both top-k cuts rank on rounded
     // scores with id tiebreaks — engine-exact.
     "emb_matryoshka" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val e = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))
@@ -218,7 +215,6 @@ object Similarity {
     }),
 
     "ann_mmr" -> ((s, dir) => {
-      graft.plans.ArrayExprs.register(s)
       import graft.plans.ArrayExprs.dotProduct
       val e = load(s, dir, "embeddings")
         .select(col("vec_id"),

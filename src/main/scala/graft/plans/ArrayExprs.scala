@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -150,20 +150,11 @@ case class InvCount(child: Expression) extends UnaryExpression
 }
 
 object ArrayExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "inv_count", exprs => InvCount(exprs(0)), "built-in")
-  }
-
-  /** Column API; requires [[register]] on the session first. */
+  /** Column API; requires a session built with `GraftExtensions`. */
   def dotProduct(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("dot_product", a, b)
 
-  /** Column API; requires [[register]] on the session first. */
+  /** Column API; requires a session built with `GraftExtensions`. */
   def invCount(a: Column): Column =
     org.apache.spark.sql.functions.call_function("inv_count", a)
 }

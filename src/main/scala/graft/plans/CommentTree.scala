@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -69,13 +69,7 @@ object CommentTreeExplode {
   /** Shared, thread-safe for readTree. */
   private val Mapper = new ObjectMapper
 
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(
-        "comment_tree_explode", exprs => CommentTreeExplode(exprs.head), "built-in")
-
-  /** Column API: requires [[register]] on the session first. */
+  /** Column API: requires a session built with `GraftExtensions`. */
   def commentTreeExplode(c: Column): Column =
     org.apache.spark.sql.functions.call_function("comment_tree_explode", c)
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -130,13 +130,7 @@ case class GramianAgg(
 }
 
 object GramianAgg {
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(
-        "gramian_agg", exprs => GramianAgg(exprs(0), exprs(1)), "built-in")
-
-  /** Column API; requires [[register]] on the session first. */
+  /** Column API; requires a session built with `GraftExtensions`. */
   def gramian(vec: Column, d: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "gramian_agg", vec, org.apache.spark.sql.functions.lit(d))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RegExpReplace}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -71,12 +70,4 @@ object CollapseRegexpReplace extends Rule[LogicalPlan] {
             SingleCharClass.matcher(p2).matches() =>
         RegExpReplace(child, lit(s"(?:$p1)|(?:$p2)"), lit(""), Literal(1))
     }
-}
-
-/** `spark.sql.extensions` entry point (SURVEY.md §4 engine surface):
-  * installs [[CollapseRegexpReplace]] into the operator-optimization batch,
-  * where it runs to fixed point alongside Catalyst's own rules. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    e.injectOptimizerRule(_ => CollapseRegexpReplace)
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -273,22 +273,12 @@ case class TopKTriples(
 }
 
 object TopKAgg {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "topk_pairs", exprs => TopKPairs(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "topk_triples", exprs => TopKTriples(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-  }
-
-  /** Column API; requires [[register]] on the session first. */
+  /** Column API; requires a session built with `GraftExtensions`. */
   def topkPairs(score: Column, id: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "topk_pairs", score, id, org.apache.spark.sql.functions.lit(k))
 
-  /** Column API; requires [[register]] on the session first. */
+  /** Column API; requires a session built with `GraftExtensions`. */
   def topkTriples(score: Column, id: Column, payload: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "topk_triples", score, id, payload, org.apache.spark.sql.functions.lit(k))

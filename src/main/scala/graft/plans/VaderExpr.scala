@@ -31,15 +31,12 @@ case class VaderCompound(child: Expression) extends UnaryExpression {
 }
 
 object VaderExpr {
-  /** Register `vader_compound(text)` in the session's function registry so
-    * it is callable from any Column context via `call_function`. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(
-        "vader_compound", exprs => VaderCompound(exprs.head), "built-in")
+  /** Registers the custom functions the session lacks, `vader_compound`
+    * among them. Sessions built with `GraftExtensions` already carry them;
+    * this stays only because the perfbench harness calls it. */
+  def register(spark: SparkSession): Unit = GraftExtensions.install(spark)
 
-  /** Column API: requires [[register]] to have been called on the session. */
+  /** Column API: requires a session built with `GraftExtensions`. */
   def vaderCompound(c: Column): Column =
     org.apache.spark.sql.functions.call_function("vader_compound", c)
 }

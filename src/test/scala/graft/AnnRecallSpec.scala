@@ -35,7 +35,6 @@ class AnnRecallSpec extends AnyFunSuite {
 
   /** (q_id, n_id, true L2² distance) for ALL candidate pairs. */
   private lazy val exactDists: Map[(Long, Long), Double] = {
-    graft.plans.ArrayExprs.register(spark)
     import graft.plans.ArrayExprs.dotProduct
     val e = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))

@@ -13,7 +13,6 @@ class CommentTreeSpec extends AnyFunSuite {
 
   private def flatten(json: String) = {
     import spark.implicits._
-    CommentTreeExplode.register(spark)
     Seq(json).toDF("tree")
       .select(CommentTreeExplode.commentTreeExplode(col("tree"))
         .as(Seq("id", "parent_id", "depth", "score")))

@@ -36,7 +36,6 @@ class GoldenPipelineSpec extends AnyFunSuite {
 
   test("golden: clean -> sentiment through the Spark plan equals the static scorer") {
     import spark.implicits._
-    VaderExpr.register(spark)
     val out = corpus.toDF("doc_id", "text")
       .withColumn("cleaned", TextClean.clean(col("text")))
       .withColumn("score", VaderExpr.vaderCompound(col("cleaned")))

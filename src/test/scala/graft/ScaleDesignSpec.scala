@@ -270,7 +270,7 @@ class ScaleDesignSpec extends AnyFunSuite {
       "ev_funnel" -> 7, // 3 stage aggs + 2 user_id SMJ joins (AQE broadcasts small stages)
       "a13_moments" -> 2, // one power-sum agg + oracle sort
       "rec_cooccur" -> 5, // distinct + basket agg + pair agg + supp agg (ReuseExchange dedups the shared distinct) + sort
-      "gr_triangles" -> 4, // deg agg + wedge neighbor-set agg (round 16: replaces the o⋈o self-join — at toy scale that join broadcast and counted 0, at scale it was a sorted SMJ exchange pair; the agg is 1 exchange at EVERY scale) + explode agg + sort above the cached edge list
+      "gr_triangles" -> 4, // apex out-degree rollup (the WedgeApexCap split) + wedge neighbor-set agg (one exchange at every scale; replaced the o⋈o self-join) + explode agg + sort; the degree agg and orient join chain run behind o's eager localCheckpoint (round 17), the edge build inside the cache
       "gr_pagerank" -> 6, // 5 contrib aggs + sort — the ONLY exchanges: both per-iteration joins reuse the cached adjacency partitioning (left side) and the contrib agg partitioning (right side); edge/adjacency build shuffles live inside the cache
       "ta_collocations" -> 6, // uni agg + bi agg + 2 count-table joins + totals + sort; corpus scanned twice, never joined
       "ev_ab_test" -> 3, // user agg + corpus-totals agg + global agg; totals ride a one-row broadcast
@@ -355,7 +355,7 @@ class ScaleDesignSpec extends AnyFunSuite {
       "ta_feature_hash" -> 5, // (doc,term) tf agg behind localCheckpoint + df rollup + term join + (doc,dim) fold agg + oracle sort; N rides a one-row broadcast
       "samp_epoch_plan" -> 3, // ONE per-source token agg + one-row fold denominator + oracle sort; shares map-side under the broadcast
       "emb_matryoshka" -> 3, // both rank windows ride the ONE checkpointed broadcast-query scoring scan ((q,pscore) + (q,fscore) exchanges) + oracle sort; full top-k joins back as a broadcast
-      // round-11 additions (measured AQE-off via graft.ExplainPlan).
+      // round-11 additions (measured AQE-off by this test's own exchange count).
       // Checkpoint caveat: exchanges that run INSIDE an eager
       // localCheckpoint (ta_fightin_words' term agg, gr_labelprop's
       // rounds) don't appear in the final plan — the budget pins the
@@ -911,7 +911,6 @@ class ScaleDesignSpec extends AnyFunSuite {
     // deterministic adversarial sequences (ties, sorted, reversed,
     // pseudo-random with duplicates, odd/even lengths).
     import spark.implicits._
-    graft.plans.ArrayExprs.register(spark)
     def brute(a: Seq[Long]): Long =
       (for (i <- a.indices; j <- i + 1 until a.length if a(i) > a(j))
         yield 1L).sum
