@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextClean
-import graft.plans.{GraftExtensions, VaderExpr}
+import graft.plans.{GlobalIndex, GraftExtensions, VaderExpr}
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.clustering.LDA
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, IDF, StopWordsRemover, Tokenizer}
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §3.3 (redditProcessor.py:56-156) end to end:
   *
   *   coffee filter (F1) → projections (P1/P2) → text concat/rename (X6/X7) →
-  *   union (U1) → chronological sort (O1) → clean (D2) → VADER (D1) →
-  *   TF-IDF (A1) → LDA k=20 seed=42 (A2/D4) → top-10 topic words (O4) →
-  *   batch-id stamp (X9) and composite row ids (X12).
+  *   union (U1) → clean (D2) → chronological row index (O1/X12) →
+  *   VADER (D1) → TF-IDF (A1) → LDA k=20 seed=42 (A2/D4) → top-10 topic
+  *   words (O4) → batch-id stamp (X9) and composite row ids (X12).
   *
   * Input schemas are the declared §1.2 shapes
   * ([[graft.streaming.QueuePipeline.postSchema]] / commentSchema). Returns
@@ -25,8 +25,16 @@ import org.apache.spark.sql.functions._
   * `topicDistribution` stays attached through `transform` (the pandas
   * positional zip-join J1 has no distributed analog and is not needed);
   * `concat_ws` + coalesce reproduces pandas' NaN-propagation observable
-  * behavior; row ids come from `row_number` over the explicit (created_utc,
-  * id) total order rather than an implicit frame index.
+  * behavior; row ids come from [[GlobalIndex]] over the explicit
+  * (created_utc, id, text, score, subreddit) total order rather than an
+  * implicit frame index.
+  *
+  * Topic words are NOT reproducible between identical calls: the
+  * CountVectorizer vocabulary breaks equal-frequency ties in whatever
+  * order its aggregation returns them, and the online LDA fit samples its
+  * mini-batches per partition, so two calls on the same input can name
+  * different words (8 calls on one corpus gave 8 distinct topic sets).
+  * Row ids, text and sentiment are exact; pin those, never topic words.
   */
 object RedditProcessor {
 
@@ -58,16 +66,25 @@ object RedditProcessor {
       .select(col("p_id").as("id"), col("created_utc"), col("subreddit"),
         col("score"), col("body").as("text"))
 
-    val corpus = p.unionByName(c)
-      .orderBy(col("created_utc"), col("id"))
-      .withColumn("text", TextClean.clean(col("text")))
+    // (created_utc, id) is NOT total for comments — they inherit the parent
+    // post's id, so two comments on one post in the same second tie. Extend
+    // the order with the payload columns; remaining ties are fully identical
+    // rows, for which any row_id assignment yields the same output set.
+    // The index is assigned here, on the cleaned union, so the corpus'
+    // only data-scale exchange is GlobalIndex's range shuffle: VADER, the
+    // fits' tokenize/TF-IDF and the LDA transform all run above it in
+    // `spark.sql.shuffle.partitions` parallel tasks.
+    val corpus = GlobalIndex.withRowIndex(
+        p.unionByName(c).withColumn("text", TextClean.clean(col("text"))),
+        Seq(col("created_utc"), col("id"), col("text"), col("score"), col("subreddit")),
+        "__idx")
       .withColumn("sentiment_score", VaderExpr.vaderCompound(col("text")))
       .withColumn("sentiment",
         when(col("sentiment_score") > 0.05, "positive")
           .when(col("sentiment_score") < -0.05, "negative")
           .otherwise("neutral"))
 
-    // The corpus (scan → filter → union → sort → clean → VADER) is consumed
+    // The corpus (scan → filter → union → clean → index → VADER) is consumed
     // by CountVectorizer.fit, IDF.fit, the LDA fit and the final transform;
     // without a persist each pass re-runs the regex chain and VADER scorer
     // over every row. maxDF is passed in fraction form (< 1.0 means a
@@ -100,22 +117,11 @@ object RedditProcessor {
       val withTopics = model.transform(vecs)
         .withColumn("t", vector_to_array(col("topicDistribution")))
       val topicCols = (0 until K).map(i => col("t")(i).as(s"topic_${i + 1}"))
-      // (created_utc, id) is NOT total for comments — they inherit the parent
-      // post's id, so two comments on one post in the same second tie. Extend
-      // the order with the payload columns; remaining ties are fully identical
-      // rows, for which any row_id assignment yields the same output set.
-      // The index itself comes from GlobalIndex (per-partition row_number +
-      // range-partition offsets) so no stage funnels the corpus through a
-      // single task — the round-1 plan audit's only non-distributed stage.
-      val analysis = graft.plans.GlobalIndex.withRowIndex(
-        withTopics.select(
-          col("id") +: col("created_utc") +: col("subreddit") +: col("score") +:
-            col("text") +: col("sentiment_score") +: col("sentiment") +: topicCols: _*),
-        Seq(col("created_utc"), col("id"), col("text"), col("score"), col("subreddit")),
-        "__idx")
-        .withColumn("row_id", concat_ws("_", col("__idx"), lit(batchId)))
-        .withColumn("batch_id", lit(batchId))
-        .drop("__idx")
+      val analysis = withTopics.select(
+        col("id") +: col("created_utc") +: col("subreddit") +: col("score") +:
+          col("text") +: col("sentiment_score") +: col("sentiment") +: topicCols :+
+          concat_ws("_", col("__idx"), lit(batchId)).as("row_id") :+
+          lit(batchId).as("batch_id"): _*)
 
       val vocab = fm.stages(2).asInstanceOf[CountVectorizerModel].vocabulary
       val vocabCol = array(vocab.map(lit).toSeq: _*)
@@ -130,9 +136,11 @@ object RedditProcessor {
 
       (analysis, topics)
     // The eager multi-pass phase (the two fits) is over. The returned frames
-    // are lazy: each ACTION a caller takes on them recomputes the corpus
-    // chain (clean + VADER + transform) once — a caller that runs several
-    // actions (as StreamDemo does) should persist the frames around its own
+    // are lazy: each ACTION a caller takes on them re-runs the corpus chain
+    // once — the range shuffle over scan+clean rows, the one-row-per-
+    // partition offsets, then VADER → TF-IDF → LDA transform in `n` parallel
+    // tasks above the last exchange. A caller that runs several actions (as
+    // StreamDemo does) should persist the frames around its own
     // consumption. We release here anyway: pinning the blocks for an
     // unbounded caller lifetime is the worse default, and the finally also
     // covers the failure paths (a fit throwing, the empty-vocabulary

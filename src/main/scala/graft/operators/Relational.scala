@@ -119,8 +119,8 @@ object Relational {
 
     // §2.4 J1 positional zip-join (pandas index join, redditProcessor.py:123):
     // a dense global row number on both sides, equi-join on it. The row
-    // number comes from [[graft.plans.GlobalIndex]] (per-partition
-    // row_number + range-partition offsets), NOT a partition-less Window —
+    // number comes from [[graft.plans.GlobalIndex]] (in-partition
+    // position + range-partition offsets), NOT a partition-less Window —
     // every stage stays distributed at fact scale.
     "j1_zip_join" -> ((s, dir) => {
       def indexed(df: DataFrame, order: Seq[Column]): DataFrame =

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.RedditProcessor
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,5 +67,78 @@ class RedditProcessorSpec extends AnyFunSuite {
     val s1 = a1.select("row_id", "id", "text", "sentiment").orderBy("row_id").collect().toSeq
     val s2 = a2.select("row_id", "id", "text", "sentiment").orderBy("row_id").collect().toSeq
     assert(s1 == s2)
+  }
+
+  test("row ids are dense and exact across partitions, ties and duplicates included") {
+    val (posts, comments) = RedditProcessorSpec.generated(spark)
+    val order = Seq(col("created_utc"), col("id"), col("text"), col("score"), col("subreddit"))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try for (on <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      val (analysis, _) = RedditProcessor.analyze(spark, posts, comments, "b")
+      val got = analysis
+        .select(regexp_extract(col("row_id"), "^(\\d+)_b$", 1).cast("long").as("idx") +: order: _*)
+        .collect()
+      assert(got.length == RedditProcessorSpec.GeneratedDocs, s"AQE $on")
+      assert(got.map(_.getLong(0)).sorted.toSeq == (0L until got.length), s"AQE $on: ids not dense")
+      // The single-task reference: row_number over the same cleaned rows.
+      val rows = got.toSeq.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.tail))
+      val want = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          analysis.select(order: _*).schema)
+        .select((row_number().over(Window.orderBy(order: _*)).cast("long") - 1L) +: order: _*)
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      assert(got.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq == want, s"AQE $on")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("analyze leaves no cached or persisted blocks behind once its outputs are consumed") {
+    val (posts, comments) = fixture()
+    val cm = spark.sharedState.cacheManager
+    // numCachedEntries is private[spark] in Scala; its JVM method is public.
+    def cached = cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+    val (entries0, rdds0) = (cached, spark.sparkContext.getPersistentRDDs.keySet)
+    val (analysis, topics) = RedditProcessor.analyze(spark, posts, comments, "batch_c")
+    analysis.write.format("noop").mode("overwrite").save()
+    topics.collect()
+    assert(cached == entries0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0)
+  }
+}
+
+object RedditProcessorSpec {
+
+  /** Posts plus comments the generated corpus keeps (all carry "coffee"). */
+  val GeneratedDocs = 40 + 300 + 4 + 20
+
+  /** A few hundred coffee docs built to stress the row index: comments
+    * crowd few posts and few seconds, so (created_utc, id) ties are common
+    * and broken by text; hand-made rows tie on everything but score, or on
+    * everything but subreddit; the first 20 comments appear twice as fully
+    * identical rows. */
+  def generated(spark: SparkSession): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val words = Seq("espresso", "latte", "beans", "roast", "great", "terrible",
+      "morning", "cafe", "milk", "cup", "barista", "bitter", "smooth", "love",
+      "hate", "strong", "weak", "fresh", "cold", "happy")
+    def text(k: Int) = ("coffee" +: Seq.fill(k)(words(rnd.nextInt(words.size)))).mkString(" ")
+    val subs = Seq("melbourne", "sydney", "perth")
+    def ts(sec: Int) = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").toInstant
+      .plusSeconds(sec.toLong).toString
+    val posts = (0 until 40).map(i =>
+      ("u", ts(rnd.nextInt(30)), s"p$i", 0, rnd.nextInt(10), text(6),
+        subs(rnd.nextInt(3)), "coffee talk", "http://x"))
+      .toDF("author", "created_utc", "id", "num_comments", "score", "selftext", "subreddit", "title", "url")
+    val random = (0 until 300).map(j =>
+      (ts(rnd.nextInt(4)), s"p${rnd.nextInt(6)}", s"c$j", text(1 + rnd.nextInt(2)),
+        subs(rnd.nextInt(3)), "t", rnd.nextInt(3)))
+    val handMade = Seq(
+      (ts(1), "p1", "h1", "coffee tie", "perth", "t", 1),
+      (ts(1), "p1", "h2", "coffee tie", "perth", "t", 2), // ties but for score
+      (ts(1), "p1", "h3", "coffee tie", "melbourne", "t", 2), // but for subreddit
+      (ts(1), "p1", "h4", "coffee tie", "sydney", "t", 2))
+    val comments = (random ++ handMade ++ random.take(20))
+      .toDF("created_utc", "p_id", "c_id", "body", "subreddit", "title", "score")
+    (posts, comments)
   }
 }

@@ -56,17 +56,52 @@ class ScaleDesignSpec extends AnyFunSuite {
 
   test("GlobalIndex matches the single-task window row_number exactly") {
     import org.apache.spark.sql.expressions.Window
-    val df = graft.Tables.load(spark, "/root/testdata/sf0.001", "customer")
-      .select("c_custkey", "c_acctbal")
+    // 1500 rows with tied balances: more than the range exchange samples
+    // per input partition, so two exchanges would draw different bounds.
+    // `n` is a payload column outside the order that the result carries
+    // (the w3_ntile_rank shape).
+    val df = graft.plans.GlobalIndex.withTotalCount(
+      spark.range(1500).select(col("id").as("c_custkey"),
+        (col("id") * 7919 % 1009 - 500).cast("double").as("c_acctbal")), "n")
     val order = Seq(col("c_acctbal").desc, col("c_custkey"))
-    val got = graft.plans.GlobalIndex.withRowIndex(df, order, "idx")
-      .select("c_custkey", "idx").orderBy("c_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
     val want = df
       .withColumn("idx", row_number().over(Window.orderBy(order: _*)).cast("long") - 1L)
-      .select("c_custkey", "idx").orderBy("c_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.sameElements(want))
+      .select("c_custkey", "idx", "n").orderBy("c_custkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // A multi-partition input (a hash scatter of the scan) with AQE on as
+    // well as off: the offsets and the in-partition positions must read
+    // one range layout whatever the input split.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try for ((input, on) <- Seq((df, "false"), (df, "true"),
+        (df.repartition(7, col("c_acctbal")), "true"),
+        (df.repartition(7, col("c_acctbal")), "false"))) {
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      val got = graft.plans.GlobalIndex.withRowIndex(input, order, "idx")
+        .select("c_custkey", "idx", "n").orderBy("c_custkey").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(got.sameElements(want), s"AQE $on, ${input.rdd.getNumPartitions} input partitions")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("RedditProcessor: every exchange sits below VADER, at most 3 in all") {
+    // The row index is assigned on the cleaned union, so the only
+    // exchanges are GlobalIndex's range shuffle, its offsets aggregate and
+    // the one-row-per-partition offsets window; VADER and the TF-IDF/LDA
+    // transforms run above all of them, in parallel tasks. An exchange
+    // above VADER would re-run the scorer once per shuffle consumer.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val (posts, comments) = RedditProcessorSpec.generated(spark)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (analysis, _) = graft.operators.RedditProcessor.analyze(spark, posts, comments, "plan")
+      val plan = analysis.queryExecution.executedPlan
+      val exchanges = plan.collect { case s: ShuffleExchangeExec => s }
+      assert(exchanges.size <= 3, s"${exchanges.size} exchanges:\n$plan")
+      val overVader = exchanges.filter(_.child.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.plans.VaderCompound]))))
+      assert(overVader.isEmpty, s"${overVader.size} exchanges above vader_compound:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("GlobalIndex plans: every Window over row-level data is partitioned") {
@@ -277,7 +312,7 @@ class ScaleDesignSpec extends AnyFunSuite {
       "ta_entropy" -> 3, // (doc,term) agg + per-doc agg + oracle sort
       "samp_weighted" -> 0, // pure map-side key + TakeOrdered: NO exchange at all
       "ir_cossim" -> 6, // tf agg + df agg + term self-join pair agg + norm agg + d1/d2 joins (ReuseExchange dedups the shared pruned chain) + sort
-      "er_fuzzy_match" -> 6, // range partition + offsets agg + idx window + neighbor idx join + best-match agg + sort (ReuseExchange shares the range exchange)
+      "er_fuzzy_match" -> 5, // range partition + offsets agg + offsets window (one row per partition) + best-match agg + sort; ReuseExchange shares the range exchange and the neighbor idx join is a broadcast
       "gr_shortest_path" -> 1, // final sort only: per-round frontier joins/distincts run inside the eager localCheckpoints, edge build inside the cache
       "a14_winsorize" -> 5, // histogram agg + cum window + bounds agg + clamped-mean agg + sort; bounds ride a broadcast, the histogram is value-domain-scale
       "ev_twa" -> 3, // one user-keyed lead window + type rollup + sort
@@ -622,7 +657,7 @@ class ScaleDesignSpec extends AnyFunSuite {
     // allowlist with a written boundedness argument.
     //
     // Audited Window.orderBy sites (all 12 in src/main):
-    //   GlobalIndex:45        pid counts — one row per partition
+    //   GlobalIndex:63        pid counts — one row per partition
     //   EventWindows:367      ev_growth_acct week frame (m) — time-span
     //   EventWindows:602      ev_powerusers active_days — day-span
     //   EventWindows:656      ev_rfm bucket cum (bk) — ≤65537 adaptive
