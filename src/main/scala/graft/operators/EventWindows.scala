@@ -25,11 +25,12 @@ object EventWindows {
 
   private[graft] val GapUs = 1800L * 1000000L // 30 minutes
 
-  // ev_anomaly: trailing window length (rows), warm-up floor, z threshold,
-  // and the per-(type, chunk) partition size for the bounded-window form.
-  private val AnomWin = 100
-  private val AnomMinN = 30
-  private val AnomZ = 3.0
+  // ev_anomaly: trailing window length (rows), warm-up floor, z threshold
+  // (shared with streaming.StatefulOps.rollingAnomaly), and the
+  // per-(type, chunk) partition size for the bounded-window form.
+  private[graft] val AnomWin = 100
+  private[graft] val AnomMinN = 30
+  private[graft] val AnomZ = 3.0
   private val AnomChunk = 1000 // must be >= AnomWin; ~10% strip duplication
 
   // ev_ewma: trailing exponentially-weighted mean with decay ratio 1/2 over
@@ -37,7 +38,7 @@ object EventWindows {
   // exact integer: Σ c_j·2^(n−1−j) ≤ cents_max·2^50 ≈ 3×10²² — inside
   // decimal(38,0)/HUGEINT on both engines (the events cents domain is
   // pinned in TestdataContractSpec).
-  private[graft] val EwmaWin = 50 // shared with streaming.StatefulOps.EwmaProcessor
+  private[graft] val EwmaWin = 50 // shared with streaming.StatefulOps.rollingEwma
   private val AcfMaxLag = 7 // ev_acf: autocorrelation lags 1..7 (one week)
   private val EwmaChunk = 1000
 
@@ -881,7 +882,7 @@ object EventWindows {
     // associative aggregate over gaps (the ev_seasonality class) —
     // built-in streaming aggregation maintains it; the only carried
     // state is the per-type previous-timestamp lag, which is the
-    // EwmaProcessor's ring-of-1 degenerate case. Nothing bespoke.
+    // rollingEwma's ring-of-1 degenerate case. Nothing bespoke.
     "ev_burstiness" -> ((s, dir) => {
       val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val ev = load(s, dir, "events")

@@ -140,7 +140,7 @@ object RedditProcessor {
     // once — the range shuffle over scan+clean rows, the one-row-per-
     // partition offsets, then VADER → TF-IDF → LDA transform in `n` parallel
     // tasks above the last exchange. A caller that runs several actions (as
-    // StreamDemo does) should persist the frames around its own
+    // StreamScale does) should persist the frames around its own
     // consumption. We release here anyway: pinning the blocks for an
     // unbounded caller lifetime is the worse default, and the finally also
     // covers the failure paths (a fit throwing, the empty-vocabulary

@@ -1,19 +1,46 @@
 package graft.streaming
 
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.operators.EventWindows.{AnomMinN, AnomWin, AnomZ, EwmaWin, GapUs}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Custom streaming state (SURVEY.md §2.10 T4 alternative realization):
-  * where `dropDuplicates` + watermark bounds state by event time,
-  * `flatMapGroupsWithState` gives explicit control — the Spark-native
-  * replacement for the reference's Redis seen-sets WITH the TTL the
-  * reference forgot (reddit_harvester_aus.py:19,41,80 grow forever).
+/** Keyed streaming state (SURVEY.md §2.10): the TTL'd dedup of the
+  * ingest path and the streaming TWINS of the batch analytics. A twin is
+  * a stateful streaming operator that, fed in event-time order, emits
+  * exactly the rows of one batch query (StatefulOpsSpec compares them bit
+  * for bit). Window lengths, thresholds and the session gap are read
+  * from `EventWindows`' constants, so a twin cannot drift from its batch
+  * operator.
   *
-  * State partitions by key across executors; each key's state lives on one
-  * partition and expires via processing-time timeout, so memory is bounded
-  * by (live keys × TTL window) regardless of stream length.
+  * One rule picks the state API:
+  *  - a twin whose state is a single value per key, with no timer, is a
+  *    `[flat]mapGroupsWithState` fold — the general operator for
+  *    user-defined keyed state in Structured Streaming (SIGMOD 2018),
+  *    and it runs on the default HDFS-backed state store that
+  *    `graft.Session.local` gives;
+  *  - `transformWithState` is used only where a twin needs `ListState`
+  *    (append without rewriting the value), `MapState` (one entry read
+  *    and written per update) or event-time timers. Those twins need
+  *    `spark.sql.streaming.stateStore.providerClass` =
+  *    RocksDBStateStoreProvider.
+  *
+  * Every twin orders a micro-batch by the full-microsecond instant
+  * ([[micros]]), like the batch `ORDER BY ts`, and rounds with [[r6]],
+  * the batch `round(x, 6)`. State partitions by key across executors.
   */
 object StatefulOps {
+
+  /** Epoch microseconds of `ts`. `getTime` alone is millisecond-truncated,
+    * so two events in one millisecond would tie (or swap) against the
+    * batch queries' full-precision `ts` order. */
+  private def micros(ts: java.sql.Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+
+  /** HALF_UP rounding to 6 places: the batch queries' `round(x, 6)`. */
+  private def r6(v: Double): Double =
+    BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Keyed record for stateful dedup. */
   case class Keyed(key: String, payload: String)
@@ -28,9 +55,12 @@ object StatefulOps {
   /** TTL'd stateful dedup: first occurrence of a key passes, repeats are
     * dropped while the key's state is alive; after `ttlMs` of processing
     * time without the key re-arriving, the state expires and the dedup
-    * window re-opens (the reference's SISMEMBER/SADD with the expiry it
-    * forgot). `ttlMs = 0` disables expiry (NoTimeout — the reference's
-    * literal unbounded semantics).
+    * window re-opens — the Spark-native replacement for the reference's
+    * Redis SISMEMBER/SADD seen-sets with the expiry they forgot
+    * (reddit_harvester_aus.py:19,41,80 grow forever). Memory is bounded
+    * by (live keys × TTL window) regardless of stream length. `ttlMs = 0`
+    * disables expiry (NoTimeout — the reference's literal unbounded
+    * semantics).
     *
     * Caveat: with ProcessingTimeTimeout registered, the engine fires
     * empty micro-batches continuously to evaluate timeouts, so
@@ -77,57 +107,12 @@ object StatefulOps {
         })
   }
 
-  /** Per-key running totals on the `transformWithState` API (the
-    * Spark-4 successor to mapGroupsWithState): explicit typed
-    * `ValueState` obtained from the processor handle, optional native TTL
-    * via TTLConfig, RocksDB-backed state store. Same semantics as
-    * [[runningTotals]] — kept side by side so both state APIs are
-    * exercised; new code should prefer this one (composable multiple
-    * states per key, timers, and list/map state without manual encoding).
-    *
-    * Requires `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (transformWithState does not run on the
-    * default HDFS-backed store). */
-  class RunningTotalProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, (String, Double), RunningTotal] {
-    @transient private var state:
-        org.apache.spark.sql.streaming.ValueState[(Long, Double)] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[(Long, Double)]("agg",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[(String, Double)],
-                                 timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[RunningTotal] = {
-      val (n0, s0) = if (state.exists) state.get() else (0L, 0.0)
-      var n = n0
-      var s = s0
-      rows.foreach { r => n += 1; s += r._2 }
-      state.update((n, s))
-      Iterator.single(RunningTotal(key, n, s))
-    }
-  }
-
-  def runningTotalsTws(ds: Dataset[(String, Double)]): Dataset[RunningTotal] = {
-    implicit val enc: Encoder[RunningTotal] = Encoders.product[RunningTotal]
-    ds.groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new RunningTotalProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        enc)
-  }
-
   /** A closed session: emitted by [[SessionTimeoutProcessor]] when the
     * watermark passes (last event + gap) for a key. */
   case class SessionClosed(key: String, n: Long, startMs: Long, endMs: Long)
 
-  /** Session-timeout emitter on transformWithState EVENT-TIME TIMERS — the
-    * timer half of the Spark-4 state API ([[RunningTotalProcessor]] covers
-    * ValueState). Each key holds (count, start, last); every batch the
+  /** Session-timeout emitter on transformWithState EVENT-TIME TIMERS.
+    * Each key holds (count, start, last); every batch the
     * processor re-arms one timer at `last + gap`, and when the WATERMARK
     * (not wall clock — deterministic under replay) passes it,
     * `handleExpiredTimer` emits the session summary and frees the state.
@@ -251,9 +236,6 @@ object StatefulOps {
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
           Encoders.scalaLong, Encoders.scalaLong),
         org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    private def micros(ts: java.sql.Timestamp): Long =
-      Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
 
     override def handleInputRows(
         user: Long, rows: Iterator[(Long, java.sql.Timestamp, Double)],
@@ -422,15 +404,7 @@ object StatefulOps {
         enc)
   }
 
-  /** Stream-stream interval join (ad attribution): each click joins the
-    * impression with the same ad_id it followed within `windowMinutes`.
-    * Both sides carry watermarks and the join condition bounds click_ts
-    * relative to impression_ts on BOTH ends — the two requirements that let
-    * the engine drop impression state once its attribution window has
-    * passed the watermark and click state once it can no longer match, so
-    * join-state memory is bounded by (arrival rate × window), not stream
-    * length. Inner join: unmatched rows age out of state silently. */
-  /** Streaming event row for [[rollingAnomaly]]. */
+  /** Streaming event row for [[rollingAnomaly]] and [[rollingEwma]]. */
   case class Ev(event_type: String, ts: java.sql.Timestamp, event_id: Long, value: Double)
 
   /** Flagged anomaly (mirrors the batch `ev_anomaly` output schema). */
@@ -444,21 +418,20 @@ object StatefulOps {
   case class AnomState(ring: Seq[Long])
 
   /** The STREAMING twin of the batch `ev_anomaly` operator: per event
-    * type, score each event against the trailing `win`-row window
-    * (inclusive) of integer-cent values and emit rows with |z| ≥
-    * `zThresh` once `minN` rows have been seen. Identical arithmetic to
-    * the batch query — integer power sums, z = (c·n − cs)/√(n·css − cs²),
+    * type, score each event against the trailing `AnomWin`-row window
+    * (inclusive) of integer-cent values and emit rows with |z| ≥ `AnomZ`
+    * once `AnomMinN` rows have been seen. Identical arithmetic to the
+    * batch query — integer power sums, z = (c·n − cs)/√(n·css − cs²),
     * round(6) — so on an in-order feed the stream output EQUALS the
     * batch/DuckDB-oracle result row-for-row (StatefulOpsSpec pins it).
     *
-    * Ordering contract: rows are sorted (ts, event_id) within each
+    * Ordering contract: rows are sorted (ts µs, event_id) within each
     * micro-batch; across batches the feed must be event-time ordered per
     * key (the replay/backfill case). For out-of-order production streams,
     * front this with a watermark + sort-within-window stage or accept
     * per-batch-local ordering — the state itself is order-agnostic
     * arithmetic over whatever order it is fed. */
-  def rollingAnomaly(ds: Dataset[Ev], win: Int = 100, minN: Int = 30,
-                     zThresh: Double = 3.0): Dataset[Anomaly] = {
+  def rollingAnomaly(ds: Dataset[Ev]): Dataset[Anomaly] = {
     implicit val enc: Encoder[Anomaly] = Encoders.product[Anomaly]
     implicit val stEnc: Encoder[AnomState] = Encoders.product[AnomState]
     ds.groupByKey(_.event_type)(Encoders.STRING)
@@ -467,19 +440,18 @@ object StatefulOps {
           var ring = state.getOption.map(_.ring.toVector)
             .getOrElse(Vector.empty[Long])
           val out = Vector.newBuilder[Anomaly]
-          for (ev <- rows.toVector.sortBy(e => (e.ts.getTime, e.event_id))) {
+          for (ev <- rows.toVector.sortBy(e => (micros(e.ts), e.event_id))) {
             val c = math.floor(ev.value * 100 + 0.5).toLong
-            ring = (ring :+ c).takeRight(win)
+            ring = (ring :+ c).takeRight(AnomWin)
             val n = ring.length.toLong
             // exact BigInt power sums — the batch DECIMAL(38,0) twin
             val cs = ring.foldLeft(BigInt(0))(_ + _)
             val css = ring.foldLeft(BigInt(0))((a, x) => a + BigInt(x) * x)
             val disc = css * n - cs * cs
-            if (n >= minN && disc.signum > 0) {
+            if (n >= AnomMinN && disc.signum > 0) {
               val z = (BigInt(c) * n - cs).doubleValue / math.sqrt(disc.doubleValue)
-              if (math.abs(z) >= zThresh)
-                out += Anomaly(ev.event_id, key, ev.value,
-                  BigDecimal(z).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+              if (math.abs(z) >= AnomZ)
+                out += Anomaly(ev.event_id, key, ev.value, r6(z))
             }
           }
           state.update(AnomState(ring))
@@ -490,110 +462,97 @@ object StatefulOps {
   /** EWMA output row (mirrors the batch `ev_ewma` output schema). */
   case class Ewma(event_id: Long, event_type: String, value: Double, ewma: Double)
 
-  /** Ring of the last ≤ win integer-cent values per event_type — bounded
-    * state regardless of stream length. */
-  case class EwmaState(ring: Seq[Long])
+  /** EWMA state per event_type: the last processed (µs, event_id) order
+    * key — the monotone-feed guard — and the ring of the last ≤ EwmaWin
+    * integer cents, newest LAST. Bounded regardless of stream length. */
+  case class EwmaState(lastUs: Long, lastId: Long, ring: Seq[Long])
 
   /** The STREAMING twin of the batch `ev_ewma` operator: per event type,
-    * emit the trailing `win`-row exponentially-weighted mean (decay 1/2)
-    * for every event. Identical arithmetic to the batch query — exact
-    * integer Horner sum Σ c_j·2^(n−1−j) (newest weighted highest), divisor
-    * 2^n − 1, one correctly-rounded double conversion, round(6) — so on an
-    * in-order feed the stream output EQUALS the batch/DuckDB-oracle result
-    * row-for-row (StatefulOpsSpec pins it). Same ordering contract as
-    * [[rollingAnomaly]]. */
-  def rollingEwma(ds: Dataset[Ev], win: Int = 50): Dataset[Ewma] = {
+    * emit the trailing `EwmaWin`-row exponentially-weighted mean (decay
+    * 1/2) for every event. The EWMA is causal, so each input row emits
+    * its output row at once, with no flush sentinel. Identical arithmetic
+    * to the batch query — exact integer Horner sum Σ c_j·2^(n−1−j)
+    * (newest weighted highest), divisor 2^n − 1, one correctly-rounded
+    * double conversion, round(6) — so on an in-order feed the stream
+    * output EQUALS the batch/DuckDB-oracle result row-for-row
+    * (StatefulOpsSpec pins it). Same in-batch order as [[rollingAnomaly]];
+    * across batches a row that precedes the last processed
+    * (µs, event_id) fails the query instead of folding as the newest. */
+  def rollingEwma(ds: Dataset[Ev]): Dataset[Ewma] = {
     implicit val enc: Encoder[Ewma] = Encoders.product[Ewma]
     implicit val stEnc: Encoder[EwmaState] = Encoders.product[EwmaState]
     ds.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: String, rows: Iterator[Ev], state: GroupState[EwmaState]) => {
-          var ring = state.getOption.map(_.ring.toVector).getOrElse(Vector.empty[Long])
+          val st = state.getOption
+            .getOrElse(EwmaState(Long.MinValue, Long.MinValue, Vector.empty))
+          var (lastUs, lastId, ring) = (st.lastUs, st.lastId, st.ring.toVector)
           val out = Vector.newBuilder[Ewma]
-          for (ev <- rows.toVector.sortBy(e => (e.ts.getTime, e.event_id))) {
+          for (ev <- rows.toVector.sortBy(e => (micros(e.ts), e.event_id))) {
+            val us = micros(ev.ts)
+            require(us > lastUs || (us == lastUs && ev.event_id >= lastId),
+              s"EWMA feed out of order for type '$key': ($us, ${ev.event_id}) " +
+                s"arrived after ($lastUs, $lastId)")
             val c = math.floor(ev.value * 100 + 0.5).toLong
-            ring = (ring :+ c).takeRight(win)
+            ring = (ring :+ c).takeRight(EwmaWin)
             val s = ring.reverseIterator.foldLeft(BigInt(0))((acc, x) => acc * 2 + x)
             val d = (BigInt(1) << ring.length) - 1
-            val e = s.doubleValue / d.doubleValue / 100.0
             out += Ewma(ev.event_id, key, ev.value,
-              BigDecimal(e).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+              r6(s.doubleValue / d.doubleValue / 100.0))
+            lastUs = us; lastId = ev.event_id
           }
-          state.update(EwmaState(ring))
+          state.update(EwmaState(lastUs, lastId, ring))
           out.result().iterator
         })
   }
 
-  /** Funnel-advance record from [[FunnelProcessor]]: the user reached
+  /** Funnel-advance record from [[funnelProgress]]: the user reached
     * `stage` (1 = signup, 2 = click-after-signup, 3 = purchase-after-
     * click) at `ts`. */
   case class FunnelStage(user_id: Long, stage: Int, ts: java.sql.Timestamp)
 
-  /** The STREAMING twin of the batch `ev_funnel` operator: per-user
+  /** The STREAMING twin of the batch `ev_funnel` operator:
+    * `(user_id, ts, event_type)` → funnel-advance rows. Per-user
     * ordered-progression state (first signup → first later click → first
-    * later purchase) as one ValueState triple, emitting a row whenever a
+    * later purchase) is one µs triple, and a row is emitted whenever a
     * user ADVANCES a stage. On an event-time-ordered feed the greedy
     * online progression equals the batch min-ts chain exactly, so the
     * per-stage user counts (users whose final stage ≥ k) match the
     * oracle-checked ev_funnel rows across micro-batches — StatefulOpsSpec
     * pins it. State is three longs per user forever; users hash across
     * executors. */
-  class FunnelProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, java.sql.Timestamp, String), FunnelStage] {
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long)]("funnel",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        user: Long, rows: Iterator[(Long, java.sql.Timestamp, String)],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[FunnelStage] = {
-      val Unset = Long.MinValue
-      var (t1, t2, t3) =
-        if (st.exists) st.get() else (Unset, Unset, Unset)
-      // full-microsecond instants: getTime() is ms-truncated and the
-      // batch chain compares complete timestamps
-      def micros(ts: java.sql.Timestamp): Long =
-        Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-      val out = Vector.newBuilder[FunnelStage]
-      // Deterministic batch order: (micros, sub-µs nanos, type). The
-      // strict us > t1/t2 guards make same-instant events inert for stage
-      // COUNTS either way, but the emitted FunnelStage row for tied first
-      // events (e.g. two clicks in the same µs whose Timestamps differ at
-      // ns precision) must not depend on arrival order across
-      // re-executions — the anomaly processor's (ts, event_id) discipline.
-      for ((_, ts, tpe) <- rows.toVector
-             .sortBy(r => (micros(r._2), r._2.getNanos, r._3))) {
-        val us = micros(ts)
-        if (tpe == "signup" && t1 == Unset) {
-          t1 = us; out += FunnelStage(user, 1, ts)
-        } else if (tpe == "click" && t1 != Unset && t2 == Unset && us > t1) {
-          t2 = us; out += FunnelStage(user, 2, ts)
-        } else if (tpe == "purchase" && t2 != Unset && t3 == Unset && us > t2) {
-          t3 = us; out += FunnelStage(user, 3, ts)
-        }
-      }
-      st.update((t1, t2, t3))
-      out.result().iterator
-    }
-  }
-
-  /** `(user_id, ts, event_type)` → funnel-advance rows. Requires RocksDB
-    * (transformWithState). */
   def funnelProgress(ds: Dataset[(Long, java.sql.Timestamp, String)])
       : Dataset[FunnelStage] = {
     implicit val enc: Encoder[FunnelStage] = Encoders.product[FunnelStage]
+    implicit val stEnc: Encoder[(Long, Long, Long)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+    val Unset = Long.MinValue
     ds.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(new FunnelProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append(),
-        enc)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String)],
+         state: GroupState[(Long, Long, Long)]) => {
+          var (t1, t2, t3) = state.getOption.getOrElse((Unset, Unset, Unset))
+          val out = Vector.newBuilder[FunnelStage]
+          // Deterministic batch order: (micros, sub-µs nanos, type). The
+          // strict us > t1/t2 guards make same-instant events inert for
+          // stage COUNTS either way, but the emitted FunnelStage row for
+          // tied first events (e.g. two clicks in the same µs whose
+          // Timestamps differ at ns precision) must not depend on arrival
+          // order across re-executions.
+          for ((_, ts, tpe) <- rows.toVector
+                 .sortBy(r => (micros(r._2), r._2.getNanos, r._3))) {
+            val us = micros(ts)
+            if (tpe == "signup" && t1 == Unset) {
+              t1 = us; out += FunnelStage(user, 1, ts)
+            } else if (tpe == "click" && t1 != Unset && t2 == Unset && us > t1) {
+              t2 = us; out += FunnelStage(user, 2, ts)
+            } else if (tpe == "purchase" && t2 != Unset && t3 == Unset && us > t2) {
+              t3 = us; out += FunnelStage(user, 3, ts)
+            }
+          }
+          state.update((t1, t2, t3))
+          out.result().iterator
+        })
   }
 
   /** Per-key heavy-hitter estimate from [[MisraGriesProcessor]]. */
@@ -656,7 +615,7 @@ object StatefulOps {
     * batch family (path/funnel mining) without a stateful counterpart.
     * Per-user state is the CURRENT session only: a ListState of event
     * types plus the last event-time micro-instant. An arriving event
-    * whose gap from the last is ≥ gapUs CLOSES the session — every
+    * whose gap from the last is ≥ GapUs CLOSES the session — every
     * consecutive 3-step path `a>b>c` of the closed session is emitted,
     * mirroring the batch sessionize → trigram explode exactly — then
     * starts the next one. On an event-time-ordered feed the emitted
@@ -669,7 +628,7 @@ object StatefulOps {
     * watermark-timer variant of the same closure is pinned separately
     * by the sessionizer timer test — production deployments register an
     * event-time timer at last+gap instead of the sentinel. */
-  class SessionPathProcessor(gapUs: Long)
+  class SessionPathProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, PathEv, SessionPath] {
     @transient private var types:
@@ -689,8 +648,6 @@ object StatefulOps {
         user: Long, rows: Iterator[PathEv],
         timers: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[SessionPath] = {
-      def micros(ts: java.sql.Timestamp): Long =
-        Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
       val out = Vector.newBuilder[SessionPath]
       def close(): Unit = {
         val t = types.get().toVector
@@ -705,7 +662,7 @@ object StatefulOps {
         if (e.event_type == "__flush") { close(); lastUs.clear() }
         else {
           val us = micros(e.ts)
-          if (lastUs.exists() && us - lastUs.get() >= gapUs) close()
+          if (lastUs.exists() && us - lastUs.get() >= GapUs) close()
           types.appendValue(e.event_type)
           lastUs.update(us)
         }
@@ -716,12 +673,10 @@ object StatefulOps {
 
   /** `PathEv` stream → per-session 3-step path occurrences. Requires
     * RocksDB (transformWithState). */
-  def sessionPaths(ds: Dataset[PathEv],
-                   gapUs: Long = graft.operators.EventWindows.GapUs)
-      : Dataset[SessionPath] = {
+  def sessionPaths(ds: Dataset[PathEv]): Dataset[SessionPath] = {
     implicit val enc: Encoder[SessionPath] = Encoders.product[SessionPath]
     ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new SessionPathProcessor(gapUs),
+      .transformWithState(new SessionPathProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append(),
         enc)
@@ -739,7 +694,7 @@ object StatefulOps {
     * ev_funnel in round 10, `sessionPaths` paired ev_path in round 11).
     * Per-user state is the CURRENT session's (event_type, event-time µs)
     * list plus the last event instant and a session ordinal. A gap ≥
-    * gapUs (or the `"__flush"` sentinel) CLOSES the session: the closed
+    * GapUs (or the `"__flush"` sentinel) CLOSES the session: the closed
     * event list is scanned for the FIRST signup, the FIRST purchase
     * after it, and any error strictly between — emitting the batch row
     * (user, sess, positions, steps_between, latency_us) only for clean
@@ -750,7 +705,7 @@ object StatefulOps {
     * users hash across executors. Production closure uses an event-time
     * timer at last+gap (the sessionizer timer test's mechanism);
     * TimeMode.None + sentinel keeps this synchronous-test-friendly. */
-  class SessionPatternProcessor(gapUs: Long)
+  class SessionPatternProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, PathEv, PatternMatch] {
     @transient private var evs:
@@ -775,8 +730,6 @@ object StatefulOps {
         user: Long, rows: Iterator[PathEv],
         timers: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[PatternMatch] = {
-      def micros(ts: java.sql.Timestamp): Long =
-        Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
       val out = Vector.newBuilder[PatternMatch]
       def close(): Unit = {
         val t = evs.get().toVector
@@ -801,7 +754,7 @@ object StatefulOps {
         if (e.event_type == "__flush") { close(); lastUs.clear() }
         else {
           val us = micros(e.ts)
-          if (lastUs.exists() && us - lastUs.get() >= gapUs) close()
+          if (lastUs.exists() && us - lastUs.get() >= GapUs) close()
           evs.appendValue((e.event_type, us))
           lastUs.update(us)
         }
@@ -812,208 +765,135 @@ object StatefulOps {
 
   /** `PathEv` stream → per-session signup→purchase pattern matches.
     * Requires RocksDB (transformWithState). */
-  def sessionPatterns(ds: Dataset[PathEv],
-                      gapUs: Long = graft.operators.EventWindows.GapUs)
-      : Dataset[PatternMatch] = {
+  def sessionPatterns(ds: Dataset[PathEv]): Dataset[PatternMatch] = {
     implicit val enc: Encoder[PatternMatch] = Encoders.product[PatternMatch]
     ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new SessionPatternProcessor(gapUs),
+      .transformWithState(new SessionPatternProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append(),
         enc)
   }
 
-  /** Streaming input row for the drift twin: one event with its cents
-    * value; `cents == Long.MinValue` is the per-type flush sentinel
-    * (send it in its own micro-batch, after the data, like the other
+  /** Streaming input row for the day-close twins ([[driftMonitor]],
+    * [[holtMonitor]], [[crostonMonitor]]): one event with its integer
+    * cents; `cents == Long.MinValue` is the per-type flush sentinel (send
+    * it in its own micro-batch, after the data, like the other
     * sentinel-flushed twins). */
   case class DriftEv(event_type: String, ts: java.sql.Timestamp, cents: Long)
+
+  /** Day-fold state of a day-close twin: the open epoch day
+    * (`Long.MinValue` = none), its integer Σcents and row count, and the
+    * twin's carried recursion variables `rec`. Package-private, not
+    * `private`: the state (de)serializer Spark generates and compiles
+    * with Janino cannot call the accessors of a `private` nested class. */
+  private[streaming] case class OpenDay[R](day: Long, sc: Long, cnt: Long, rec: R)
+
+  /** The fold every day-close twin runs, per event type: rows in µs
+    * order; a day earlier than the open one fails the query (the
+    * monotone-day contract — an out-of-order event ACROSS batches would
+    * otherwise fold silently as a new later day and diverge from the
+    * batch result; the feed must be day-ordered per type, e.g. by a
+    * watermark + sort upstream); a later day closes the open one through
+    * `step(rec, dayValue(Σcents, rows))` and, when `zeroFill`, folds an
+    * explicit x = 0 for every calendar day in the gap — the batch op
+    * rides a zero-filled [min, max] day spine. The flush sentinel closes
+    * the open day (no trailing zeros past it) and emits `emit(type, rec)`.
+    * State is ONE fixed-size record per type regardless of stream length;
+    * types hash across executors. */
+  private def dayTwin[R <: Product : TypeTag, O <: Product : TypeTag](
+      ds: Dataset[DriftEv], name: String, zeroFill: Boolean, init: R)(
+      dayValue: (Long, Long) => Double, step: (R, Double) => R,
+      emit: (String, R) => O): Dataset[O] = {
+    implicit val enc: Encoder[O] = Encoders.product[O]
+    implicit val stEnc: Encoder[OpenDay[R]] = Encoders.product[OpenDay[R]]
+    ds.groupByKey(_.event_type)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (tpe: String, rows: Iterator[DriftEv], state: GroupState[OpenDay[R]]) => {
+          var cur = state.getOption.getOrElse(OpenDay(Long.MinValue, 0L, 0L, init))
+          def closeUpTo(nextDay: Long): Unit = if (cur.day != Long.MinValue) {
+            var rec = step(cur.rec, dayValue(cur.sc, cur.cnt))
+            var d = cur.day + 1
+            while (zeroFill && d < nextDay) { rec = step(rec, 0.0); d += 1 }
+            cur = OpenDay(Long.MinValue, 0L, 0L, rec)
+          }
+          val out = Vector.newBuilder[O]
+          for (e <- rows.toVector.sortBy(r => micros(r.ts))) {
+            if (e.cents == Long.MinValue) {
+              closeUpTo(Long.MinValue)
+              out += emit(tpe, cur.rec)
+            } else {
+              val day = Math.floorDiv(micros(e.ts), 86400000000L)
+              require(cur.day == Long.MinValue || day >= cur.day,
+                s"$name feed out of order for type '$tpe': event day $day " +
+                  s"arrived after open day ${cur.day}")
+              if (cur.day != Long.MinValue && day != cur.day) closeUpTo(day)
+              cur = cur.copy(day = day, sc = cur.sc + e.cents, cnt = cur.cnt + 1)
+            }
+          }
+          state.update(cur)
+          out.result().iterator
+        })
+  }
 
   /** Final Page–Hinkley state for a type — the batch `ev_page_hinkley`
     * output row, emitted on flush. */
   case class DriftState(event_type: String, n_days: Long, cum_dev: Double,
                         min_dev: Double, ph_stat: Double, alarm_day: Long)
 
-  /** Internal PH fold state: the open day's (day, Σcents, count) plus the
-    * carried (i, s, m, mn, alarm) recursion variables. */
-  case class PhSt(curDay: Long, sc: Long, cnt: Long, i: Long, s: Double,
-                  m: Double, mn: Double, alarm: Long)
+  /** Page–Hinkley recursion variables carried across closed days. */
+  case class PhSt(i: Long, s: Double, m: Double, mn: Double, alarm: Long)
 
-  /** The STREAMING twin of the batch `ev_page_hinkley` operator — drift
+  /** The STREAMING twin of the batch `ev_page_hinkley` operator:
+    * `DriftEv` stream → per-type final Page–Hinkley drift verdicts. Drift
     * detection is the canonically streaming member of the events
-    * battery, so the parity claim matters most here: per type the
-    * processor accumulates the OPEN day's integer (Σcents, n) and, when
-    * a later day arrives (or the flush sentinel closes the stream),
-    * folds the closed day's mean through the identical PH recursion the
-    * batch `aggregate` expression and the DuckDB recursive CTE run —
-    * the same IEEE ops in the same order, so the emitted doubles are
-    * bit-equal to the batch rows after the same HALF_UP round(6)
-    * (StatefulOpsSpec pins exact equality on the real feed). State is
-    * ONE fixed-size record per type regardless of stream length; types
-    * hash across executors. */
-  class PageHinkleyProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, DriftEv, DriftState] {
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[PhSt] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[PhSt]("ph_st", Encoders.product[PhSt],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        tpe: String, rows: Iterator[DriftEv],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[DriftState] = {
-      def micros(ts: java.sql.Timestamp): Long =
-        Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-      var cur = if (st.exists()) st.get()
-        else PhSt(Long.MinValue, 0L, 0L, 0L, 0.0, 0.0, 0.0, 0L)
-      def closeDay(): Unit = if (cur.curDay != Long.MinValue) {
-        // the batch expression tree, verbatim: x = sc / (100.0 * cnt);
-        // m' = m + (x - s'/i' - 0.1); mn' = min(mn, m'); first-alarm day
-        val x = cur.sc.toDouble / (100.0 * cur.cnt.toDouble)
-        val i2 = cur.i + 1
-        val s2 = cur.s + x
-        val m2 = cur.m + (x - s2 / i2.toDouble - 0.1)
-        val mn2 = math.min(cur.mn, m2)
-        val al = if (cur.alarm == 0 && m2 - mn2 > 5.0) i2 else cur.alarm
-        cur = PhSt(Long.MinValue, 0L, 0L, i2, s2, m2, mn2, al)
-      }
-      def r6(v: Double): Double =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = Vector.newBuilder[DriftState]
-      for (e <- rows.toVector.sortBy(r => micros(r.ts))) {
-        if (e.cents == Long.MinValue) {
-          closeDay()
-          out += DriftState(tpe, cur.i, r6(cur.m), r6(cur.mn),
-            r6(cur.m - cur.mn), cur.alarm)
-        } else {
-          val day = Math.floorDiv(micros(e.ts), 86400000000L)
-          // Monotone-day contract: rows are sorted within a micro-batch,
-          // but an out-of-order event ACROSS batches whose day precedes
-          // the open day would otherwise silently fold as a new later
-          // day and diverge from the batch result with no error. Fail
-          // loudly instead — the feed must be day-ordered per type (use
-          // a watermark+sort upstream if it is not).
-          require(cur.curDay == Long.MinValue || day >= cur.curDay,
-            s"PageHinkley feed out of order for type '$tpe': event day " +
-              s"$day arrived after open day ${cur.curDay}")
-          if (cur.curDay != Long.MinValue && day != cur.curDay) closeDay()
-          cur = cur.copy(curDay = day, sc = cur.sc + e.cents,
-            cnt = cur.cnt + 1)
-        }
-      }
-      st.update(cur)
-      out.result().iterator
-    }
-  }
-
-  /** `DriftEv` stream → per-type final Page–Hinkley drift verdicts.
-    * Requires RocksDB (transformWithState). */
-  def driftMonitor(ds: Dataset[DriftEv]): Dataset[DriftState] = {
-    implicit val enc: Encoder[DriftState] = Encoders.product[DriftState]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new PageHinkleyProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append(),
-        enc)
-  }
+    * battery, so the parity claim matters most here: each closed day's
+    * mean folds through the identical PH recursion the batch `aggregate`
+    * expression and the DuckDB recursive CTE run — the same IEEE ops in
+    * the same order, so the emitted doubles are bit-equal to the batch
+    * rows after the same HALF_UP round(6) (StatefulOpsSpec pins exact
+    * equality on the real feed). Observed days only: no zero-fill. */
+  def driftMonitor(ds: Dataset[DriftEv]): Dataset[DriftState] =
+    dayTwin(ds, "PageHinkley", zeroFill = false, PhSt(0L, 0.0, 0.0, 0.0, 0L))(
+      (sc, cnt) => sc.toDouble / (100.0 * cnt.toDouble),
+      // the batch expression tree, verbatim: m' = m + (x - s'/i' - 0.1);
+      // mn' = min(mn, m'); first-alarm day
+      (r, x) => {
+        val i2 = r.i + 1
+        val s2 = r.s + x
+        val m2 = r.m + (x - s2 / i2.toDouble - 0.1)
+        val mn2 = math.min(r.mn, m2)
+        PhSt(i2, s2, m2, mn2, if (r.alarm == 0 && m2 - mn2 > 5.0) i2 else r.alarm)
+      },
+      (tpe, r) => DriftState(tpe, r.i, r6(r.m), r6(r.mn), r6(r.m - r.mn), r.alarm))
 
   /** Final Holt smoothing state for a type — the batch `ev_holt` output
     * row, emitted on flush. */
   case class HoltState(event_type: String, n_days: Long, level: Double,
                        trend: Double, forecast_7d: Double, sse: Double)
 
-  /** Internal Holt fold state: the open day's (day, Σcents) plus the
-    * carried (n_days, l, b, sse) recursion variables. */
-  case class HoltSt(curDay: Long, sc: Long, n: Long, l: Double, b: Double,
-                    sse: Double)
+  /** Holt recursion variables carried across closed days. */
+  case class HoltSt(n: Long, l: Double, b: Double, sse: Double)
 
-  /** The STREAMING twin of the batch `ev_holt` operator — the smoothing
-    * family was the last batch family without a carried-state
-    * counterpart (ev_page_hinkley's template). Per type the processor
-    * accumulates the OPEN day's integer Σcents; when a later day
-    * arrives it closes the open day through the identical Holt
-    * recursion the batch `aggregate` expression runs (l′ = 0.5x +
-    * 0.5(l+b); b′ = 0.25(l′−l) + 0.75b; sse += err² — same IEEE ops,
-    * same order), AND folds an explicit x = 0 for every calendar day in
-    * the gap — the batch op rides a zero-filled [min, max] spine, so
-    * the stream must synthesize the zero days the spine would have
-    * (Page–Hinkley, by contrast, folds observed days only). The first
-    * day seeds l = x₁ exactly like the batch init. On the flush
-    * sentinel the open day closes and the batch row emits, bit-equal
-    * after the same HALF_UP round(6) (StatefulOpsSpec pins it). State
-    * is ONE fixed-size record per type regardless of stream length. */
-  class HoltProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, DriftEv, HoltState] {
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[HoltSt] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[HoltSt]("holt_st", Encoders.product[HoltSt],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        tpe: String, rows: Iterator[DriftEv],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[HoltState] = {
-      def micros(ts: java.sql.Timestamp): Long =
-        Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-      var cur = if (st.exists()) st.get()
-        else HoltSt(Long.MinValue, 0L, 0L, 0.0, 0.0, 0.0)
-      // fold one closed day's value through the batch expression tree
-      def fold(x: Double): Unit =
-        if (cur.n == 0) cur = cur.copy(n = 1, l = x, b = 0.0, sse = 0.0)
+  /** The STREAMING twin of the batch `ev_holt` operator: `DriftEv` stream
+    * (cents = the event's integer cents) → per-type final Holt
+    * level/trend/forecast. Each closed day's Σcents/100 folds through the
+    * identical Holt recursion the batch `aggregate` expression runs
+    * (l′ = 0.5x + 0.5(l+b); b′ = 0.25(l′−l) + 0.75b; sse += err² — same
+    * IEEE ops, same order), and every calendar day in a gap folds x = 0,
+    * as on the batch spine. The first day seeds l = x₁ exactly like the
+    * batch init. Bit-equal after the same HALF_UP round(6)
+    * (StatefulOpsSpec pins it). */
+  def holtMonitor(ds: Dataset[DriftEv]): Dataset[HoltState] =
+    dayTwin(ds, "Holt", zeroFill = true, HoltSt(0L, 0.0, 0.0, 0.0))(
+      (sc, _) => sc.toDouble / 100,
+      (r, x) =>
+        if (r.n == 0) HoltSt(1, x, 0.0, 0.0)
         else {
-          val l2 = 0.5 * x + 0.5 * (cur.l + cur.b)
-          val err = x - (cur.l + cur.b)
-          cur = cur.copy(n = cur.n + 1, l = l2,
-            b = 0.25 * (l2 - cur.l) + 0.75 * cur.b,
-            sse = cur.sse + err * err)
-        }
-      def closeUpTo(nextDay: Long): Unit = if (cur.curDay != Long.MinValue) {
-        fold(cur.sc.toDouble / 100)
-        // zero-fill the calendar gap the batch spine would have
-        var d = cur.curDay + 1
-        while (d < nextDay) { fold(0.0); d += 1 }
-        cur = cur.copy(curDay = Long.MinValue, sc = 0L)
-      }
-      def r6(v: Double): Double =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = Vector.newBuilder[HoltState]
-      for (e <- rows.toVector.sortBy(r => micros(r.ts))) {
-        if (e.cents == Long.MinValue) {
-          closeUpTo(Long.MinValue) // flush: no trailing zeros past max day
-          out += HoltState(tpe, cur.n, r6(cur.l), r6(cur.b),
-            r6(cur.l + 7.0 * cur.b), r6(cur.sse))
-        } else {
-          val day = Math.floorDiv(micros(e.ts), 86400000000L)
-          require(cur.curDay == Long.MinValue || day >= cur.curDay,
-            s"Holt feed out of order for type '$tpe': event day $day " +
-              s"arrived after open day ${cur.curDay}")
-          if (cur.curDay != Long.MinValue && day != cur.curDay) closeUpTo(day)
-          cur = cur.copy(curDay = day, sc = cur.sc + e.cents)
-        }
-      }
-      st.update(cur)
-      out.result().iterator
-    }
-  }
-
-  /** `DriftEv` stream (cents = the event's integer cents) → per-type
-    * final Holt level/trend/forecast. Requires RocksDB. */
-  def holtMonitor(ds: Dataset[DriftEv]): Dataset[HoltState] = {
-    implicit val enc: Encoder[HoltState] = Encoders.product[HoltState]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new HoltProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append(),
-        enc)
-  }
+          val l2 = 0.5 * x + 0.5 * (r.l + r.b)
+          val err = x - (r.l + r.b)
+          HoltSt(r.n + 1, l2, 0.25 * (l2 - r.l) + 0.75 * r.b, r.sse + err * err)
+        },
+      (tpe, r) => HoltState(tpe, r.n, r6(r.l), r6(r.b), r6(r.l + 7.0 * r.b), r6(r.sse)))
 
   /** Final Croston state for a type — the batch `ev_croston` output row,
     * emitted on flush (`croston_forecast` is None when the series never
@@ -1023,169 +903,28 @@ object StatefulOps {
                           demand_interval: Double,
                           croston_forecast: Option[Double])
 
-  /** Internal Croston fold state: the open day's (day, Σhi) plus the
-    * carried (n_days, nd, z, p, q) recursion variables. */
-  case class CrostonSt(curDay: Long, c: Long, n: Long, nd: Long, z: Double,
-                       p: Double, q: Double)
+  /** Croston recursion variables carried across closed days. */
+  case class CrostonSt(n: Long, nd: Long, z: Double, p: Double, q: Double)
 
-  /** The STREAMING twin of the batch `ev_croston` operator — Croston's
-    * intermittent-demand recursion (z/p smoothed separately, q counts
-    * the elapsed interval) carried as per-type state, with the same
-    * zero-day synthesis as [[HoltProcessor]] (the batch op rides the
-    * zero-filled spine; zero days just grow q). Identical IEEE ops in
+  /** The STREAMING twin of the batch `ev_croston` operator: `DriftEv`
+    * stream (cents = the 0/1 high-value flag; the day's demand is their
+    * integer sum) → per-type final Croston demand size/interval/forecast.
+    * Croston's intermittent-demand recursion (z/p smoothed separately, q
+    * counts the elapsed interval) with the same zero-day synthesis as
+    * [[holtMonitor]] (zero days just grow q). Identical IEEE ops in
     * identical order → bit-equal rows after HALF_UP round(6)
-    * (StatefulOpsSpec pins it). `cents` carries the 0/1 high-value
-    * flag; the day's demand is their integer sum. */
-  class CrostonProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, DriftEv, CrostonState] {
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[CrostonSt] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[CrostonSt]("cro_st",
-        Encoders.product[CrostonSt],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        tpe: String, rows: Iterator[DriftEv],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[CrostonState] = {
-      def micros(ts: java.sql.Timestamp): Long =
-        Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-      var cur = if (st.exists()) st.get()
-        else CrostonSt(Long.MinValue, 0L, 0L, 0L, 0.0, 0.0, 1.0)
-      def fold(x: Double): Unit =
-        cur = if (x > 0) cur.copy(n = cur.n + 1, nd = cur.nd + 1,
-          z = if (cur.nd == 0) x else 0.25 * x + 0.75 * cur.z,
-          p = if (cur.nd == 0) cur.q else 0.25 * cur.q + 0.75 * cur.p,
-          q = 1.0)
-        else cur.copy(n = cur.n + 1, q = cur.q + 1)
-      def closeUpTo(nextDay: Long): Unit = if (cur.curDay != Long.MinValue) {
-        fold(cur.c.toDouble)
-        var d = cur.curDay + 1
-        while (d < nextDay) { fold(0.0); d += 1 }
-        cur = cur.copy(curDay = Long.MinValue, c = 0L)
-      }
-      def r6(v: Double): Double =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = Vector.newBuilder[CrostonState]
-      for (e <- rows.toVector.sortBy(r => micros(r.ts))) {
-        if (e.cents == Long.MinValue) {
-          closeUpTo(Long.MinValue)
-          out += CrostonState(tpe, cur.n, cur.nd, r6(cur.z), r6(cur.p),
-            if (cur.p > 0) Some(r6(cur.z / cur.p)) else None)
-        } else {
-          val day = Math.floorDiv(micros(e.ts), 86400000000L)
-          require(cur.curDay == Long.MinValue || day >= cur.curDay,
-            s"Croston feed out of order for type '$tpe': event day $day " +
-              s"arrived after open day ${cur.curDay}")
-          if (cur.curDay != Long.MinValue && day != cur.curDay) closeUpTo(day)
-          cur = cur.copy(curDay = day, c = cur.c + e.cents)
-        }
-      }
-      st.update(cur)
-      out.result().iterator
-    }
-  }
-
-  /** `DriftEv` stream (cents = the 0/1 high-value flag) → per-type final
-    * Croston demand size/interval/forecast. Requires RocksDB. */
-  def crostonMonitor(ds: Dataset[DriftEv]): Dataset[CrostonState] = {
-    implicit val enc: Encoder[CrostonState] = Encoders.product[CrostonState]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new CrostonProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append(),
-        enc)
-  }
-
-  /** Streaming input row for the EWMA twin: one event's identity and raw
-    * value (cents are derived inside the processor with the batch's exact
-    * floor(value·100 + 0.5) expression). No flush sentinel — the EWMA is
-    * causal, so every input row emits its output row immediately. */
-  case class EwmaEv(event_type: String, ts: java.sql.Timestamp,
-                    event_id: Long, value: Double)
-
-  /** One per-event EWMA output row — the batch `ev_ewma` row shape. */
-  case class EwmaOut(event_id: Long, event_type: String, value: Double,
-                     ewma: Double)
-
-  /** Internal EWMA state: the last processed (micros, event_id) order key
-    * (the monotone-feed guard) plus the trailing window of the most
-    * recent ≤ EwmaWin cents, newest LAST. */
-  case class EwmaSt(lastTs: Long, lastId: Long, recent: Seq[Long])
-
-  /** The STREAMING twin of the batch `ev_ewma` operator — unlike the
-    * flush-emitting Holt/Croston/Page–Hinkley twins, the trailing EWMA is
-    * CAUSAL (each row's smoothed value depends only on rows at or before
-    * it), so the twin emits one output row per input row with no
-    * sentinel: the natural shape for a live monitoring dashboard. Per
-    * type the state is the last ≤ EwmaWin integer cents; each event
-    * appends, trims to the window, and runs the identical Horner fold
-    * the batch `aggregate` expression runs — Σ c_j·2^(n−1−j) as exact
-    * integer arithmetic (BigInt here, decimal(38,0) there; both cast to
-    * double correctly rounded), divided by the 2^n − 1 weight total then
-    * by 100 in the same IEEE order, HALF_UP round(6). StatefulOpsSpec
-    * pins bit-equality against the oracle-checked batch rows. State is
-    * ≤ EwmaWin longs per type regardless of stream length; the monotone
-    * (ts, event_id) require makes out-of-order cross-batch feeds fail
-    * loudly instead of silently diverging (the Holt/Croston guard). */
-  class EwmaProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, EwmaEv, EwmaOut] {
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[EwmaSt] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[EwmaSt]("ewma_st", Encoders.product[EwmaSt],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        tpe: String, rows: Iterator[EwmaEv],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[EwmaOut] = {
-      def micros(ts: java.sql.Timestamp): Long =
-        Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-      def r6(v: Double): Double =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      var cur = if (st.exists()) st.get()
-        else EwmaSt(Long.MinValue, Long.MinValue, Vector.empty)
-      val out = Vector.newBuilder[EwmaOut]
-      for (e <- rows.toVector.sortBy(r => (micros(r.ts), r.event_id))) {
-        val m = micros(e.ts)
-        require(m > cur.lastTs || (m == cur.lastTs && e.event_id >= cur.lastId),
-          s"EWMA feed out of order for type '$tpe': ($m, ${e.event_id}) " +
-            s"arrived after (${cur.lastTs}, ${cur.lastId})")
-        // the batch cents expression: floor(value·100 + 0.5) cast long
-        val cents = math.floor(e.value * 100 + 0.5).toLong
-        val recent = (cur.recent :+ cents).takeRight(
-          graft.operators.EventWindows.EwmaWin)
-        // Horner over newest-first: newest cents get weight 2^(n−1)
-        var acc = BigInt(0)
-        recent.reverseIterator.foreach(x => acc = acc * 2 + x)
-        val denom = (1L << recent.size) - 1 // 2^n − 1, n ≤ 50: fits long
-        out += EwmaOut(e.event_id, tpe, e.value,
-          r6(acc.toDouble / denom.toDouble / 100.0))
-        cur = EwmaSt(m, e.event_id, recent)
-      }
-      st.update(cur)
-      out.result().iterator
-    }
-  }
-
-  /** `EwmaEv` stream → per-event trailing EWMA rows (the batch `ev_ewma`
-    * shape, emitted live). Requires RocksDB. */
-  def ewmaMonitor(ds: Dataset[EwmaEv]): Dataset[EwmaOut] = {
-    implicit val enc: Encoder[EwmaOut] = Encoders.product[EwmaOut]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new EwmaProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append(),
-        enc)
-  }
+    * (StatefulOpsSpec pins it). */
+  def crostonMonitor(ds: Dataset[DriftEv]): Dataset[CrostonState] =
+    dayTwin(ds, "Croston", zeroFill = true, CrostonSt(0L, 0L, 0.0, 0.0, 1.0))(
+      (sc, _) => sc.toDouble,
+      (r, x) =>
+        if (x > 0) CrostonSt(r.n + 1, r.nd + 1,
+          if (r.nd == 0) x else 0.25 * x + 0.75 * r.z,
+          if (r.nd == 0) r.q else 0.25 * r.q + 0.75 * r.p,
+          1.0)
+        else r.copy(n = r.n + 1, q = r.q + 1),
+      (tpe, r) => CrostonState(tpe, r.n, r.nd, r6(r.z), r6(r.p),
+        if (r.p > 0) Some(r6(r.z / r.p)) else None))
 
   /** Streaming input row for the cardinality twin: one event's user;
     * `user_id == Long.MinValue` is the per-type flush sentinel. */
@@ -1244,8 +983,6 @@ object StatefulOps {
           val v = 4096L - nz
           val est = if (raw <= 10240.0 && v > 0)
             4096.0 * math.log(4096.0 / v.toDouble) else raw
-          def r6(x: Double): Double =
-            BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
           out += CardState(tpe, 4096L, v, sumRho, r6(est))
         } else {
           val h = h32(s"u:${e.user_id}")
@@ -1402,9 +1139,7 @@ object StatefulOps {
   def rollingStickiness(ds: Dataset[UserEv]): Dataset[Stickiness] = {
     implicit val enc: Encoder[Stickiness] = Encoders.product[Stickiness]
     activeDays(ds, 28).map { a =>
-      Stickiness(a.day, a.dau, a.active,
-        BigDecimal(a.dau.toDouble / a.active)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      Stickiness(a.day, a.dau, a.active, r6(a.dau.toDouble / a.active))
     }
   }
 
@@ -1416,6 +1151,14 @@ object StatefulOps {
     activeDays(ds, 7).map(a => Wau(a.day, a.active))
   }
 
+  /** Stream-stream interval join (ad attribution): each click joins the
+    * impression with the same ad_id it followed within `windowMinutes`.
+    * Both sides carry watermarks and the join condition bounds click_ts
+    * relative to impression_ts on BOTH ends — the two requirements that let
+    * the engine drop impression state once its attribution window has
+    * passed the watermark and click state once it can no longer match, so
+    * join-state memory is bounded by (arrival rate × window), not stream
+    * length. Inner join: unmatched rows age out of state silently. */
   def attributeClicks(imps: Dataset[Impression], clicks: Dataset[Click],
                       windowMinutes: Int = 10): Dataset[(String, java.sql.Timestamp, java.sql.Timestamp)] = {
     import org.apache.spark.sql.functions.{col, expr}

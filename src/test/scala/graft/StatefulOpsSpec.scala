@@ -35,30 +35,24 @@ class StatefulOpsSpec extends AnyFunSuite {
   test("transformWithState running totals match the mapGroupsWithState semantics") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[(String, Double)]
-    val q = StatefulOps.runningTotalsTws(mem.toDS())
-      .writeStream.outputMode("update")
-      .format("memory").queryName("stws_out").start()
-    try {
-      mem.addData(("u1", 10.0), ("u1", 5.0), ("u2", 1.0))
-      q.processAllAvailable()
-      mem.addData(("u1", 2.0))
-      q.processAllAvailable()
-      val latest = spark.table("stws_out")
-        .as[StatefulOps.RunningTotal].collect()
-        .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n) }
-      assert(latest("u1").n == 3 && latest("u1").total == 17.0)
-      assert(latest("u2").n == 1 && latest("u2").total == 1.0)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    // The same fold on the RocksDB provider the transformWithState twins
+    // need: a single-value-per-key twin runs on either state store.
+    withRocksDb {
+      val mem = MemoryStream[(String, Double)]
+      val q = StatefulOps.runningTotals(mem.toDS())
+        .writeStream.outputMode("update")
+        .format("memory").queryName("stws_out").start()
+      try {
+        mem.addData(("u1", 10.0), ("u1", 5.0), ("u2", 1.0))
+        q.processAllAvailable()
+        mem.addData(("u1", 2.0))
+        q.processAllAvailable()
+        val latest = spark.table("stws_out")
+          .as[StatefulOps.RunningTotal].collect()
+          .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n) }
+        assert(latest("u1").n == 3 && latest("u1").total == 17.0)
+        assert(latest("u2").n == 1 && latest("u2").total == 1.0)
+      } finally q.stop()
     }
   }
 
@@ -239,6 +233,46 @@ class StatefulOpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("rollingAnomaly orders a same-millisecond pair by microseconds like ev_anomaly") {
+    // Two events of one type share a millisecond; their µs order (id 200
+    // at +100 µs, id 100 at +900 µs) is the reverse of their event_id
+    // order. Batch ev_anomaly orders by full-precision (ts, event_id), so
+    // id 200 is scored first. A millisecond sort key would tie them and
+    // fall back to event_id, scoring each against a different window.
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00").getTime
+    def at(ms: Long, micros: Int): java.sql.Timestamp = {
+      val t = new java.sql.Timestamp(ms)
+      t.setNanos(t.getNanos + micros * 1000)
+      t
+    }
+    val warm = (1 to 30).map(i =>
+      StatefulOps.Ev("t", at(t0 + i * 1000L, 0), i.toLong, if (i % 2 == 0) 1.0 else 1.02))
+    val pairMs = t0 + 60000L
+    val pair = Seq(StatefulOps.Ev("t", at(pairMs, 900), 100L, 10.0),
+      StatefulOps.Ev("t", at(pairMs, 100), 200L, 20.0))
+    val dir = java.nio.file.Files.createTempDirectory("graft_anom_us").toString
+    try {
+      (warm ++ pair).toDF().write.parquet(s"$dir/events.parquet")
+      val batch = SparkEntry.queries("ev_anomaly")(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getDouble(3)))
+        .sortBy(_._1).toSeq
+      assert(batch.map(_._1) == Seq(200L), s"batch rows $batch")
+      val mem = MemoryStream[StatefulOps.Ev]
+      val q = StatefulOps.rollingAnomaly(mem.toDS())
+        .writeStream.outputMode("append")
+        .format("memory").queryName("sanom_us_out").start()
+      try {
+        mem.addData(warm); q.processAllAvailable()
+        mem.addData(pair); q.processAllAvailable()
+        val streamed = spark.table("sanom_us_out").as[StatefulOps.Anomaly].collect()
+          .map(a => (a.event_id, a.event_type, a.value, a.z)).sortBy(_._1).toSeq
+        assert(streamed == batch, s"stream $streamed vs batch $batch")
+      } finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("streaming rollingEwma equals the batch ev_ewma oracle result") {
     // Same parity contract as rollingAnomaly: the ≤ 50-cent ring state
     // must reproduce the batch chunked-window EWMA exactly — every event
@@ -277,31 +311,29 @@ class StatefulOpsSpec extends AnyFunSuite {
     // oracle-checked batch ev_funnel's per-stage user counts.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      import org.apache.spark.sql.functions.col
-      val dir = "/root/testdata/sf0.001"
-      val evs = graft.Tables.load(spark, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .orderBy("ts", "event_id")
-        .as[(Long, java.sql.Timestamp, String)].collect()
-      val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-      val q = StatefulOps.funnelProgress(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sfunnel_out").start()
-      try {
-        evs.grouped(math.max(1, evs.length / 5))
-          .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-        val finalStage = spark.table("sfunnel_out")
-          .as[StatefulOps.FunnelStage].collect()
-          .groupBy(_.user_id).map { case (u, rs) => u -> rs.map(_.stage).max }
-        val streamedCounts = (1 to 3).map(k =>
-          k.toLong -> finalStage.count(_._2 >= k).toLong).toMap
-        val batch = SparkEntry.queries("ev_funnel")(spark, dir).collect()
-          .map(r => r.getLong(0) -> r.getLong(2)).toMap
-        assert(streamedCounts == batch,
-          s"stream $streamedCounts vs batch $batch")
-      } finally q.stop()
-    }
+    import org.apache.spark.sql.functions.col
+    val dir = "/root/testdata/sf0.001"
+    val evs = graft.Tables.load(spark, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_type"))
+      .orderBy("ts", "event_id")
+      .as[(Long, java.sql.Timestamp, String)].collect()
+    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
+    val q = StatefulOps.funnelProgress(mem.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("sfunnel_out").start()
+    try {
+      evs.grouped(math.max(1, evs.length / 5))
+        .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
+      val finalStage = spark.table("sfunnel_out")
+        .as[StatefulOps.FunnelStage].collect()
+        .groupBy(_.user_id).map { case (u, rs) => u -> rs.map(_.stage).max }
+      val streamedCounts = (1 to 3).map(k =>
+        k.toLong -> finalStage.count(_._2 >= k).toLong).toMap
+      val batch = SparkEntry.queries("ev_funnel")(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(streamedCounts == batch,
+        s"stream $streamedCounts vs batch $batch")
+    } finally q.stop()
   }
 
   test("streaming sessionPaths equals the batch ev_path oracle result") {
@@ -449,36 +481,34 @@ class StatefulOpsSpec extends AnyFunSuite {
     // EXACTLY — the processor folds the identical IEEE expression tree.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      import org.apache.spark.sql.functions.{col, floor, lit}
-      val dir = "/root/testdata/sf0.001"
-      val evs = graft.Tables.load(spark, dir, "events")
-        .select(col("event_type"), col("ts"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .orderBy("ts", "event_type")
-        .as[StatefulOps.DriftEv].collect()
-      val flush = evs.map(_.event_type).distinct.map(t =>
-        StatefulOps.DriftEv(t, new java.sql.Timestamp(0L), Long.MinValue))
-      val mem = MemoryStream[StatefulOps.DriftEv]
-      val q = StatefulOps.driftMonitor(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sdrift_out").start()
-      try {
-        evs.grouped(math.max(1, evs.length / 5))
-          .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-        mem.addData(flush.toSeq); q.processAllAvailable()
-        val batch = SparkEntry.queries("ev_page_hinkley")(spark, dir).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-            r.getDouble(3), r.getDouble(4), r.getLong(5))).toSeq.sorted
-        val streamed = spark.table("sdrift_out")
-          .as[StatefulOps.DriftState].collect()
-          .map(d => (d.event_type, d.n_days, d.cum_dev, d.min_dev,
-            d.ph_stat, d.alarm_day)).toSeq.sorted
-        assert(streamed == batch,
-          s"drift rows diverge:\nstream ${streamed.mkString(", ")}\n" +
-            s"batch ${batch.mkString(", ")}")
-      } finally q.stop()
-    }
+    import org.apache.spark.sql.functions.{col, floor, lit}
+    val dir = "/root/testdata/sf0.001"
+    val evs = graft.Tables.load(spark, dir, "events")
+      .select(col("event_type"), col("ts"),
+        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+      .orderBy("ts", "event_type")
+      .as[StatefulOps.DriftEv].collect()
+    val flush = evs.map(_.event_type).distinct.map(t =>
+      StatefulOps.DriftEv(t, new java.sql.Timestamp(0L), Long.MinValue))
+    val mem = MemoryStream[StatefulOps.DriftEv]
+    val q = StatefulOps.driftMonitor(mem.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("sdrift_out").start()
+    try {
+      evs.grouped(math.max(1, evs.length / 5))
+        .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
+      mem.addData(flush.toSeq); q.processAllAvailable()
+      val batch = SparkEntry.queries("ev_page_hinkley")(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+          r.getDouble(3), r.getDouble(4), r.getLong(5))).toSeq.sorted
+      val streamed = spark.table("sdrift_out")
+        .as[StatefulOps.DriftState].collect()
+        .map(d => (d.event_type, d.n_days, d.cum_dev, d.min_dev,
+          d.ph_stat, d.alarm_day)).toSeq.sorted
+      assert(streamed == batch,
+        s"drift rows diverge:\nstream ${streamed.mkString(", ")}\n" +
+          s"batch ${batch.mkString(", ")}")
+    } finally q.stop()
   }
 
   test("streaming holtMonitor equals the batch ev_holt result exactly") {
@@ -490,72 +520,68 @@ class StatefulOpsSpec extends AnyFunSuite {
     // zero days of the batch calendar spine.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      import org.apache.spark.sql.functions.{col, floor, lit}
-      val dir = "/root/testdata/sf0.001"
-      val evs = graft.Tables.load(spark, dir, "events")
-        .select(col("event_type"), col("ts"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .orderBy("ts", "event_type")
-        .as[StatefulOps.DriftEv].collect()
-      val flush = evs.map(_.event_type).distinct.map(t =>
-        StatefulOps.DriftEv(t, new java.sql.Timestamp(0L), Long.MinValue))
-      val mem = MemoryStream[StatefulOps.DriftEv]
-      val q = StatefulOps.holtMonitor(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sholt_out").start()
-      try {
-        evs.grouped(math.max(1, evs.length / 5))
-          .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-        mem.addData(flush.toSeq); q.processAllAvailable()
-        val batch = SparkEntry.queries("ev_holt")(spark, dir).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-            r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq.sorted
-        val streamed = spark.table("sholt_out")
-          .as[StatefulOps.HoltState].collect()
-          .map(h => (h.event_type, h.n_days, h.level, h.trend,
-            h.forecast_7d, h.sse)).toSeq.sorted
-        assert(streamed == batch,
-          s"holt rows diverge:\nstream ${streamed.mkString(", ")}\n" +
-            s"batch ${batch.mkString(", ")}")
-      } finally q.stop()
-    }
+    import org.apache.spark.sql.functions.{col, floor, lit}
+    val dir = "/root/testdata/sf0.001"
+    val evs = graft.Tables.load(spark, dir, "events")
+      .select(col("event_type"), col("ts"),
+        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+      .orderBy("ts", "event_type")
+      .as[StatefulOps.DriftEv].collect()
+    val flush = evs.map(_.event_type).distinct.map(t =>
+      StatefulOps.DriftEv(t, new java.sql.Timestamp(0L), Long.MinValue))
+    val mem = MemoryStream[StatefulOps.DriftEv]
+    val q = StatefulOps.holtMonitor(mem.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("sholt_out").start()
+    try {
+      evs.grouped(math.max(1, evs.length / 5))
+        .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
+      mem.addData(flush.toSeq); q.processAllAvailable()
+      val batch = SparkEntry.queries("ev_holt")(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+          r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq.sorted
+      val streamed = spark.table("sholt_out")
+        .as[StatefulOps.HoltState].collect()
+        .map(h => (h.event_type, h.n_days, h.level, h.trend,
+          h.forecast_7d, h.sse)).toSeq.sorted
+      assert(streamed == batch,
+        s"holt rows diverge:\nstream ${streamed.mkString(", ")}\n" +
+          s"batch ${batch.mkString(", ")}")
+    } finally q.stop()
   }
 
   test("streaming crostonMonitor equals the batch ev_croston result exactly") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      import org.apache.spark.sql.functions.col
-      val dir = "/root/testdata/sf0.001"
-      val evs = graft.Tables.load(spark, dir, "events")
-        .select(col("event_type"), col("ts"),
-          (col("value") > 99.5).cast("long").as("cents"))
-        .orderBy("ts", "event_type")
-        .as[StatefulOps.DriftEv].collect()
-      val flush = evs.map(_.event_type).distinct.map(t =>
-        StatefulOps.DriftEv(t, new java.sql.Timestamp(0L), Long.MinValue))
-      val mem = MemoryStream[StatefulOps.DriftEv]
-      val q = StatefulOps.crostonMonitor(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("scro_out").start()
-      try {
-        evs.grouped(math.max(1, evs.length / 5))
-          .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-        mem.addData(flush.toSeq); q.processAllAvailable()
-        val batch = SparkEntry.queries("ev_croston")(spark, dir).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getDouble(3), r.getDouble(4),
-            Option(r.get(5)).map(_.asInstanceOf[Double]))).toSeq.sorted
-        val streamed = spark.table("scro_out")
-          .as[StatefulOps.CrostonState].collect()
-          .map(c => (c.event_type, c.n_days, c.n_demand_days, c.demand_size,
-            c.demand_interval, c.croston_forecast)).toSeq.sorted
-        assert(streamed == batch,
-          s"croston rows diverge:\nstream ${streamed.mkString(", ")}\n" +
-            s"batch ${batch.mkString(", ")}")
-      } finally q.stop()
-    }
+    import org.apache.spark.sql.functions.col
+    val dir = "/root/testdata/sf0.001"
+    val evs = graft.Tables.load(spark, dir, "events")
+      .select(col("event_type"), col("ts"),
+        (col("value") > 99.5).cast("long").as("cents"))
+      .orderBy("ts", "event_type")
+      .as[StatefulOps.DriftEv].collect()
+    val flush = evs.map(_.event_type).distinct.map(t =>
+      StatefulOps.DriftEv(t, new java.sql.Timestamp(0L), Long.MinValue))
+    val mem = MemoryStream[StatefulOps.DriftEv]
+    val q = StatefulOps.crostonMonitor(mem.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("scro_out").start()
+    try {
+      evs.grouped(math.max(1, evs.length / 5))
+        .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
+      mem.addData(flush.toSeq); q.processAllAvailable()
+      val batch = SparkEntry.queries("ev_croston")(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3), r.getDouble(4),
+          Option(r.get(5)).map(_.asInstanceOf[Double]))).toSeq.sorted
+      val streamed = spark.table("scro_out")
+        .as[StatefulOps.CrostonState].collect()
+        .map(c => (c.event_type, c.n_days, c.n_demand_days, c.demand_size,
+          c.demand_interval, c.croston_forecast)).toSeq.sorted
+      assert(streamed == batch,
+        s"croston rows diverge:\nstream ${streamed.mkString(", ")}\n" +
+          s"batch ${batch.mkString(", ")}")
+    } finally q.stop()
   }
 
   test("out-of-order day across batches fails the drift twin loudly") {
@@ -564,27 +590,25 @@ class StatefulOpsSpec extends AnyFunSuite {
     // later day and diverge from batch.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val day0 = new java.sql.Timestamp(86400L * 1000L * 100) // day 100
-      val dayBack = new java.sql.Timestamp(86400L * 1000L * 50) // day 50
-      val mem = MemoryStream[StatefulOps.DriftEv]
-      val q = StatefulOps.driftMonitor(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sdrift_ooo").start()
-      try {
-        mem.addData(StatefulOps.DriftEv("t", day0, 100L))
+    val day0 = new java.sql.Timestamp(86400L * 1000L * 100) // day 100
+    val dayBack = new java.sql.Timestamp(86400L * 1000L * 50) // day 50
+    val mem = MemoryStream[StatefulOps.DriftEv]
+    val q = StatefulOps.driftMonitor(mem.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("sdrift_ooo").start()
+    try {
+      mem.addData(StatefulOps.DriftEv("t", day0, 100L))
+      q.processAllAvailable()
+      mem.addData(StatefulOps.DriftEv("t", dayBack, 100L))
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
-        mem.addData(StatefulOps.DriftEv("t", dayBack, 100L))
-        val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          q.processAllAvailable()
-        }
-        def causes(t: Throwable): Seq[Throwable] =
-          if (t == null) Nil else t +: causes(t.getCause)
-        assert(causes(ex).exists(c =>
-          c.getMessage != null && c.getMessage.contains("out of order")),
-          s"expected the monotone-day require, got: $ex")
-      } finally q.stop()
-    }
+      }
+      def causes(t: Throwable): Seq[Throwable] =
+        if (t == null) Nil else t +: causes(t.getCause)
+      assert(causes(ex).exists(c =>
+        c.getMessage != null && c.getMessage.contains("out of order")),
+        s"expected the monotone-day require, got: $ex")
+    } finally q.stop()
   }
 
   test("streaming ewmaMonitor equals the batch ev_ewma rows exactly") {
@@ -595,33 +619,31 @@ class StatefulOpsSpec extends AnyFunSuite {
     // cast to double through the same correctly-rounded path.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      import org.apache.spark.sql.functions.col
-      val dir = "/root/testdata/sf0.001"
-      val evs = graft.Tables.load(spark, dir, "events")
-        .select(col("event_type"), col("ts"), col("event_id"), col("value"))
-        .orderBy("ts", "event_id")
-        .as[StatefulOps.EwmaEv].collect()
-      val mem = MemoryStream[StatefulOps.EwmaEv]
-      val q = StatefulOps.ewmaMonitor(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sewma_out").start()
-      try {
-        evs.grouped(math.max(1, evs.length / 5))
-          .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-        val batch = SparkEntry.queries("ev_ewma")(spark, dir).collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-            r.getDouble(3))).toSeq.sorted
-        val streamed = spark.table("sewma_out")
-          .as[StatefulOps.EwmaOut].collect()
-          .map(o => (o.event_id, o.event_type, o.value, o.ewma)).toSeq.sorted
-        assert(streamed.length == batch.length,
-          s"row counts diverge: stream ${streamed.length} batch ${batch.length}")
-        assert(streamed == batch,
-          "ewma rows diverge; first diff: " +
-            streamed.zip(batch).find { case (a, b) => a != b }.toString)
-      } finally q.stop()
-    }
+    import org.apache.spark.sql.functions.col
+    val dir = "/root/testdata/sf0.001"
+    val evs = graft.Tables.load(spark, dir, "events")
+      .select(col("event_type"), col("ts"), col("event_id"), col("value"))
+      .orderBy("ts", "event_id")
+      .as[StatefulOps.Ev].collect()
+    val mem = MemoryStream[StatefulOps.Ev]
+    val q = StatefulOps.rollingEwma(mem.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("sewma_out").start()
+    try {
+      evs.grouped(math.max(1, evs.length / 5))
+        .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
+      val batch = SparkEntry.queries("ev_ewma")(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
+          r.getDouble(3))).toSeq.sorted
+      val streamed = spark.table("sewma_out")
+        .as[StatefulOps.Ewma].collect()
+        .map(o => (o.event_id, o.event_type, o.value, o.ewma)).toSeq.sorted
+      assert(streamed.length == batch.length,
+        s"row counts diverge: stream ${streamed.length} batch ${batch.length}")
+      assert(streamed == batch,
+        "ewma rows diverge; first diff: " +
+          streamed.zip(batch).find { case (a, b) => a != b }.toString)
+    } finally q.stop()
   }
 
   test("out-of-order (ts, event_id) across batches fails the EWMA twin loudly") {
@@ -632,25 +654,23 @@ class StatefulOpsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
-    withRocksDb {
-      val mem = MemoryStream[StatefulOps.EwmaEv]
-      val q = StatefulOps.ewmaMonitor(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sewma_ooo").start()
-      try {
-        mem.addData(StatefulOps.EwmaEv("t",
-          new java.sql.Timestamp(1000000L), 10L, 1.0))
+    val mem = MemoryStream[StatefulOps.Ev]
+    val q = StatefulOps.rollingEwma(mem.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("sewma_ooo").start()
+    try {
+      mem.addData(StatefulOps.Ev("t",
+        new java.sql.Timestamp(1000000L), 10L, 1.0))
+      q.processAllAvailable()
+      mem.addData(StatefulOps.Ev("t",
+        new java.sql.Timestamp(999000L), 11L, 1.0))
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
-        mem.addData(StatefulOps.EwmaEv("t",
-          new java.sql.Timestamp(999000L), 11L, 1.0))
-        val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          q.processAllAvailable()
-        }
-        assert(causes(ex).exists(c =>
-          c.getMessage != null && c.getMessage.contains("out of order")),
-          s"expected the monotone require, got: $ex")
-      } finally q.stop()
-    }
+      }
+      assert(causes(ex).exists(c =>
+        c.getMessage != null && c.getMessage.contains("out of order")),
+        s"expected the monotone require, got: $ex")
+    } finally q.stop()
   }
 
   test("out-of-order day across batches fails the Holt and Croston twins loudly") {
@@ -661,30 +681,28 @@ class StatefulOpsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
-    withRocksDb {
-      val day0 = new java.sql.Timestamp(86400L * 1000L * 100)
-      val dayBack = new java.sql.Timestamp(86400L * 1000L * 50)
-      for ((mk, nm) <- Seq(
-        ((ds: org.apache.spark.sql.Dataset[StatefulOps.DriftEv]) =>
-          StatefulOps.holtMonitor(ds).toDF(), "holt"),
-        ((ds: org.apache.spark.sql.Dataset[StatefulOps.DriftEv]) =>
-          StatefulOps.crostonMonitor(ds).toDF(), "croston"))) {
-        val mem = MemoryStream[StatefulOps.DriftEv]
-        val q = mk(mem.toDS())
-          .writeStream.outputMode("append")
-          .format("memory").queryName(s"s${nm}_ooo").start()
-        try {
-          mem.addData(StatefulOps.DriftEv("t", day0, 100L))
+    val day0 = new java.sql.Timestamp(86400L * 1000L * 100)
+    val dayBack = new java.sql.Timestamp(86400L * 1000L * 50)
+    for ((mk, nm) <- Seq(
+      ((ds: org.apache.spark.sql.Dataset[StatefulOps.DriftEv]) =>
+        StatefulOps.holtMonitor(ds).toDF(), "holt"),
+      ((ds: org.apache.spark.sql.Dataset[StatefulOps.DriftEv]) =>
+        StatefulOps.crostonMonitor(ds).toDF(), "croston"))) {
+      val mem = MemoryStream[StatefulOps.DriftEv]
+      val q = mk(mem.toDS())
+        .writeStream.outputMode("append")
+        .format("memory").queryName(s"s${nm}_ooo").start()
+      try {
+        mem.addData(StatefulOps.DriftEv("t", day0, 100L))
+        q.processAllAvailable()
+        mem.addData(StatefulOps.DriftEv("t", dayBack, 100L))
+        val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
           q.processAllAvailable()
-          mem.addData(StatefulOps.DriftEv("t", dayBack, 100L))
-          val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-            q.processAllAvailable()
-          }
-          assert(causes(ex).exists(c =>
-            c.getMessage != null && c.getMessage.contains("out of order")),
-            s"$nm: expected the monotone-day require, got: $ex")
-        } finally q.stop()
-      }
+        }
+        assert(causes(ex).exists(c =>
+          c.getMessage != null && c.getMessage.contains("out of order")),
+          s"$nm: expected the monotone-day require, got: $ex")
+      } finally q.stop()
     }
   }
 
@@ -845,5 +863,37 @@ class StatefulOpsSpec extends AnyFunSuite {
         assert(streamed.sameElements(batch))
       } finally q.stop()
     }
+  }
+
+  test("every StatefulProcessor under streaming/ needs list state, map state or timers") {
+    // The state-API rule (StatefulOps header): a single value per key
+    // with no timer is a [flat]mapGroupsWithState fold on the default
+    // state store, so a transformWithState processor must call one of
+    // getListState, getMapState or registerTimer.
+    val root = Iterator.iterate(new java.io.File(sys.props("user.dir")).getAbsoluteFile)(_.getParentFile)
+      .takeWhile(_ != null).find(d => new java.io.File(d, "src/main/scala/graft/streaming").isDirectory)
+      .getOrElse(fail("source tree not found above the working directory"))
+    val decl = """class\s+(\w+)(?:\([^)]*\))?\s+extends\s+[\w.]*StatefulProcessor\s*\[""".r
+    val bodies = new java.io.File(root, "src/main/scala/graft/streaming").listFiles()
+      .filter(_.getName.endsWith(".scala")).toSeq.flatMap { f =>
+        val in = scala.io.Source.fromFile(f, "UTF-8")
+        val src = try in.mkString finally in.close()
+        decl.findAllMatchIn(src).map { m =>
+          // the class body, brace-matched from the first `{` after the header
+          val open = src.indexOf('{', m.end)
+          var depth = 0
+          var i = open
+          do {
+            if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1
+            i += 1
+          } while (depth > 0)
+          m.group(1) -> src.substring(open, i)
+        }
+      }
+    assert(bodies.nonEmpty, "no StatefulProcessor subclass found")
+    val offenders = bodies.collect { case (name, body)
+      if !Seq("getListState", "getMapState", "registerTimer").exists(body.contains) => name }
+    assert(offenders.isEmpty,
+      s"single-value processors belong on a flatMapGroupsWithState fold: $offenders")
   }
 }
