@@ -260,7 +260,10 @@ object VaderSentiment {
     math.max(-1.0, math.min(1.0, c))
   }
 
-  /** Reference label thresholds (redditProcessor.py:28-33). */
+  /** Reference label thresholds (redditProcessor.py:28-33): positive above
+    * +LabelThreshold, negative below −LabelThreshold, neutral between. */
+  private[graft] val LabelThreshold = 0.05
+
   def label(c: Double): String =
-    if (c > 0.05) "positive" else if (c < -0.05) "negative" else "neutral"
+    if (c > LabelThreshold) "positive" else if (c < -LabelThreshold) "negative" else "neutral"
 }

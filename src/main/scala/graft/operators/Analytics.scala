@@ -2,11 +2,8 @@ package graft.operators
 
 import graft.Tables.load
 import graft.functions.TextClean
-import graft.plans.VaderExpr
-import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.clustering.LDA
-import org.apache.spark.ml.feature.{CountVectorizer, IDF, StopWordsRemover, Tokenizer}
-import org.apache.spark.ml.functions.vector_to_array
+import graft.operators.RedditProcessor.{fitFeatures, lda, topicFrame, topicWords, withSentiment}
+import org.apache.spark.ml.clustering.LDAModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,29 +25,24 @@ import org.apache.spark.sql.functions._
   * these queries are rows-only checked; the relational scaffolding around
   * them is oracle-checked elsewhere.
   *
-  * Scale: every stage is a distributed transform; LDA-EM is the only
-  * multi-iteration shuffle job. The 20 topic columns stay a single vector
-  * column until the final projection (no 20-way pivot mid-plan).
+  * The sentiment columns, the TF-IDF fit, the LDA estimator, the topic
+  * columns and the topic words are [[RedditProcessor]]'s; this object adds
+  * only the `documents` scan, the fit's data layout and the fit memo.
+  *
+  * Scale: every stage is a distributed transform; the online-LDA fit is
+  * the only multi-iteration job.
   */
 object Analytics {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private val K = 20
-  private val Seed = 42L
-  private val TopWords = 10
-
   /** Cleaned corpus with sentiment — the pre-ML §3.3 prefix. */
-  def corpus(s: SparkSession, dir: String): DataFrame = {
-    load(s, dir, "documents")
+  def corpus(s: SparkSession, dir: String): DataFrame =
+    withSentiment(load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
-        TextClean.clean(col("text")).as("text"))
-      .withColumn("sentiment_score", VaderExpr.vaderCompound(col("text")))
-      .withColumn("sentiment",
-        when(col("sentiment_score") > 0.05, "positive")
-          .when(col("sentiment_score") < -0.05, "negative")
-          .otherwise("neutral"))
-  }
+        TextClean.clean(col("text")).as("text")))
+
+  private[graft] type Fit = (LDAModel, DataFrame, Array[String])
 
   /** nlp_analysis and nlp_topics share one fit per (session, sf dir) — the
     * model is deterministic (seed 42), so refitting would only burn the
@@ -58,14 +50,14 @@ object Analytics {
     * frame are bound to the session that built them, and a fresh session in
     * the same JVM must not receive a handle into a stopped one. */
   private val ldaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (org.apache.spark.ml.clustering.LDAModel, DataFrame, Array[String])]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Fit]()
 
   /** Entries beyond this many (session, dir) bins are evicted (and their
     * cached frames unpersisted) — the cache cannot grow with the number of
     * sf dirs a long-lived session touches. */
   private val MaxCached = 4
 
-  private def fitLda(s: SparkSession, dir: String): (org.apache.spark.ml.clustering.LDAModel, DataFrame, Array[String]) = {
+  private def fitLda(s: SparkSession, dir: String): Fit = {
     // Drop bins whose session has been stopped — their cached blocks died
     // with the context; holding the handles would just pin dead objects.
     ldaCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
@@ -75,7 +67,7 @@ object Analytics {
     // Fit OUTSIDE the map lock (computeIfAbsent would block every other
     // access on this bin for the multi-second fit); on a lost race, release
     // our copy and adopt the winner's.
-    val computed = fitLdaUncached(s, dir)
+    val computed = fit(corpus(s, dir))
     val prev = ldaCache.putIfAbsent(key, computed)
     if (prev != null) { computed._2.unpersist(); prev }
     else {
@@ -95,12 +87,14 @@ object Analytics {
   private[graft] def fitMemoized(s: SparkSession, dir: String): Boolean =
     ldaCache.containsKey((s, dir))
 
-  private def fitLdaUncached(s: SparkSession, dir: String) = {
+  /** The (model, cached `features` frame, vocabulary) fit of a cleaned,
+    * sentiment-scored corpus keyed by `doc_id`. Bench's warm-up runs it on a
+    * synthetic frame so the timed nlp_analysis finds the real fit's code
+    * path compiled. */
+  private[graft] def fit(corpus: DataFrame): Fit = {
     // Same shape as RedditProcessor.analyze: the corpus (clean + VADER) is
     // consumed by the CountVectorizer fit, the IDF fit, the transform and
-    // the LDA fit — persist it across those passes, and pass maxDF in
-    // fraction form (< 1.0 = fraction of the doc count, identical pruning)
-    // so no eager driver-blocking count() re-runs the chain to size it.
+    // the LDA fit — persist it across those passes.
     // DETERMINISTIC LAYOUT before any fit (round-16): online-VB LDA samples
     // its mini-batches PER PARTITION (seeded Bernoulli keyed on partition
     // index), so the fitted topics follow the corpus' partition layout —
@@ -112,41 +106,23 @@ object Analytics {
     // row→partition assignment and in-partition order are then functions
     // of the data alone (never of input split sizing, parallelism, or
     // shuffle fetch arrival order), and the fit is reproducible on any
-    // cluster shape. One extra corpus-scale exchange, amortized over the
-    // 4 nlp queries via the fit cache; pins in GoldenPipelineSpec +
-    // tools/golden_pins.json re-anchored under this contract.
+    // cluster shape. One extra corpus-scale exchange, amortized over
+    // nlp_analysis and nlp_topics via the fit memo; pins in
+    // GoldenPipelineSpec + tools/golden_pins.json re-anchored under this
+    // contract.
     val FitParts = 64
-    val c = corpus(s, dir)
+    val c = corpus
       .repartition(FitParts, col("doc_id"))
       .sortWithinPartitions("doc_id")
       .persist()
     try {
-      val pipeline = new Pipeline().setStages(Array(
-        new Tokenizer().setInputCol("text").setOutputCol("raw_tokens"),
-        new StopWordsRemover().setInputCol("raw_tokens").setOutputCol("tokens"),
-        new CountVectorizer().setInputCol("tokens").setOutputCol("tf")
-          .setMinDF(2.0).setMaxDF(0.95),
-        new IDF().setInputCol("tf").setOutputCol("features")))
-      val fm = pipeline.fit(c)
+      val (fm, vocab) = fitFeatures(c)
       // Cache vecs BEFORE the LDA fit: the fit's iterations populate the
       // cache while the corpus cache is still hot, so after the finally
       // unpersist(c) the returned frame reads its own cached blocks — no
       // post-release recompute of the clean+VADER chain.
       val vecs = fm.transform(c).cache()
-      // Online variational Bayes (Spark's default optimizer), the same
-      // inference family as the reference's sklearn LatentDirichletAllocation
-      // (Hoffman et al. 2010): EM materializes the full doc-term graph as
-      // GraphX state across every iteration — O(total tokens) cluster state
-      // that becomes the bottleneck long before 100 TB — while online VB
-      // streams seeded mini-batches and keeps only the k×V topic matrix.
-      // Measured at sf0.1: fit 5.9 s (EM) -> 2.4 s (online), same structural
-      // contract (SURVEY §7.4: valid distributions + pinned word sets, not
-      // bitwise parity; GoldenPipelineSpec re-pinned with this optimizer).
-      val lda = new LDA().setK(K).setSeed(Seed).setOptimizer("online").setMaxIter(10)
-        .setFeaturesCol("features")
-      val model = lda.fit(vecs)
-      val vocab = fm.stages(2).asInstanceOf[org.apache.spark.ml.feature.CountVectorizerModel].vocabulary
-      (model, vecs, vocab)
+      (lda.fit(vecs), vecs, vocab)
     } finally c.unpersist()
   }
 
@@ -169,22 +145,15 @@ object Analytics {
     // and batch_id (redditProcessor.py:88-141 shape).
     "nlp_analysis" -> ((s, dir) => {
       val (model, vecs, _) = fitLda(s, dir)
-      val withTopics = model.transform(vecs)
-        .withColumn("t", vector_to_array(col("topicDistribution")))
-      val topicCols = (0 until K).map(i => col("t")(i).as(s"topic_${i + 1}"))
-      withTopics.select(
-        col("doc_id") +: col("text") +: col("sentiment_score") +: col("sentiment") +:
-          topicCols :+ lit("batch_0").as("batch_id"): _*)
+      topicFrame(model, vecs, Seq("doc_id", "text", "sentiment_score", "sentiment").map(col),
+        Seq(lit("batch_0").as("batch_id")))
         .orderBy("doc_id")
     }),
 
     // Topic descriptions: top-10 words per topic (O4 via describeTopics).
     "nlp_topics" -> ((s, dir) => {
       val (model, _, vocab) = fitLda(s, dir)
-      val vocabCol = array(vocab.map(lit): _*)
-      model.describeTopics(TopWords)
-        .withColumn("words",
-          concat_ws(" ", transform(col("termIndices"), i => element_at(vocabCol, i + 1))))
+      topicWords(model, vocab)
         .select(col("topic"), col("words"), lit("batch_0").as("batch_id"))
         .orderBy("topic")
     }))

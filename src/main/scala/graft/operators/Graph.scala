@@ -117,9 +117,11 @@ object Graph {
     * broke the order once ids exceeded 2^32, well below the 100 TB
     * target). Wedges fan out from each edge's LOW-key endpoint, so the
     * join input is Σ outdeg² = O(m^1.5) under any degree skew, and each
-    * triangle is found exactly once. Returns (degree table `node, d`,
-    * per-node triangle counts `node, n_tri`). */
-  private def nodeTriangles(e: DataFrame): (DataFrame, DataFrame) = {
+    * triangle is found exactly once. Apexes with more than `apexCap`
+    * out-neighbors take the streamed wedge form (the queries pass
+    * [[WedgeApexCap]]). Returns (degree table `node, d`, per-node triangle
+    * counts `node, n_tri`). */
+  private[graft] def nodeTriangles(e: DataFrame, apexCap: Int): (DataFrame, DataFrame) = {
     val deg = e.select(explode(array(col("pa"), col("pb"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("d"))
     val keyed = deg.select(col("node"), struct(col("d"), col("node")).as("k"))
@@ -146,7 +148,7 @@ object Graph {
     // collect_list buffers an apex's FULL out-neighbor list in one
     // aggregation row. Degree orientation bounds out-degree at √(2m) —
     // sub-linear but still ~1.4M structs per row at m = 10¹² — so apexes
-    // above WedgeApexCap take the STREAMED self-join form instead (no
+    // above apexCap take the STREAMED self-join form instead (no
     // per-apex array; the pre-r16 shape, restricted to the handful of
     // super-apexes), and everything below it keeps the one-exchange
     // explode. The branch split is exact (anti/semi on the same apex key,
@@ -156,8 +158,9 @@ object Graph {
     // On every driver SF the `hi` side is empty (max out-degree ≤ 2 at
     // sf0.1), so the streamed branch costs one scan of the checkpointed
     // `o`; at 100 TB it is what caps a task's aggregation buffer.
+    // PipelineOpsSpec forces it with caps 1 and 2 on a hub-plus-clique graph.
     val od = o.groupBy("lo").agg(count(lit(1)).as("od"))
-    val hiApex = od.where(col("od") > WedgeApexCap).select("lo")
+    val hiApex = od.where(col("od") > apexCap).select("lo")
     val wLow = o.join(hiApex, Seq("lo"), "left_anti")
       .groupBy("lo")
       .agg(sort_array(collect_list(struct(col("khi"), col("hi")))).as("ns"))
@@ -330,7 +333,7 @@ object Graph {
     // Per-node triangle participation over the co-purchase graph, top
     // nodes first (the shared [[nodeTriangles]] wedge pipeline).
     "gr_triangles" -> ((s, dir) =>
-      nodeTriangles(edges(s, dir).cache())._2
+      nodeTriangles(edges(s, dir).cache(), WedgeApexCap)._2
         .orderBy(col("n_tri").desc, col("node"))),
 
     // Local clustering coefficient (Watts & Strogatz 1998) — per node,
@@ -344,7 +347,7 @@ object Graph {
     // ~3e9-node graphs); the single double division is the identical
     // expression on both engines, round(6).
     "gr_clustering" -> ((s, dir) => {
-      val (deg, tcnt) = nodeTriangles(edges(s, dir).cache())
+      val (deg, tcnt) = nodeTriangles(edges(s, dir).cache(), WedgeApexCap)
       deg.where(col("d") >= 2)
         .join(tcnt, Seq("node"), "left")
         .na.fill(0L, Seq("n_tri"))

@@ -49,9 +49,6 @@ object Similarity {
     transform(sequence(lit(1), lit(Dims)),
       d => graft.Exact.hash32(concat_ws("_", lit(p), d)) / lit(2147483648.0) - 1)
 
-  private def planeSql(p: Int): String =
-    s"list_transform(range(1, ${Dims + 1}), d -> ${hash32Sql(s"concat_ws('_', $p, d)")} / 2147483648.0 - 1)"
-
   /** LSH bucket id: bit p set iff dot(v, plane_p) > 0. Uses the codegen'd
     * DotProduct expression (same fold order as the HOF/SQL formulations). */
   private def bucket(v: Column): Column =

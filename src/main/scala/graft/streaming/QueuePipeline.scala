@@ -60,24 +60,26 @@ object QueuePipeline {
       .where(size(col("docs")) > 0)
       .select(concat(lit("["), concat_ws(",", col("docs")), lit("]")).as("value"))
 
-  /** S4/X11/P3 — decode one queue payload column into typed post rows.
+  /** Decode the `value` payload column into typed `schema` rows.
     * Malformed JSON → null array → zero rows (the error branch at
     * addReddit.py:38-40); unknown fields dropped, missing fields null
     * (defensive re-projection, addReddit.py:51-61). */
-  def decodePosts(payloads: DataFrame, payloadCol: String = "value"): DataFrame =
+  private def decode(payloads: DataFrame, schema: StructType): DataFrame =
     payloads
-      .select(explode_outer(from_json(col(payloadCol), ArrayType(postSchema))).as("doc"))
+      .select(explode_outer(from_json(col("value"), ArrayType(schema))).as("doc"))
       .where(col("doc").isNotNull)
       .select(col("doc.*"))
       .withColumn("created_utc", to_timestamp(col("created_utc"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
 
+  /** S4/X11/P3 — decode queue payloads into typed post rows. */
+  def decodePosts(payloads: DataFrame): DataFrame = decode(payloads, postSchema)
+
   /** Same for comments (addReddit.py:90-115). */
-  def decodeComments(payloads: DataFrame, payloadCol: String = "value"): DataFrame =
-    payloads
-      .select(explode_outer(from_json(col(payloadCol), ArrayType(commentSchema))).as("doc"))
-      .where(col("doc").isNotNull)
-      .select(col("doc.*"))
-      .withColumn("created_utc", to_timestamp(col("created_utc"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
+  def decodeComments(payloads: DataFrame): DataFrame = decode(payloads, commentSchema)
+
+  /** T4 dedup horizon: the reference's one-week backfill window
+    * (reddit_harvester_comment.py:40). */
+  private val DedupHorizon = "7 days"
 
   /** T4 — streaming dedup with bounded state: watermark +
     * dropDuplicatesWithinWatermark on the natural key ALONE. Identity is the
@@ -86,10 +88,9 @@ object QueuePipeline {
     * reference's seen-set membership semantics (SISMEMBER/SADD on the id,
     * addReddit.py:46-52) and the batch branch. State is evicted once an
     * entry's first-seen event time falls behind the watermark horizon. */
-  def dedupByKey(df: DataFrame, key: String, eventTimeCol: String,
-                 horizon: String = "7 days"): DataFrame =
+  def dedupByKey(df: DataFrame, key: String, eventTimeCol: String): DataFrame =
     if (df.isStreaming)
-      df.withWatermark(eventTimeCol, horizon).dropDuplicatesWithinWatermark(key)
+      df.withWatermark(eventTimeCol, DedupHorizon).dropDuplicatesWithinWatermark(key)
     else df.dropDuplicates(Seq(key))
 
   /** K3/K5 — idempotent keyed append: the exactly-once sink half. Replaying

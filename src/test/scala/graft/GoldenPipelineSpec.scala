@@ -95,8 +95,9 @@ class GoldenPipelineSpec extends AnyFunSuite {
       .agg(md5(concat_ws(",", sort_array(collect_list(col("h"))))).as("topics_hash"))
       .collect().head.getString(0)
     // Re-pinned round-16 under the deterministic-layout fit contract
-    // (Analytics.fitLdaUncached repartitions on doc_id before any fit, so
-    // the model no longer follows input-split/parallelism layout).
+    // (Analytics.fit repartitions on doc_id before RedditProcessor's shared
+    // fitFeatures/lda fit, so the model no longer follows
+    // input-split/parallelism layout).
     assert(h == "b1a534ae18a51e5f49d8aa6e4e365053", s"topic word sets drifted: $h")
   }
 

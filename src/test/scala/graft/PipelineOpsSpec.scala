@@ -488,6 +488,35 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(part % 3 == 0, s"participation sum $part is not a multiple of 3")
   }
 
+  test("nodeTriangles: the streamed super-apex wedge branch counts like the collect_list form") {
+    // A hub joined to every node, a 4-clique and a small cycle with a
+    // chord: apex out-degrees span 0..3 under the (degree, id) orientation.
+    // Cap 1 routes every apex with ≥ 2 out-neighbors to the streamed
+    // self-join form, cap 2 splits the apexes between the two forms, and
+    // Int.MaxValue keeps them all in the collect_list form.
+    import spark.implicits._
+    val edgeList = (1L to 8L).map(v => (0L, v)) ++
+      Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+        (5L, 6L), (6L, 7L), (7L, 8L), (5L, 7L))
+    val adj = edgeList.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2).toSet }
+    val nodes = adj.keys.toSeq.sorted
+    val bruteTri = (for {
+      a <- nodes; b <- nodes if b > a && adj(a)(b); c <- nodes if c > b && adj(a)(c) && adj(b)(c)
+      v <- Seq(a, b, c)
+    } yield v).groupBy(identity).map { case (v, vs) => v -> vs.size.toLong }
+    val expected = nodes.map(v => (v, adj(v).size.toLong, bruteTri.getOrElse(v, 0L))).toSet
+    assert(expected.exists(_._3 > 0), "fixture has no triangle")
+    val e = edgeList.toDF("pa", "pb")
+    for (cap <- Seq(1, 2, Int.MaxValue)) {
+      val (deg, tcnt) = operators.Graph.nodeTriangles(e, cap)
+      val got = deg.join(tcnt, Seq("node"), "left").na.fill(0L, Seq("n_tri"))
+        .select(col("node"), col("d"), col("n_tri")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == expected, s"cap $cap: (node, deg, n_tri) diverged from brute force")
+    }
+  }
+
   test("ir_mrr: ranks in cut, rr is the reciprocal, mrr is the mean") {
     val rows = operators.Retrieval.queries("ir_mrr")(spark, dir).collect()
     assert(rows.length == 3, "one row per query term")

@@ -103,6 +103,39 @@ class RedditProcessorSpec extends AnyFunSuite {
     assert(cached == entries0)
     assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0)
   }
+
+  test("analyze rejects a corpus whose vocabulary minDF/maxDF prune to nothing") {
+    // "coffee" is in all 3 docs (over maxDF 0.95), every other word in one
+    // (under minDF 2): the vocabulary is empty. Three docs, not two: with
+    // two, maxDF 0.95 · 2 < minDF and CountVectorizer rejects its own
+    // parameters before pruning anything.
+    import spark.implicits._
+    val (posts0, comments0) = fixture()
+    val posts = Seq(
+      ("u1", "2024-01-01T10:00:00Z", "p1", 0, 1, "alpha", "melbourne", "coffee", "http://x"),
+      ("u2", "2024-01-01T11:00:00Z", "p2", 0, 1, "beta", "sydney", "coffee", "http://x"),
+      ("u3", "2024-01-01T12:00:00Z", "p3", 0, 1, "gamma", "perth", "coffee", "http://x"))
+      .toDF(posts0.columns: _*)
+    val comments = comments0.limit(0)
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException](
+      RedditProcessor.analyze(spark, posts, comments, "batch_e"))
+    assert(e.getMessage.contains("corpus too small for topic modeling"), e.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0, "the failed fit leaked its corpus")
+  }
+
+  test("Analytics nlp_analysis and nlp_topics reject a corpus whose vocabulary is pruned empty") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tiny_docs").toString
+    Seq((1L, "en", "t", "coffee"), (2L, "en", "t", "coffee"), (3L, "en", "t", "coffee"))
+      .toDF("doc_id", "lang", "source", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    for (q <- Seq("nlp_analysis", "nlp_topics")) {
+      val e = intercept[IllegalArgumentException](
+        operators.Analytics.queries(q)(spark, dir).collect())
+      assert(e.getMessage.contains("corpus too small for topic modeling"), s"$q: ${e.getMessage}")
+    }
+  }
 }
 
 object RedditProcessorSpec {
