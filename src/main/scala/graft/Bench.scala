@@ -129,8 +129,8 @@ object Bench {
   /** Which per-(session, dir) memos are filled: Dedup's component labels
     * and Analytics' model fit. */
   private def memos(spark: SparkSession, sfDir: String): Seq[Boolean] =
-    Seq(operators.Dedup.labelsMemoized(spark, sfDir),
-      operators.Analytics.fitMemoized(spark, sfDir))
+    Seq(operators.Dedup.labelsMemo, operators.Analytics.fitMemo)
+      .map(_.memoized(spark, sfDir))
 
   /** Listener events are delivered async; drain the bus so each query's
     * stage metrics land in its own tally window. `listenerBus` /

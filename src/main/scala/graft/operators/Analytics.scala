@@ -46,46 +46,12 @@ object Analytics {
 
   /** nlp_analysis and nlp_topics share one fit per (session, sf dir) — the
     * model is deterministic (seed 42), so refitting would only burn the
-    * benchmark. Keyed by session identity too: the fitted model and cached
-    * frame are bound to the session that built them, and a fresh session in
-    * the same JVM must not receive a handle into a stopped one. */
-  private val ldaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Fit]()
+    * benchmark. A fit that loses the fill race or is evicted has its cached
+    * `features` frame unpersisted. */
+  private[graft] val fitMemo = new graft.SessionMemo[Fit](_._2.unpersist())
 
-  /** Entries beyond this many (session, dir) bins are evicted (and their
-    * cached frames unpersisted) — the cache cannot grow with the number of
-    * sf dirs a long-lived session touches. */
-  private val MaxCached = 4
-
-  private def fitLda(s: SparkSession, dir: String): Fit = {
-    // Drop bins whose session has been stopped — their cached blocks died
-    // with the context; holding the handles would just pin dead objects.
-    ldaCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (s, dir)
-    val hit = ldaCache.get(key)
-    if (hit != null) return hit
-    // Fit OUTSIDE the map lock (computeIfAbsent would block every other
-    // access on this bin for the multi-second fit); on a lost race, release
-    // our copy and adopt the winner's.
-    val computed = fit(corpus(s, dir))
-    val prev = ldaCache.putIfAbsent(key, computed)
-    if (prev != null) { computed._2.unpersist(); prev }
-    else {
-      if (ldaCache.size > MaxCached) {
-        val it = ldaCache.entrySet().iterator()
-        while (ldaCache.size > MaxCached && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != key) { e.getValue._2.unpersist(); it.remove() }
-        }
-      }
-      computed
-    }
-  }
-
-  /** Whether (s, dir)'s model fit is memoized — lets Bench see which query
-    * filled the memo. */
-  private[graft] def fitMemoized(s: SparkSession, dir: String): Boolean =
-    ldaCache.containsKey((s, dir))
+  private def fitLda(s: SparkSession, dir: String): Fit =
+    fitMemo(s, dir)(fit(corpus(s, dir)))
 
   /** The (model, cached `features` frame, vocabulary) fit of a cleaned,
     * sentiment-scored corpus keyed by `doc_id`. Bench's warm-up runs it on a

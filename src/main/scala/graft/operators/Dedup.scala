@@ -188,24 +188,16 @@ object Dedup {
     * dd_canonical, a downstream dedup's drop list), and the labels are
     * deterministic per (session, dir) — so each session computes them once
     * and every consumer reuses the checkpointed frame. That's the
-    * production architecture (label once, consume many times) and the same
-    * per-(session, dir) memo [[Analytics]] uses for its fitted models.
-    * Keyed by session identity: a fresh session must not receive a handle
-    * into a stopped one's dead blocks. */
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Label bins beyond this are evicted (oldest-iterated first) — the memo
-    * cannot grow with the number of sf dirs a long-lived session touches.
-    * Checkpoint blocks of dropped frames are reclaimed by the
+    * production architecture (label once, consume many times). Releasing
+    * a checkpointed frame needs nothing: its blocks are reclaimed by the
     * ContextCleaner once unreferenced. */
-  private val MaxLabelBins = 4
+  private[graft] val labelsMemo = new graft.SessionMemo[DataFrame](_ => ())
 
   /** Per-doc duplicate-component labels (doc_id, lbl) — the composable form
     * of `dd_components` (lbl = the component's minimum doc_id = the keep
     * doc; a downstream dedup drops every row with doc_id ≠ lbl). Only docs
     * carrying some duplicate evidence appear; all other docs are their own
-    * singleton component. Memoized per (session, dir) — see labelsCache.
+    * singleton component. Memoized per (session, dir) — see labelsMemo.
     *
     * Edges union three evidence kinds so components chain across them the
     * way a production dedup needs: star edges within content-hash groups
@@ -225,31 +217,8 @@ object Dedup {
     * persist alone — the 41 s was driver-side planning, not execution). A
     * cluster deployment would use reliable checkpointing to a shared dir
     * for fault tolerance; the loop structure is identical. */
-  def componentLabels(s: SparkSession, dir: String): DataFrame = {
-    labelsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (s, dir)
-    val hit = labelsCache.get(key)
-    if (hit != null) return hit
-    // Compute OUTSIDE the map lock (the chain runs multi-second Spark
-    // jobs); on a lost race, adopt the winner's frame.
-    val computed = computeComponentLabels(s, dir)
-    val prev = labelsCache.putIfAbsent(key, computed)
-    if (prev != null) prev
-    else {
-      if (labelsCache.size > MaxLabelBins) {
-        val it = labelsCache.entrySet().iterator()
-        while (labelsCache.size > MaxLabelBins && it.hasNext) {
-          if (it.next().getKey != key) it.remove()
-        }
-      }
-      computed
-    }
-  }
-
-  /** Whether (s, dir)'s component labels are memoized — lets Bench see
-    * which query filled the memo. */
-  private[graft] def labelsMemoized(s: SparkSession, dir: String): Boolean =
-    labelsCache.containsKey((s, dir))
+  def componentLabels(s: SparkSession, dir: String): DataFrame =
+    labelsMemo(s, dir)(computeComponentLabels(s, dir))
 
   private def computeComponentLabels(s: SparkSession, dir: String): DataFrame = {
     // Both group-key kinds (content hash, token-set fingerprint) ride ONE

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Exact.dsum
+import graft.Exact.{cents, dsum, hugeint}
 import graft.Tables.load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -74,6 +74,25 @@ object EventWindows {
     * corpus horizon are right-censored (still alive), not churned. */
   private val KmCensorDays = 7L
 
+  /** The per-type daily series every time-series query starts from:
+    * (event_type, d, sc) with sc the day's exact integer-cents total. One
+    * corpus-scale keyed agg; everything downstream is types×days. */
+  private[graft] def dailyCents(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "events")
+      .select(col("event_type"), to_date(col("ts")).as("d"),
+        cents(col("value")).as("c"))
+      .groupBy("event_type", "d").agg(sum("c").as("sc"))
+
+  /** Completes an (event_type, d, valueCol) daily frame onto each type's
+    * calendar spine [min d, max d]: absent days are true zeros (the
+    * ev_forecast_sn calendar lesson), so valueCol is 0, never NULL. */
+  private[graft] def zeroFill(d: DataFrame, valueCol: String): DataFrame =
+    d.groupBy("event_type")
+      .agg(min("d").as("mn"), max("d").as("mx"))
+      .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
+      .join(d, Seq("event_type", "d"), "left")
+      .na.fill(0L, Seq(valueCol))
+
   val queries: Map[String, Q] = Map(
     // Rolling z-score anomaly flags per event type: each event scored
     // against the trailing AnomWin-row window (inclusive of itself) on its
@@ -110,7 +129,7 @@ object EventWindows {
     "ev_anomaly" -> ((s, dir) => {
       val ev = load(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("ts"), col("value"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
       val ranked = graft.plans.KeyedRank.withRank(ev, "event_type",
         graft.plans.KeyedRank.adaptiveTimeBucket(ev, col("ts")),
         Seq(col("ts"), col("event_id")))
@@ -148,7 +167,7 @@ object EventWindows {
     "ev_ewma" -> ((s, dir) => {
       val ev = load(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("ts"), col("value"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
       val ranked = graft.plans.KeyedRank.withRank(ev, "event_type",
         graft.plans.KeyedRank.adaptiveTimeBucket(ev, col("ts")),
         Seq(col("ts"), col("event_id")))
@@ -156,8 +175,8 @@ object EventWindows {
       val w = Window.partitionBy("event_type", "g").orderBy("rk")
         .rowsBetween(-(EwmaWin - 1), 0)
       val lst = collect_list(col("c")).over(w)
-      val horner = aggregate(reverse(lst), lit(0L).cast("decimal(38,0)"),
-        (acc, x) => (acc * lit(2) + x).cast("decimal(38,0)"))
+      val horner = aggregate(reverse(lst), hugeint(lit(0L)),
+        (acc, x) => hugeint(acc * lit(2) + x))
       val denom = aggregate(lst, lit(0L), (acc, _) => acc * 2 + 1) // 2^n − 1
       dup
         .withColumn("ewma",
@@ -223,7 +242,7 @@ object EventWindows {
       g.withColumn("rn", row_number().over(wPeak))
         .groupBy("event_type")
         .agg(sum(col("o")).as("n"),
-          sum(col("o").cast("decimal(38,0)") * col("o")).as("so2"),
+          sum(hugeint(col("o")) * col("o")).as("so2"),
           max(when(col("rn") === 1, col("h"))).as("peak_hour"),
           max(when(col("rn") === 1, col("o"))).as("peak_o"))
         .select(col("event_type"), col("n"), col("peak_hour"),
@@ -504,25 +523,16 @@ object EventWindows {
     // guard), never a NaN-ordering hazard. Scale: one corpus (type, day)
     // agg; spine, lag, and sums ride the types×days metadata frame.
     "ev_autocorr" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
+      val d = dailyCents(s, dir).localCheckpoint()
       val w = Window.partitionBy("event_type").orderBy("d")
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val f = zeroFill(d, "sc")
         .withColumn("px", lag("sc", 1).over(w))
         .where(col("px").isNotNull)
       val g = f.groupBy("event_type").agg(count(lit(1)).as("n"),
-        sum(dec(col("px"))).as("sx"), sum(dec(col("sc"))).as("sy"),
-        sum(dec(col("px")) * col("px")).as("sxx"),
-        sum(dec(col("sc")) * col("sc")).as("syy"),
-        sum(dec(col("px")) * col("sc")).as("sxy"))
+        sum(hugeint(col("px"))).as("sx"), sum(hugeint(col("sc"))).as("sy"),
+        sum(hugeint(col("px")) * col("px")).as("sxx"),
+        sum(hugeint(col("sc")) * col("sc")).as("syy"),
+        sum(hugeint(col("px")) * col("sc")).as("sxy"))
       val dx = g("n") * col("sxx") - col("sx") * col("sx")
       val dy = g("n") * col("syy") - col("sy") * col("sy")
       g.select(col("event_type"), col("n").as("n_pairs"),
@@ -545,16 +555,7 @@ object EventWindows {
     // row, round(6), degenerate-variance NULL guard).
     "ev_acf" -> ((s, dir) => {
       import s.implicits._
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val f = zeroFill(dailyCents(s, dir), "sc")
         .select(col("event_type"),
           datediff(col("d"), lit("1970-01-01").cast("date")).as("dd"),
           col("sc"))
@@ -568,10 +569,10 @@ object EventWindows {
           col("pd") === col("dd") - col("k"))
         .groupBy("event_type", "k")
         .agg(count(lit(1)).as("n"),
-          sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-          sum(dec(col("x")) * col("x")).as("sxx"),
-          sum(dec(col("y")) * col("y")).as("syy"),
-          sum(dec(col("x")) * col("y")).as("sxy"))
+          sum(hugeint(col("x"))).as("sx"), sum(hugeint(col("y"))).as("sy"),
+          sum(hugeint(col("x")) * col("x")).as("sxx"),
+          sum(hugeint(col("y")) * col("y")).as("syy"),
+          sum(hugeint(col("x")) * col("y")).as("sxy"))
       val dx = col("n") * col("sxx") - col("sx") * col("sx")
       val dy = col("n") * col("syy") - col("sy") * col("sy")
       g.select(col("event_type"), col("k").as("lag"), col("n").as("n_pairs"),
@@ -597,27 +598,23 @@ object EventWindows {
       val d = load(s, dir, "events")
         .select(col("event_type"), to_date(col("ts")).as("d"))
         .groupBy("event_type", "d").agg(count(lit(1)).as("c"))
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("c"))
+      val f = zeroFill(d, "c")
       f.groupBy("event_type")
         .agg(count(lit(1)).as("n_days"),
           sum(col("c")).as("n_events"),
-          sum(col("c").cast("decimal(38,0)") * col("c")).as("q"))
+          sum(hugeint(col("c")) * col("c")).as("q"))
         .select(col("event_type"), col("n_days"), col("n_events"),
           round(col("n_events").cast("double") / col("n_days"), 6)
             .as("mean_per_day"),
           round(when(col("n_events") > 0 && col("n_days") > 1,
-            (col("n_days").cast("decimal(38,0)") * col("q") -
-              col("n_events").cast("decimal(38,0)") * col("n_events"))
+            (hugeint(col("n_days")) * col("q") -
+              hugeint(col("n_events")) * col("n_events"))
               .cast("double") /
               ((col("n_days") - 1).cast("double") *
                 col("n_events").cast("double"))), 6).as("dispersion"),
           round(when(col("n_events") > 0,
-            (col("n_days").cast("decimal(38,0)") * col("q") -
-              col("n_events").cast("decimal(38,0)") * col("n_events"))
+            (hugeint(col("n_days")) * col("q") -
+              hugeint(col("n_events")) * col("n_events"))
               .cast("double") / col("n_events").cast("double")), 6)
             .as("chi2_disp"))
         .orderBy("event_type")
@@ -681,16 +678,7 @@ object EventWindows {
     // causal processor can emit before the series does; the batch form
     // is the only consumer.
     "ev_hurst" -> ((s, dir) => {
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val f = zeroFill(dailyCents(s, dir), "sc")
         .withColumn("t", row_number().over(
           Window.partitionBy("event_type").orderBy("d")).cast("long") - 1)
         .localCheckpoint() // scanned once per block size
@@ -703,15 +691,15 @@ object EventWindows {
       val wCum = Window.partitionBy("event_type", "w", "blk").orderBy("t")
         .rowsBetween(Window.unboundedPreceding, 0)
       val withP = rows
-        .withColumn("p", sum(dec(col("sc"))).over(wCum))
+        .withColumn("p", sum(hugeint(col("sc"))).over(wCum))
         .withColumn("j", count(lit(1)).over(wCum)) // 1-based in-block pos
       val btot = rows.groupBy("event_type", "w", "blk")
         .agg(count(lit(1)).as("bn"), sum("sc").as("bs"),
-          sum(dec(col("sc")) * col("sc")).as("bq"))
+          sum(hugeint(col("sc")) * col("sc")).as("bq"))
         .where(col("bn") === col("w")) // complete blocks only
         .select(col("event_type"), col("w"), col("blk"), col("bs"),
-          (col("bq") * col("w") - dec(col("bs")) * col("bs")).as("vd"))
-      val wy = col("p") * col("w") - dec(col("j")) * col("bs")
+          (col("bq") * col("w") - hugeint(col("bs")) * col("bs")).as("vd"))
+      val wy = col("p") * col("w") - hugeint(col("j")) * col("bs")
       val rs = withP.join(btot, Seq("event_type", "w", "blk"))
         .groupBy("event_type", "w", "blk")
         .agg(max(wy).as("mxy"), min(wy).as("mny"), max("vd").as("vd"))
@@ -770,11 +758,7 @@ object EventWindows {
     // an online form would be a different operator (recursive least
     // squares), not a twin of this one.
     "ev_granger" -> ((s, dir) => {
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
+      val d = dailyCents(s, dir)
       val rng = d.agg(min("d").as("mn"), max("d").as("mx"))
       val types = d.select("event_type").distinct()
       val spine = types.crossJoin(broadcast(rng))
@@ -793,14 +777,14 @@ object EventWindows {
         .where(col("type_x") =!= col("type_y"))
         .groupBy("type_x", "type_y")
         .agg(count(lit(1)).as("n"),
-          sum(dec(col("y"))).as("sy"), sum(dec(col("l"))).as("sl"),
-          sum(dec(col("x"))).as("sx"),
-          sum(dec(col("y")) * col("y")).as("syy"),
-          sum(dec(col("l")) * col("l")).as("sll"),
-          sum(dec(col("x")) * col("x")).as("sxx"),
-          sum(dec(col("y")) * col("l")).as("syl"),
-          sum(dec(col("y")) * col("x")).as("syx"),
-          sum(dec(col("l")) * col("x")).as("slx"))
+          sum(hugeint(col("y"))).as("sy"), sum(hugeint(col("l"))).as("sl"),
+          sum(hugeint(col("x"))).as("sx"),
+          sum(hugeint(col("y")) * col("y")).as("syy"),
+          sum(hugeint(col("l")) * col("l")).as("sll"),
+          sum(hugeint(col("x")) * col("x")).as("sxx"),
+          sum(hugeint(col("y")) * col("l")).as("syl"),
+          sum(hugeint(col("y")) * col("x")).as("syx"),
+          sum(hugeint(col("l")) * col("x")).as("slx"))
       def c2(sab: String, sa: String, sb: String) =
         (col("n") * col(sab) - col(sa) * col(sb)).cast("double")
       val (cyy, cll, cxx) = (c2("syy", "sy", "sy"), c2("sll", "sl", "sl"),
@@ -884,7 +868,6 @@ object EventWindows {
     // state is the per-type previous-timestamp lag, which is the
     // rollingEwma's ring-of-1 degenerate case. Nothing bespoke.
     "ev_burstiness" -> ((s, dir) => {
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val ev = load(s, dir, "events")
         .select(col("event_type"), col("ts"), col("event_id"),
           unix_micros(col("ts")).as("us"))
@@ -898,8 +881,8 @@ object EventWindows {
         .where(col("own") && col("pus").isNotNull)
         .select(col("event_type"), (col("us") - col("pus")).as("t"))
         .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(dec(col("t"))).as("st"),
-          sum(dec(col("t")) * col("t")).as("stt"))
+        .agg(count(lit(1)).as("n"), sum(hugeint(col("t"))).as("st"),
+          sum(hugeint(col("t")) * col("t")).as("stt"))
       val sd = sqrt((col("n") * col("stt") - col("st") * col("st"))
         .cast("double"))
       val stD = col("st").cast("double")
@@ -928,20 +911,11 @@ object EventWindows {
     // associative aggregate over closed days (the ev_seasonality class);
     // built-in windowed aggregation maintains it. Nothing bespoke.
     "ev_seasonal_strength" -> ((s, dir) => {
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val f = zeroFill(dailyCents(s, dir), "sc")
         .select(col("event_type"), weekday(col("d")).as("dow"), col("sc"))
       val g = f.groupBy("event_type", "dow")
-        .agg(count(lit(1)).as("ng"), sum(dec(col("sc"))).as("sg"),
-          sum(dec(col("sc")) * col("sc")).as("qg"))
+        .agg(count(lit(1)).as("ng"), sum(hugeint(col("sc"))).as("sg"),
+          sum(hugeint(col("sc")) * col("sc")).as("qg"))
       val tot = g.groupBy("event_type")
         .agg(sum("ng").as("n"), sum("sg").as("st"), sum("qg").as("qt"),
           count(lit(1)).as("k"),
@@ -984,23 +958,14 @@ object EventWindows {
     // variant a stream would run is ev_ewma's territory, which has its
     // transformWithState twin); the batch form is the only consumer.
     "ev_decompose" -> ((s, dir) => {
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
+      val d = dailyCents(s, dir).localCheckpoint()
       val w7 = Window.partitionBy("event_type").orderBy("d")
         .rowsBetween(-3, 3)
-      val g = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
-        .withColumn("s7", sum(dec(col("sc"))).over(w7))
+      val g = zeroFill(d, "sc")
+        .withColumn("s7", sum(hugeint(col("sc"))).over(w7))
         .withColumn("n7", count(lit(1)).over(w7))
         .withColumn("d7", when(col("n7") === 7,
-          dec(col("sc")) * 7 - col("s7")))
+          hugeint(col("sc")) * 7 - col("s7")))
         .withColumn("dow", weekday(col("d")))
         .localCheckpoint() // seasonal-index agg + final output share it
       val sidx = g.where(col("d7").isNotNull)
@@ -1055,25 +1020,17 @@ object EventWindows {
     // (streaming.StatefulOps.driftMonitor, bit-equal pinned). The batch
     // form is the only consumer of this exact statistic.
     "ev_cusum_cp" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc")).localCheckpoint()
+      val d = dailyCents(s, dir).localCheckpoint()
+      val f = zeroFill(d, "sc").localCheckpoint()
       val tot = f.groupBy(col("event_type").as("tt"))
         .agg(count(lit(1)).as("n"), sum("sc").as("s"))
       val wCum = Window.partitionBy("event_type").orderBy("d")
         .rowsBetween(Window.unboundedPreceding, 0)
-      val dev = (col("sc").cast("decimal(38,0)") * col("n") - col("s"))
+      val dev = (hugeint(col("sc")) * col("n") - col("s"))
       val cusum = f.join(broadcast(tot), col("event_type") === col("tt"))
         .withColumn("p", sum(dev).over(wCum))
         .withColumn("rmin", min(col("p")).over(wCum))
-        .withColumn("cu", col("p") - least(col("rmin"), lit(0).cast("decimal(38,0)")))
+        .withColumn("cu", col("p") - least(col("rmin"), hugeint(lit(0))))
       cusum.groupBy("event_type")
         .agg(max("n").as("n_days"),
           max(struct(col("cu").as("c"),
@@ -1106,16 +1063,8 @@ object EventWindows {
     // All-integer output; endpoints (no neighbor) are excluded on both
     // engines by the NOT NULL guard.
     "ev_peak_detect" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val d = dailyCents(s, dir).localCheckpoint()
+      val f = zeroFill(d, "sc")
       val w = Window.partitionBy("event_type").orderBy("d")
       f.withColumn("prev", lag("sc", 1).over(w))
         .withColumn("nxt", lead("sc", 1).over(w))
@@ -1141,27 +1090,18 @@ object EventWindows {
     // pairs per type, independent of event count); everything else is
     // one corpus (type, day) agg.
     "ev_mk_trend" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc")).localCheckpoint()
+      val d = dailyCents(s, dir).localCheckpoint()
+      val f = zeroFill(d, "sc").localCheckpoint()
       val a = f.select(col("event_type"), col("d").as("da"), col("sc").as("xa"))
       val b = f.select(col("event_type"), col("d").as("db"), col("sc").as("xb"))
       val sS = a.join(b, Seq("event_type")).where(col("da") < col("db"))
         .groupBy("event_type")
         .agg(sum(signum(col("xb") - col("xa")).cast("long")).as("s_stat"))
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val ties = f.groupBy("event_type", "sc").agg(count(lit(1)).as("m"))
         .groupBy("event_type")
         .agg(sum("m").as("n"),
-          sum(dec(col("m")) * (col("m") - 1) * (col("m") * 2 + 5)).as("tt"))
-      val varNum = dec(col("n")) * (col("n") - 1) * (col("n") * 2 + 5) - col("tt")
+          sum(hugeint(col("m")) * (col("m") - 1) * (col("m") * 2 + 5)).as("tt"))
+      val varNum = hugeint(col("n")) * (col("n") - 1) * (col("n") * 2 + 5) - col("tt")
       val zNum = when(col("s_stat") > 0, col("s_stat") - 1)
         .when(col("s_stat") < 0, col("s_stat") + 1)
         .otherwise(lit(0L))
@@ -1196,16 +1136,8 @@ object EventWindows {
     // count); the selection window partitions per type over that same
     // bounded frame.
     "ev_theil_sen" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc")).localCheckpoint()
+      val d = dailyCents(s, dir).localCheckpoint()
+      val f = zeroFill(d, "sc").localCheckpoint()
       val a = f.select(col("event_type"), col("d").as("da"), col("sc").as("xa"))
       val b = f.select(col("event_type"), col("d").as("db"), col("sc").as("xb"))
       val pairs = a.join(b, Seq("event_type")).where(col("da") < col("db"))
@@ -1241,16 +1173,8 @@ object EventWindows {
     // empty or σ² = 0. Scale: everything above the daily agg rides the
     // types×days metadata frame.
     "ev_runs_test" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc")).localCheckpoint()
+      val d = dailyCents(s, dir).localCheckpoint()
+      val f = zeroFill(d, "sc").localCheckpoint()
       val wMed = Window.partitionBy("event_type").orderBy("sc", "d")
       val nDays = f.groupBy(col("event_type").as("tt"))
         .agg(count(lit(1)).as("nd"))
@@ -1352,11 +1276,7 @@ object EventWindows {
           (col("value") > 99.5).cast("long").as("hi"))
         .groupBy("event_type", "d").agg(sum("hi").as("c"))
         .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("c"))
+      val f = zeroFill(d, "c")
       val arr = f.groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("d"),
           col("c").cast("double").as("v")))).as("a"))
@@ -1403,7 +1323,7 @@ object EventWindows {
     "ev_page_hinkley" -> ((s, dir) => {
       val d = load(s, dir, "events")
         .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .groupBy("event_type", "d")
         .agg(sum("c").as("sc"), count(lit(1)).as("cnt"))
         .localCheckpoint()
@@ -1435,16 +1355,8 @@ object EventWindows {
     }),
 
     "ev_holt" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val d = dailyCents(s, dir).localCheckpoint()
+      val f = zeroFill(d, "sc")
       val arr = f.groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("d"),
           (col("sc").cast("double") / 100).as("v")))).as("a"))
@@ -1493,11 +1405,7 @@ object EventWindows {
     // calendar-bounded array row (the ev_holt collect discipline;
     // ~4M-day span ≈ 32 MB worst case bounds it).
     "ev_kendall_xcorr" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
+      val d = dailyCents(s, dir).localCheckpoint()
       val rng = d.groupBy().agg(min("d").as("mn"), max("d").as("mx"))
       val spine = d.select("event_type").distinct()
         .crossJoin(broadcast(rng))
@@ -1547,18 +1455,9 @@ object EventWindows {
     // Scale: one corpus (type, day) agg; the spine, lags, and rollup all
     // ride the types×days metadata frame above it.
     "ev_forecast_sn" -> ((s, dir) => {
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
-        .localCheckpoint()
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"),
-          explode(sequence(col("mn"), col("mx"))).as("d"))
+      val d = dailyCents(s, dir).localCheckpoint()
       val w = Window.partitionBy("event_type").orderBy("d")
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val f = zeroFill(d, "sc")
         .withColumn("l7", lag("sc", 7).over(w))
         .withColumn("l1", lag("sc", 1).over(w))
         .where(col("l7").isNotNull && col("l1").isNotNull)
@@ -1771,7 +1670,7 @@ object EventWindows {
       val uw = load(s, dir, "events")
         .select(col("user_id"),
           expr("unix_micros(ts) div 604800000000").as("w"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .groupBy("user_id", "w").agg(sum("c").as("wc"))
       val aged = uw
         .withColumn("cw", min("w").over(Window.partitionBy("user_id")))
@@ -1993,17 +1892,17 @@ object EventWindows {
     // final ratio is double+round(6).
     "ev_twa" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val cents = round(col("value") * 100).cast("long")
+      val roundedCents = round(col("value") * 100).cast("long")
       load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts"),
-          cents.as("v"))
+          roundedCents.as("v"))
         .withColumn("dur",
           lead(unix_micros(col("ts")), 1).over(w) - unix_micros(col("ts")))
         .where(col("dur").isNotNull)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_intervals"),
-          sum(col("v").cast("decimal(38,0)") * col("dur")).as("sp"),
-          sum(col("dur").cast("decimal(38,0)")).as("sd"))
+          sum(hugeint(col("v")) * col("dur")).as("sp"),
+          sum(hugeint(col("dur"))).as("sd"))
         .select(col("event_type"), col("n_intervals"),
           round(col("sp").cast("double") / col("sd").cast("double") / 100.0, 6)
             .as("twa_value"))
@@ -2023,7 +1922,7 @@ object EventWindows {
     "ev_did" -> ((s, dir) => {
       val ev = load(s, dir, "events")
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
       val mid = ev.groupBy().agg(expr("(min(us) + max(us)) div 2").as("mid"))
       val cells = ev.crossJoin(broadcast(mid))
         .select(
@@ -2199,8 +2098,8 @@ object EventWindows {
         .withColumn("r0", coalesce(sum(col("m")).over(wCum), lit(0L)) + 1)
         .groupBy("event_type")
         .agg(sum(col("m")).as("n_users"),
-          sum(col("c").cast("decimal(38,0)") * col("m")).as("s"),
-          sum(col("c").cast("decimal(38,0)") * col("m") *
+          sum(hugeint(col("c")) * col("m")).as("s"),
+          sum(hugeint(col("c")) * col("m") *
             (lit(2) * col("r0") + col("m") - 1)).as("t2"))
         .select(col("event_type"), col("n_users"),
           round((col("t2").cast("double") -
@@ -2238,7 +2137,7 @@ object EventWindows {
       val B = 200
       val base = load(s, dir, "events")
         .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"),
+          cents(col("value")).as("c"),
           (graft.Exact.hash32(col("event_id").cast("string")) %
             2147483647L).as("h"))
         .localCheckpoint()
@@ -2330,23 +2229,17 @@ object EventWindows {
       val daily = load(s, dir, "events")
         .select(col("event_type"), to_date(col("ts")).as("d"))
         .groupBy("event_type", "d").agg(count(lit(1)).as("c"))
-      val rng = daily.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-      val spine = rng.select(col("event_type"),
-        explode(sequence(col("mn"), col("mx"))).as("d"))
-      val full = spine.join(daily, Seq("event_type", "d"), "left")
-        .select(col("event_type"), col("d"),
-          coalesce(col("c"), lit(0L)).as("c"))
+      val full = zeroFill(daily, "c")
       val wOrd = Window.partitionBy("event_type").orderBy("d")
       val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val pre = full
         .withColumn("k", row_number().over(wOrd).cast("long"))
         .withColumn("s1", sum("c").over(wCum))
         .withColumn("s2",
-          sum(col("c").cast("decimal(38,0)") * col("c")).over(wCum))
+          sum(hugeint(col("c")) * col("c")).over(wCum))
       val tot = full.groupBy("event_type")
         .agg(count(lit(1)).as("dd"), sum("c").as("t1"),
-          sum(col("c").cast("decimal(38,0)") * col("c")).as("t2"))
+          sum(hugeint(col("c")) * col("c")).as("t2"))
       val cost =
         (col("s2").cast("double") - col("s1").cast("double") *
           col("s1").cast("double") / col("k").cast("double")) +
@@ -2395,17 +2288,9 @@ object EventWindows {
     // broadcast; folds ride types×days frames.
     "ev_impact" -> ((s, dir) => {
       val pivot = lit("2024-01-16").cast("date")
-      val d = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("sc"))
+      val d = dailyCents(s, dir)
         .localCheckpoint() // spine + pre-means + both folds ride it
-      val spine = d.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("event_type"),
-          explode(sequence(col("mn"), col("mx"))).as("d"))
-      val f = spine.join(d, Seq("event_type", "d"), "left")
-        .na.fill(0L, Seq("sc"))
+      val f = zeroFill(d, "sc")
         .withColumn("dow",
           pmod(datediff(col("d"), lit("1970-01-01").cast("date")), lit(7)))
       val pre = f.where(col("d") < pivot)
@@ -2467,17 +2352,7 @@ object EventWindows {
     // FULL window's |diff| distribution, so a causal processor cannot
     // rank early pairs until the stream closes (the ev_cusum_cp class).
     "ev_wilcoxon_sr" -> ((s, dir) => {
-      val daily = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("v"))
-      val rng = daily.groupBy("event_type")
-        .agg(min("d").as("mn"), max("d").as("mx"))
-      val spine = rng.select(col("event_type"),
-        explode(sequence(col("mn"), col("mx"))).as("d"))
-      val full = spine.join(daily, Seq("event_type", "d"), "left")
-        .select(col("event_type"), col("d"),
-          coalesce(col("v"), lit(0L)).as("v"))
+      val full = zeroFill(dailyCents(s, dir).withColumnRenamed("sc", "v"), "v")
       val wLag = Window.partitionBy("event_type").orderBy("d")
       val diffs = full.withColumn("prev", lag("v", 7).over(wLag))
         .where(col("prev").isNotNull && col("v") =!= col("prev"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Exact.hugeint
 import graft.Tables.load
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -409,10 +410,10 @@ object Graph {
       // while DuckDB stays exact — the ev_anomaly "fail loudly, never
       // silently diverge" discipline. Widening only the sum keeps the
       // per-node scores long (IntegralDivide output) everywhere else.
-      def dsum(c: String): Column = sum(col(c).cast("decimal(38,0)"))
+      def dsum(c: String): Column = sum(hugeint(col(c)))
       def fill0(df: DataFrame, c: String): DataFrame =
         df.select(col("node"),
-          coalesce(col(c), lit(0).cast("decimal(38,0)")).as(c))
+          coalesce(col(c), hugeint(lit(0))).as(c))
       var auth = nodes.select(col("node"), lit(HitsUnit).as("a"))
       var hub: DataFrame = null
       for (_ <- 1 to HitsIters) {
@@ -449,14 +450,13 @@ object Graph {
         .unionAll(e.select(col("pb").as("x"), col("pa").as("y")))
         .localCheckpoint()
       val deg = sym.groupBy(col("x").as("node")).agg(count(lit(1)).as("deg"))
-      val d38 = (x: Column) => x.cast("decimal(38,0)")
       val g = sym
         .join(deg.select(col("node").as("x"), col("deg").as("dx")), "x")
         .join(deg.select(col("node").as("y"), col("deg").as("dy")), "y")
         .groupBy().agg(count(lit(1)).as("n"),
-          sum(d38(col("dx"))).as("sx"),
-          sum(d38(col("dx")) * col("dx")).as("sxx"),
-          sum(d38(col("dx")) * col("dy")).as("sxy"))
+          sum(hugeint(col("dx"))).as("sx"),
+          sum(hugeint(col("dx")) * col("dx")).as("sxx"),
+          sum(hugeint(col("dx")) * col("dy")).as("sxy"))
       val den = col("n") * col("sxx") - col("sx") * col("sx")
       g.select(col("n").as("n_pairs"),
         round(when(den > 0,

@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.Exact.{cents, hugeint}
 import graft.Tables.load
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,14 +54,12 @@ object Preference {
   /** DSIR selection size (top-k docs by importance weight). */
   private[graft] val DsirK = 100
 
-  private def dec38(x: Column): Column = x.cast("decimal(38,0)")
-
   /** Exact per-(user, type) engagement in integer cents — the comparison
     * base both pref_ ops derive preferences from. One keyed agg. */
-  private def cents(s: SparkSession, dir: String): DataFrame =
+  private def userTypeCents(s: SparkSession, dir: String): DataFrame =
     load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+        cents(col("value")).as("c"))
       .groupBy("user_id", "event_type").agg(sum("c").as("c"))
 
   /** Directed win counts: per user, each unordered pair of event types both
@@ -71,7 +70,7 @@ object Preference {
     * the dd_minhash_lsh lesson). Per-user fan-out is ≤ K²/2 pairs, so the
     * join output is ≤ users·K²/2 — linear in users, never in events. */
   private def winMatrix(s: SparkSession, dir: String): DataFrame = {
-    val ce = cents(s, dir).localCheckpoint()
+    val ce = userTypeCents(s, dir).localCheckpoint()
     val a = ce.select(col("user_id"), col("event_type").as("ta"), col("c").as("ca"))
     val b = ce.select(col("user_id"), col("event_type").as("tb"), col("c").as("cb"))
     a.join(b, Seq("user_id"))
@@ -218,7 +217,7 @@ object Preference {
       val mu = nuc.groupBy("unit").agg(sum("n").as("m"))
       val du = nuc.join(mu, "unit").where(col("m") >= 2)
         .groupBy("unit", "m")
-        .agg(sum(dec38(col("n")) * (col("m") - col("n"))).as("sd"))
+        .agg(sum(hugeint(col("n")) * (col("m") - col("n"))).as("sd"))
         .select(col("unit"),
           (col("sd").cast("double") / (col("m") - 1).cast("double")).as("dou"))
       val np = mu.where(col("m") >= 2)
@@ -232,7 +231,7 @@ object Preference {
         .groupBy("label").agg(sum("n").as("c"))
         .crossJoin(broadcast(np))
         .groupBy("np", "n_pairable")
-        .agg(sum(dec38(col("c")) * (col("np") - col("c"))).as("sde"))
+        .agg(sum(hugeint(col("c")) * (col("np") - col("c"))).as("sde"))
         .select(col("np"), col("n_pairable"),
           (col("sde").cast("double") /
             (col("np").cast("double") * (col("np") - 1).cast("double"))).as("de"))
@@ -262,7 +261,7 @@ object Preference {
       val np = pair.select("unit").distinct()
         .agg(count(lit(1)).as("np"))
       val pou = pair.groupBy("unit", "m")
-        .agg(sum(dec38(col("n")) * (col("n") - 1)).as("sp"))
+        .agg(sum(hugeint(col("n")) * (col("n") - 1)).as("sp"))
         .select(col("unit"), (col("sp").cast("double") /
           (col("m") * (col("m") - 1)).cast("double")).as("pou"))
       val spo = pou.agg(aggregate(

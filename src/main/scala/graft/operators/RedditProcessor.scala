@@ -70,8 +70,9 @@ object RedditProcessor {
     * CountVectorizer(minDF 2, maxDF 0.95, TfidfVectorizer's pruning at
     * redditProcessor.py:103) → IDF into `features`. Returns the fitted model
     * and its vocabulary. maxDF is passed in fraction form (< 1.0 means a
-    * fraction of the doc count) so no eager count() is needed to size it;
-    * the CountVectorizer and IDF fits each read the corpus once, so callers
+    * fraction of the doc count), which does not spare the count:
+    * CountVectorizer.fit runs its own count() of the input to size it.
+    * The CountVectorizer and IDF fits each read the corpus, so callers
     * persist it. */
   private[graft] def fitFeatures(corpus: DataFrame): (PipelineModel, Array[String]) = {
     val fm = new Pipeline().setStages(Array(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Exact.dec
+import graft.Exact.{cents, dec, hugeint}
 import graft.Tables.load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -113,20 +113,19 @@ object Relational3 {
     * double trees are IDENTICAL to the pre-refactor a21 inline form
     * (the rateZ discipline: a helper moves code, never bits). */
   private def welchPairs(s: SparkSession, dir: String): DataFrame = {
-    val dec38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
     val st = load(s, dir, "events")
       .select(col("event_type"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+        cents(col("value")).as("c"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"),
-        sum(dec38(col("c")) * col("c")).as("s2"))
+        sum(hugeint(col("c")) * col("c")).as("s2"))
     val b = st.select(col("event_type").as("type_b"), col("n").as("nb"),
       col("s1").as("s1b"), col("s2").as("s2b"))
     def m(n: org.apache.spark.sql.Column, s1: org.apache.spark.sql.Column) =
       s1.cast("double") / n.cast("double")
     def v(n: org.apache.spark.sql.Column, s1: org.apache.spark.sql.Column,
           s2: org.apache.spark.sql.Column) =
-      (dec38(n) * s2 - dec38(s1) * s1).cast("double") /
+      (hugeint(n) * s2 - hugeint(s1) * s1).cast("double") /
         (n.cast("double") * (n.cast("double") - 1))
     st.crossJoin(broadcast(b))
       .where(col("event_type") < col("type_b"))
@@ -137,6 +136,15 @@ object Relational3 {
         (v(col("nb"), col("s1b"), col("s2b")) / col("nb").cast("double"))
           .as("vb"))
   }
+
+  /** The per-type value histogram the rank and distribution tests read:
+    * (event_type, c, m) with m the multiplicity of the exact cents value
+    * c. Ranks, CDFs and medians then ride distinct values, not events. */
+  private def centsHistogram(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "events")
+      .select(col("event_type"), cents(col("value")).as("c"))
+      .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+
   private val ErWindow = 5 // er_fuzzy_match sorted-neighborhood width
   private val ErMaxDist = 2 // er_fuzzy_match Levenshtein accept threshold
   private val SkyBucketW = 1000L // q_skyline price-bucket width, cents
@@ -586,12 +594,11 @@ object Relational3 {
     "samp_neyman" -> ((s, dir) => {
       val ev = load(s, dir, "events")
         .select(col("event_type"), col("event_id"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .localCheckpoint()
-      val d38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val stats = ev.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("c").as("cs"),
-          sum(d38(col("c")) * col("c")).as("css"))
+          sum(hugeint(col("c")) * col("c")).as("css"))
         // n = 1 guard (round-12, advisor-flagged): a single-event stratum
         // makes the sample variance 0/0 = NaN, which poisons the weight
         // TOTAL and hence every stratum's allocation — and asymmetrically
@@ -599,7 +606,7 @@ object Relational3 {
         // Degenerate strata carry no dispersion signal: weight 0 (they
         // still receive the greatest(1,·) floor allocation below).
         .withColumn("sigma", when(col("n") > 1, sqrt(
-          (d38(col("n")) * col("css") - d38(col("cs")) * col("cs"))
+          (hugeint(col("n")) * col("css") - hugeint(col("cs")) * col("cs"))
             .cast("double") /
             (col("n").cast("double") * (col("n") - 1).cast("double"))))
           .otherwise(lit(0.0)))
@@ -806,18 +813,15 @@ object Relational3 {
     // TestdataContractSpec); the final ratio is one identical double
     // expression, round(6).
     "a16_gini" -> ((s, dir) => {
-      val grp = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+      val grp = centsHistogram(s, dir)
       val wCum = Window.partitionBy("event_type").orderBy("c")
         .rowsBetween(Window.unboundedPreceding, -1)
       grp
         .withColumn("r0", coalesce(sum(col("m")).over(wCum), lit(0L)) + 1)
         .groupBy("event_type")
         .agg(sum(col("m")).as("n"),
-          sum(col("c").cast("decimal(38,0)") * col("m")).as("s"),
-          sum(col("c").cast("decimal(38,0)") * col("m") *
+          sum(hugeint(col("c")) * col("m")).as("s"),
+          sum(hugeint(col("c")) * col("m") *
             (lit(2) * col("r0") + col("m") - 1)).as("t2"))
         .select(col("event_type"), col("n"),
           round((col("t2").cast("double") -
@@ -839,10 +843,7 @@ object Relational3 {
     // (type, cents) aggregate; the ×(types−1) pair explode and the rank
     // window run on the value-domain-scale histogram frame.
     "a17_mwu" -> ((s, dir) => {
-      val h = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+      val h = centsHistogram(s, dir)
       val tys = h.select(col("event_type").as("t2")).distinct()
       val paired = h.crossJoin(broadcast(tys))
         .where(col("t2") =!= col("event_type"))
@@ -854,15 +855,14 @@ object Relational3 {
           sum(when(col("own") === col("type_b"), col("m")).otherwise(0L)).as("cb"))
       val wCum = Window.partitionBy("type_a", "type_b").orderBy("c")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val agg = paired
         .withColumn("r0", coalesce(sum(col("ca") + col("cb")).over(wCum), lit(0L)) + 1)
         .groupBy("type_a", "type_b")
         .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
-          sum(dec(col("ca")) * (lit(2) * col("r0") + col("ca") + col("cb") - 1))
+          sum(hugeint(col("ca")) * (lit(2) * col("r0") + col("ca") + col("cb") - 1))
             .as("r2a"),
-          sum(dec(col("ca") + col("cb")) * dec(col("ca") + col("cb")) *
-            dec(col("ca") + col("cb")) - dec(col("ca") + col("cb"))).as("t3"))
+          sum(hugeint(col("ca") + col("cb")) * hugeint(col("ca") + col("cb")) *
+            hugeint(col("ca") + col("cb")) - hugeint(col("ca") + col("cb"))).as("t3"))
       val u2 = col("r2a").cast("double") -
         col("na").cast("double") * (col("na").cast("double") + 1)
       val n = col("na").cast("double") + col("nb").cast("double")
@@ -890,10 +890,7 @@ object Relational3 {
     // (type, cents) aggregate; pair explode + CDF windows on the
     // value-domain-scale histogram frame.
     "a18_ks" -> ((s, dir) => {
-      val h = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+      val h = centsHistogram(s, dir)
       val tys = h.select(col("event_type").as("t2")).distinct()
       val paired = h.crossJoin(broadcast(tys))
         .where(col("t2") =!= col("event_type"))
@@ -907,7 +904,6 @@ object Relational3 {
         .rowsBetween(Window.unboundedPreceding, 0)
       val wAll = Window.partitionBy("type_a", "type_b")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val naD = col("na").cast("double")
       val nbD = col("nb").cast("double")
       paired
@@ -917,7 +913,7 @@ object Relational3 {
         .withColumn("nb", sum(col("cb")).over(wAll))
         .groupBy("type_a", "type_b")
         .agg(max(col("na")).as("na"), max(col("nb")).as("nb"),
-          max(abs(dec(col("cuma")) * col("nb") - dec(col("cumb")) * col("na")))
+          max(abs(hugeint(col("cuma")) * col("nb") - hugeint(col("cumb")) * col("na")))
             .as("mx"))
         .select(col("type_a"), col("type_b"), col("na").as("n_a"),
           col("nb").as("n_b"),
@@ -943,10 +939,7 @@ object Relational3 {
     // (type, cents) agg, ×(types−1) broadcast pair explode, histogram-
     // frame windows.
     "a35_cvm" -> ((s, dir) => {
-      val h = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+      val h = centsHistogram(s, dir)
       val tys = h.select(col("event_type").as("t2")).distinct()
       val paired = h.crossJoin(broadcast(tys))
         .where(col("t2") =!= col("event_type"))
@@ -960,8 +953,7 @@ object Relational3 {
         .rowsBetween(Window.unboundedPreceding, 0)
       val wAll = Window.partitionBy("type_a", "type_b")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val dd = (dec(col("cuma")) * col("nb") - dec(col("cumb")) * col("na"))
+      val dd = (hugeint(col("cuma")) * col("nb") - hugeint(col("cumb")) * col("na"))
         .cast("double")
       val term = (col("ca") + col("cb")).cast("double") * (dd * dd)
       val naD = col("na").cast("double")
@@ -996,10 +988,7 @@ object Relational3 {
     // terms go to double before the c-sorted fold, one final division,
     // round(6). Scale: the a18_ks histogram shape exactly.
     "a36_ad2" -> ((s, dir) => {
-      val h = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+      val h = centsHistogram(s, dir)
       val tys = h.select(col("event_type").as("t2")).distinct()
       val paired = h.crossJoin(broadcast(tys))
         .where(col("t2") =!= col("event_type"))
@@ -1013,8 +1002,7 @@ object Relational3 {
         .rowsBetween(Window.unboundedPreceding, 0)
       val wAll = Window.partitionBy("type_a", "type_b")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val dec = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val dd = (dec(col("cuma")) * col("nb") - dec(col("cumb")) * col("na"))
+      val dd = (hugeint(col("cuma")) * col("nb") - hugeint(col("cumb")) * col("na"))
         .cast("double")
       val bD = (col("cuma") + col("cumb")).cast("double")
       val nD = (col("na") + col("nb")).cast("double")
@@ -1056,7 +1044,7 @@ object Relational3 {
     "q_skyline" -> ((s, dir) => {
       val p = load(s, dir, "part")
         .select(col("p_partkey"),
-          floor(col("p_retailprice") * 100 + lit(0.5)).cast("long").as("pc"),
+          cents(col("p_retailprice")).as("pc"),
           col("p_size").cast("long").as("sz"))
         .withColumn("b", expr(s"pc div $SkyBucketW"))
       val bmax = p.groupBy("b").agg(max("sz").as("bm"))
@@ -1103,7 +1091,7 @@ object Relational3 {
       val rT = cells.groupBy("event_type").agg(sum("o").as("r"))
       val cT = cells.groupBy("seg").agg(sum("o").as("ct"))
       val nT = cells.groupBy().agg(sum("o").as("n"))
-      val e = (col("r").cast("decimal(38,0)") * col("ct")).cast("double") /
+      val e = (hugeint(col("r")) * col("ct")).cast("double") /
         col("n").cast("double")
       cells.join(broadcast(rT), "event_type")
         .join(broadcast(cT), "seg")
@@ -1131,10 +1119,9 @@ object Relational3 {
       val cT = cells.groupBy("seg").agg(sum("o").as("ct"))
       val dims = cells.groupBy().agg(sum("o").as("n"),
         countDistinct("event_type").as("nr"), countDistinct("seg").as("nc"))
-      val dec38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val num = dec38(col("n")) * col("o") - dec38(col("r")) * col("ct")
+      val num = hugeint(col("n")) * col("o") - hugeint(col("r")) * col("ct")
       val term = (num * num).cast("double") /
-        (dec38(col("n")) * col("r") * col("ct")).cast("double")
+        (hugeint(col("n")) * col("r") * col("ct")).cast("double")
       cells.join(broadcast(rT), "event_type")
         .join(broadcast(cT), "seg")
         .crossJoin(broadcast(dims))
@@ -1190,13 +1177,9 @@ object Relational3 {
     // between/within split uses the expanded identity Σn_i(z̄_i−z̄)² =
     // Σs1_i²/n_i − S1²/N so no per-group grand-mean join is needed.
     "a22_levene_bf" -> ((s, dir) => {
-      val d38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val wCum = Window.partitionBy("event_type").orderBy("c")
         .rowsBetween(Window.unboundedPreceding, 0)
-      val h = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+      val h = centsHistogram(s, dir)
         .withColumn("cum", sum("m").over(wCum))
         .localCheckpoint()
       val nt = h.groupBy("event_type").agg(max("cum").as("n"))
@@ -1206,8 +1189,8 @@ object Relational3 {
       val g = h.join(broadcast(med), "event_type")
         .select(col("event_type"), col("m"), abs(col("c") - col("med")).as("z"))
         .groupBy("event_type")
-        .agg(sum("m").as("n"), sum(d38(col("m")) * col("z")).as("s1d"),
-          sum(d38(col("m")) * col("z") * col("z")).as("s2d"))
+        .agg(sum("m").as("n"), sum(hugeint(col("m")) * col("z")).as("s1d"),
+          sum(hugeint(col("m")) * col("z") * col("z")).as("s2d"))
         .select(col("event_type"), col("n"), col("s1d").cast("long").as("s1"),
           col("s2d").cast("long").as("s2"))
       val tot = g.agg(sum("n").as("nn"), sum("s1").as("st1"),
@@ -1247,12 +1230,7 @@ object Relational3 {
     // doubled-rank substitution) folds in sorted type order on both
     // engines (the ir_mrr list_sum discipline).
     "a23_kruskal" -> ((s, dir) => {
-      val d38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
-      val h = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
-        .localCheckpoint()
+      val h = centsHistogram(s, dir).localCheckpoint()
       val mc = h.groupBy("c").agg(sum("m").as("mc")).localCheckpoint()
       val mm = mc.groupBy().agg(min("c").as("lo"), max("c").as("hi"))
       val withB = mc.crossJoin(broadcast(mm))
@@ -1272,11 +1250,11 @@ object Relational3 {
         .select("c", "r2")
       val g = h.join(rc, "c")
         .groupBy("event_type")
-        .agg(sum("m").as("n_i"), sum(d38(col("m")) * col("r2")).as("r2d"))
+        .agg(sum("m").as("n_i"), sum(hugeint(col("m")) * col("r2")).as("r2d"))
         .select(col("event_type"), col("n_i"),
           col("r2d").cast("long").as("rank2_sum"))
       val tie = mc.groupBy()
-        .agg(sum(d38(col("mc")) * col("mc") * col("mc") - col("mc")).as("t3d"),
+        .agg(sum(hugeint(col("mc")) * col("mc") * col("mc") - col("mc")).as("t3d"),
           sum("mc").as("n"))
         .select(col("t3d").cast("long").as("t3"), col("n"))
       val tot = g.agg(count(lit(1)).as("k"),
@@ -1307,13 +1285,12 @@ object Relational3 {
     // order-sensitive double reduction (Σ s_i²/n_i) folds in sorted
     // type order on both engines (the a22_levene_bf discipline).
     "a26_anova_f" -> ((s, dir) => {
-      val d38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val g = load(s, dir, "events")
         .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(d38(col("c"))).as("sd"),
-          sum(d38(col("c")) * col("c")).as("qd"))
+        .agg(count(lit(1)).as("n"), sum(hugeint(col("c"))).as("sd"),
+          sum(hugeint(col("c")) * col("c")).as("qd"))
         .select(col("event_type"), col("n"), col("sd").cast("long").as("s1"),
           col("qd").cast("long").as("q1"))
       val tot = g.agg(sum("n").as("nn"), sum("s1").as("st1"),
@@ -1342,7 +1319,7 @@ object Relational3 {
     "a25_spearman" -> ((s, dir) => {
       val j = load(s, dir, "events")
         .select(hour(col("ts")).cast("long").as("h"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .groupBy("h", "c").agg(count(lit(1)).as("m"))
         .localCheckpoint()
       val n1 = j.groupBy().agg(sum("m").as("n"))
@@ -1372,16 +1349,15 @@ object Relational3 {
           lit(2L) * (col("off") + coalesce(sum("mc").over(wC), lit(0L))) +
             col("mc") + 1)
         .select("c", "mc", "rc")
-      val d38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       def ctr(r: org.apache.spark.sql.Column) = r - col("n") - 1
       val sxx = rh.crossJoin(broadcast(n1))
-        .agg(sum(d38(col("mh")) * ctr(col("rh")) * ctr(col("rh"))).as("sxx"))
+        .agg(sum(hugeint(col("mh")) * ctr(col("rh")) * ctr(col("rh"))).as("sxx"))
       val syy = rc.crossJoin(broadcast(n1))
-        .agg(sum(d38(col("mc")) * ctr(col("rc")) * ctr(col("rc"))).as("syy"))
+        .agg(sum(hugeint(col("mc")) * ctr(col("rc")) * ctr(col("rc"))).as("syy"))
       val sxy = j.join(broadcast(rh.select("h", "rh")), "h")
         .join(rc.select("c", "rc"), "c")
         .crossJoin(broadcast(n1))
-        .agg(sum(d38(col("m")) * ctr(col("rh")) * ctr(col("rc"))).as("sxy"))
+        .agg(sum(hugeint(col("m")) * ctr(col("rh")) * ctr(col("rc"))).as("sxy"))
       // Output-type discipline (gr_hits pattern, Graph.scala:511): the
       // three sums accumulate decimal(38,0)/HUGEINT internally but the
       // OUTPUT columns are BIGINT — bound Σm·X'² ≤ n³ (doubled ranks,
@@ -1411,7 +1387,7 @@ object Relational3 {
     // derivation + one 9-row aggregate; the total rides a broadcast.
     "a20_benford" -> ((s, dir) => {
       val d = load(s, dir, "events")
-        .select(floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+        .select(cents(col("value")).as("c"))
         .where(col("c") >= 1)
         .select(substring(col("c").cast("string"), 1, 1).cast("int").as("digit"))
         .groupBy("digit").agg(count(lit(1)).as("n_d"))
@@ -1585,7 +1561,7 @@ object Relational3 {
     "prof_psi_value" -> ((s, dir) => {
       val ev = load(s, dir, "events")
         .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"),
+          cents(col("value")).as("c"),
           when(col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"), 1L)
             .otherwise(0L).as("ref"))
       val rng = ev.groupBy("event_type").agg(min("c").as("mn"), max("c").as("mx"))
@@ -1867,8 +1843,8 @@ object Relational3 {
           min(when(col("cum") * 100 >= col("n") * 95, col("q"))).as("hi"))
       li.join(broadcast(bounds), "l_returnflag")
         .groupBy(col("l_returnflag"), col("n"), col("lo"), col("hi"))
-        .agg(sum(greatest(least(col("q"), col("hi")), col("lo"))
-          .cast("decimal(38,0)")).as("wsum"))
+        .agg(sum(hugeint(greatest(least(col("q"), col("hi")), col("lo"))))
+          .as("wsum"))
         .select(col("l_returnflag"), col("n"),
           (col("lo").cast("double") / 100.0).as("lo_qty"),
           (col("hi").cast("double") / 100.0).as("hi_qty"),
@@ -1995,10 +1971,10 @@ object Relational3 {
         .select(col("l_returnflag"), q.as("q"))
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
-          sum(col("q").cast("decimal(38,0)")).cast("double").as("s1"),
-          sum((col("q") * col("q")).cast("decimal(38,0)")).cast("double").as("s2"),
-          sum((col("q") * col("q") * col("q")).cast("decimal(38,0)")).cast("double").as("s3"),
-          sum((col("q") * col("q") * col("q") * col("q")).cast("decimal(38,0)"))
+          sum(hugeint(col("q"))).cast("double").as("s1"),
+          sum(hugeint(col("q") * col("q"))).cast("double").as("s2"),
+          sum(hugeint(col("q") * col("q") * col("q"))).cast("double").as("s3"),
+          sum(hugeint(col("q") * col("q") * col("q") * col("q")))
             .cast("double").as("s4"))
         .select(col("l_returnflag"), col("n"),
           round(mean / 100.0, 6).as("mean_qty"),
@@ -2032,10 +2008,10 @@ object Relational3 {
         .select(col("l_returnflag"), q.as("q"))
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
-          sum(col("q").cast("decimal(38,0)")).cast("double").as("s1"),
-          sum((col("q") * col("q")).cast("decimal(38,0)")).cast("double").as("s2"),
-          sum((col("q") * col("q") * col("q")).cast("decimal(38,0)")).cast("double").as("s3"),
-          sum((col("q") * col("q") * col("q") * col("q")).cast("decimal(38,0)"))
+          sum(hugeint(col("q"))).cast("double").as("s1"),
+          sum(hugeint(col("q") * col("q"))).cast("double").as("s2"),
+          sum(hugeint(col("q") * col("q") * col("q"))).cast("double").as("s3"),
+          sum(hugeint(col("q") * col("q") * col("q") * col("q")))
             .cast("double").as("s4"))
         .select(col("l_returnflag"), col("n"),
           round(jb, 6).as("jb_stat"),
@@ -2056,13 +2032,12 @@ object Relational3 {
     // variance are excluded from the test on both sides (they carry no
     // variance information). Output is the one-row verdict frame.
     "a28_bartlett" -> ((s, dir) => {
-      val d38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val g = load(s, dir, "events")
         .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(d38(col("c"))).as("sc"),
-          sum(d38(col("c")) * col("c")).as("qc"))
+        .agg(count(lit(1)).as("n"), sum(hugeint(col("c"))).as("sc"),
+          sum(hugeint(col("c")) * col("c")).as("qc"))
         .where(col("n") > 1 &&
           col("n") * col("qc") - col("sc") * col("sc") > 0)
       val css = col("n") * col("qc") - col("sc") * col("sc") // n²·(n−1)·s²/n
@@ -2101,13 +2076,12 @@ object Relational3 {
     // on both engines; the pair frame is the k² groups-scale cross of a
     // broadcast 3-row frame (the ScaleDesignSpec crossJoin contract).
     "a30_tukey_hsd" -> ((s, dir) => {
-      val d38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val qv = round(col("l_quantity") * 100).cast("long")
       val g = load(s, dir, "lineitem")
         .select(col("l_returnflag").as("flag"), qv.as("q"))
         .groupBy("flag")
-        .agg(count(lit(1)).as("n"), sum(d38(col("q"))).as("sc"),
-          sum(d38(col("q")) * col("q")).as("qc"))
+        .agg(count(lit(1)).as("n"), sum(hugeint(col("q"))).as("sc"),
+          sum(hugeint(col("q")) * col("q")).as("qc"))
         .localCheckpoint() // MSW fold + both sides of the pair frame
       val wterm = (col("n") * col("qc") - col("sc") * col("sc"))
         .cast("double") / col("n").cast("double")
@@ -2153,7 +2127,7 @@ object Relational3 {
     "a31_mood_median" -> ((s, dir) => {
       val ev = load(s, dir, "events")
         .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .localCheckpoint() // median locate + cell counts both scan it
       val tgt = ev.agg(count(lit(1)).as("n"))
         .select(lit(50L).as("k"), expr("(n + 1) div 2").as("r"))
@@ -2199,10 +2173,7 @@ object Relational3 {
     // histogram-scale); the windows, median locate, deviate sums, and
     // fold all ride histogram- and types-scale frames.
     "a32_levene" -> ((s, dir) => {
-      def h = load(s, dir, "events")
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+      def h = centsHistogram(s, dir)
       val wCum = Window.partitionBy("event_type").orderBy("c")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.partitionBy("event_type")
@@ -2216,8 +2187,8 @@ object Relational3 {
         .select(col("event_type"), col("m"), w.as("w"))
         .groupBy("event_type")
         .agg(sum("m").as("nj"),
-          sum(col("w").cast("decimal(38,0)") * col("m")).as("s1"),
-          sum(col("w").cast("decimal(38,0)") * col("w") * col("m")).as("s2"))
+          sum(hugeint(col("w")) * col("m")).as("s1"),
+          sum(hugeint(col("w")) * col("w") * col("m")).as("s2"))
       val termB = col("s1").cast("double") * col("s1").cast("double") /
         col("nj").cast("double")
       val st = z.agg(count(lit(1)).as("k"), sum("nj").as("n"),
@@ -2275,9 +2246,9 @@ object Relational3 {
         .groupBy("f").agg(count(lit(1)).as("m"))
       val hb = hist.select(col("f").as("fb"), col("m").as("mb"))
       val sums = hist.agg(sum("m").as("n"),
-        sum(col("f").cast("decimal(38,0)") * col("m")).as("s"))
+        sum(hugeint(col("f")) * col("m")).as("s"))
       val md = hist.crossJoin(broadcast(hb))
-        .agg(sum(col("m").cast("decimal(38,0)") * col("mb") *
+        .agg(sum(hugeint(col("m")) * col("mb") *
           abs(col("f") - col("fb"))).as("md"))
       cat.crossJoin(broadcast(cov)).crossJoin(broadcast(sums))
         .crossJoin(broadcast(md))
@@ -2307,10 +2278,7 @@ object Relational3 {
     // over the aggregated types×days frame; everything after is
     // types-scale with 1-row broadcasts.
     "a34_friedman" -> ((s, dir) => {
-      val daily = load(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
-        .groupBy("event_type", "d").agg(sum("c").as("v"))
+      val daily = EventWindows.dailyCents(s, dir).withColumnRenamed("sc", "v")
       val kf = daily.select("event_type").distinct()
         .agg(count(lit(1)).as("k"))
       val comp = daily.groupBy("d").agg(count(lit(1)).as("kt"))
@@ -2326,9 +2294,9 @@ object Relational3 {
       val st = blocks.groupBy("event_type", "k")
         .agg(count(lit(1)).as("n"), sum("h").as("r2"))
       val a2 = blocks
-        .agg(sum(col("h").cast("decimal(38,0)") * col("h")).as("a2"))
+        .agg(sum(hugeint(col("h")) * col("h")).as("a2"))
       val nm = st.agg(sum(
-        (col("r2") - col("n") * (col("k") + 1)).cast("decimal(38,0)") *
+        hugeint(col("r2") - col("n") * (col("k") + 1)) *
           (col("r2") - col("n") * (col("k") + 1))).as("num"))
       val denD = (col("a2") -
         col("n") * col("k") * (col("k") + 1) * (col("k") + 1)).cast("double")
@@ -2385,14 +2353,13 @@ object Relational3 {
     // double → identical integer cross-engine. NULL when n ≤ 1. Scale:
     // one keyed agg; math on the types frame.
     "ev_power" -> ((s, dir) => {
-      val dec38 = (x: org.apache.spark.sql.Column) => x.cast("decimal(38,0)")
       val st = load(s, dir, "events")
         .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("c"))
+          cents(col("value")).as("c"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"),
-          sum(dec38(col("c")) * col("c")).as("s2"))
-      val v = (dec38(col("n")) * col("s2") - dec38(col("s1")) * col("s1"))
+          sum(hugeint(col("c")) * col("c")).as("s2"))
+      val v = (hugeint(col("n")) * col("s2") - hugeint(col("s1")) * col("s1"))
         .cast("double") /
         (col("n").cast("double") * (col("n").cast("double") - 1))
       val zz = (lit(1.96) + lit(0.8416)) * (lit(1.96) + lit(0.8416))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Exact.hugeint
 import graft.Tables.load
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1086,7 +1087,7 @@ object TextAnalysis {
         .groupBy("source", "term").agg(count(lit(1)).as("c"))
         .groupBy("source")
         .agg(sum(col("c")).as("n"), count(lit(1)).as("v"),
-          sum(col("c").cast("decimal(38,0)") * col("c")).as("s2d"))
+          sum(hugeint(col("c")) * col("c")).as("s2d"))
         .select(col("source"), col("n"), col("v"),
           col("s2d").cast("long").as("s2"))
         .select(col("source"), col("n").as("n_tokens"), col("v").as("n_types"),

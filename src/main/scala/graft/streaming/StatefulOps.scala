@@ -2,6 +2,7 @@ package graft.streaming
 
 import scala.reflect.runtime.universe.TypeTag
 
+import graft.Exact
 import graft.operators.EventWindows.{AnomMinN, AnomWin, AnomZ, EwmaWin, GapUs}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -441,7 +442,7 @@ object StatefulOps {
             .getOrElse(Vector.empty[Long])
           val out = Vector.newBuilder[Anomaly]
           for (ev <- rows.toVector.sortBy(e => (micros(e.ts), e.event_id))) {
-            val c = math.floor(ev.value * 100 + 0.5).toLong
+            val c = Exact.cents(ev.value)
             ring = (ring :+ c).takeRight(AnomWin)
             val n = ring.length.toLong
             // exact BigInt power sums — the batch DECIMAL(38,0) twin
@@ -493,7 +494,7 @@ object StatefulOps {
             require(us > lastUs || (us == lastUs && ev.event_id >= lastId),
               s"EWMA feed out of order for type '$key': ($us, ${ev.event_id}) " +
                 s"arrived after ($lastUs, $lastId)")
-            val c = math.floor(ev.value * 100 + 0.5).toLong
+            val c = Exact.cents(ev.value)
             ring = (ring :+ c).takeRight(EwmaWin)
             val s = ring.reverseIterator.foldLeft(BigInt(0))((acc, x) => acc * 2 + x)
             val d = (BigInt(1) << ring.length) - 1

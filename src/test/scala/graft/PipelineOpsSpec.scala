@@ -1877,6 +1877,34 @@ class PipelineOpsSpec extends AnyFunSuite {
       r.isNullAt(7) && r.isNullAt(8))
   }
 
+  test("dailyCents + zeroFill: gap day is 0, single-day type, half-cent values") {
+    // The shared daily series under adversarial input: "gap" skips Jan 2,
+    // which must surface with sc = 0 (not NULL, not missing); "single" has
+    // a one-day spine; the values sit on the half-cent boundary, where
+    // v·100 is inexact in binary (1.005·100 = 100.4999…, so it rounds
+    // down) — the helper must match floor(v·100 + 0.5) on the JVM.
+    val d = java.nio.file.Files.createTempDirectory("graft_daily").toString
+    import spark.implicits._
+    val evs = Seq(("gap", 1, 0.005), ("gap", 1, 1.005), ("gap", 3, 2.675),
+      ("single", 5, 1.005), ("single", 5, 0.015))
+    evs.zipWithIndex.map { case ((t, day, v), i) =>
+      (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-$day%02d 12:00:00"),
+        1L, t, v, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
+    val ew = operators.EventWindows
+    val got = ew.zeroFill(ew.dailyCents(spark, d), "sc")
+      .orderBy("event_type", "d").collect()
+      .map(r => (r.getString(0), r.get(1).toString, r.getLong(2))).toSeq
+    def c(v: Double) = math.floor(v * 100 + 0.5).toLong
+    assert(c(1.005) == 100L && c(0.005) == 1L, "the boundary is really inexact")
+    assert(got == Seq(
+      ("gap", "2024-01-01", c(0.005) + c(1.005)),
+      ("gap", "2024-01-02", 0L),
+      ("gap", "2024-01-03", c(2.675)),
+      ("single", "2024-01-05", c(1.005) + c(0.015))))
+  }
+
   test("a35_cvm: criterion recomputes from pooled per-pair samples") {
     val out = SparkEntry.queries("a35_cvm")(spark, dir).collect()
     val byType = Tables.load(spark, dir, "events")

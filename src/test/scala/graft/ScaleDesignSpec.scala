@@ -656,18 +656,24 @@ class ScaleDesignSpec extends AnyFunSuite {
     // either bucket first (the a15_quantile_2phase ladder) or join the
     // allowlist with a written boundedness argument.
     //
-    // Audited Window.orderBy sites (all 12 in src/main):
-    //   GlobalIndex:63        pid counts — one row per partition
-    //   EventWindows:367      ev_growth_acct week frame (m) — time-span
-    //   EventWindows:602      ev_powerusers active_days — day-span
-    //   EventWindows:656      ev_rfm bucket cum (bk) — ≤65537 adaptive
-    //   Retrieval:315,384     term/rank frames — vocab-scale & post-limit
-    //   Retrieval:375,402,417 rank windows AFTER .limit(k) — k rows
-    //   Relational3:486       q_skyline bucket offsets (b) — bucketed
-    //   Relational3:934       a15 $1000-bucket cum (bk) — domain/1000
-    //   Relational2:483       source histogram — low-cardinality
-    //   Graph (gr_degree_dist) CCDF over the degree histogram (deg) —
-    //                         ≤ √(4m) distinct degrees (Σdeg = 2m)
+    // Audited unpartitioned Window.orderBy sites (30 in src/main), named
+    // by query rather than line so they do not drift:
+    //   GlobalIndex.withRowIndex  pid counts — one row per partition
+    //   ev_growth_acct            week frame (m) — time-span
+    //   ev_powerusers             active_days — day-span
+    //   ev_kaplan_meier           dur histogram — day-span
+    //   ev_decile_lift            decile histogram — 10 values
+    //   ta_heaps_fit              doc buckets (b) — ≤ 21 by pmod
+    //   ir_rm3                    expansion-term weights — vocab-scale
+    //   ir_ndcg, ir_err, ir_bpref, ir_map, ir_pr11, ir_rbo, ir_rrf,
+    //   ir_borda (16 sites), samp_dsir
+    //                             rank/depth windows AFTER .limit(k) — k rows
+    //   samp_unimax               source histogram — low-cardinality
+    //   q_skyline                 bucket offsets (b) — bucketed
+    //   a23_kruskal, a25_spearman bucket offsets (bk) — ≤ 65537 adaptive
+    //                             buckets; a25's hour frame (h) — 24 values
+    //   gr_degree_dist            CCDF over the degree histogram (deg) —
+    //                             ≤ √(4m) distinct degrees (Σdeg = 2m)
     //
     // Round-12 hardening (judge demand + the builder's own round-11
     // self-flag): the allowlist is no longer name-only. Generic names

@@ -70,5 +70,12 @@ class SessionSpec extends AnyFunSuite {
       f => f.getParentFile.getName == "plans")
     assert(registrations.isEmpty,
       s"add custom functions to GraftExtensions.Functions, not in: $registrations")
+    def testOrCore(f: File): Boolean =
+      !f.getPath.contains("src/main/scala") || f.getName == "Core.scala"
+    val centsSites = Seq("floor(col(\"value\")" + " * 100", "* 100 + lit" + "(0.5)")
+      .flatMap(offenders(_, testOrCore)).distinct
+    assert(centsSites.isEmpty, s"encode cents with Exact.cents, not in: $centsSites")
+    val hugeintSites = offenders("cast(\"decimal(38,0)" + "\")", testOrCore)
+    assert(hugeintSites.isEmpty, s"widen with Exact.hugeint, not in: $hugeintSites")
   }
 }
