@@ -168,10 +168,10 @@ object Bench {
         s"[bench] warm-up $t failed: ${e.getClass.getName}: ${e.getMessage}") }
     }
     // JIT the ML + VADER + ImageIO stacks the same way: first use of
-    // Tokenizer/CountVectorizer/LDA/BLAS and the codegen'd VADER expression
+    // Tokenizer/the vocabulary pass/LDA/BLAS and the codegen'd VADER expression
     // otherwise bills several seconds of class-load + C2 compilation to
     // nlp_analysis, and ImageIO plugin discovery to mm_decode. The corpus
-    // here is a 40-row in-memory frame — NOT the sf dir — so Analytics'
+    // here is a 400-row in-memory frame — NOT the sf dir — so Analytics'
     // per-(session,dir) model cache is not pre-filled and the timed
     // nlp_analysis still pays its full fit.
     try warmMlPath(spark)

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * redditProcessor.py:56-156), Spark-first:
   *
   *   scan → clean (X1–X5 as column expressions) → VADER sentiment (custom
-  *   Catalyst expression) → TF-IDF (Tokenizer→StopWords→CountVectorizer
-  *   (minDF=2, maxDF=0.95)→IDF, matching TfidfVectorizer's pruning at
-  *   redditProcessor.py:103) → LDA (k=20, seed=42, redditProcessor.py:105)
+  *   Catalyst expression) → TF-IDF (Tokenizer→StopWords→term counts · idf
+  *   over a vocabulary pruned at minDF=2, maxDF=0.95, TfidfVectorizer's
+  *   pruning at redditProcessor.py:103) → LDA (k=20, seed=42,
+  *   redditProcessor.py:105)
   *   → per-doc topic distribution + per-batch top-10 topic words.
   *
   * Differences by design (SURVEY.md §7.4): the reference zips the LDA
@@ -58,9 +59,8 @@ object Analytics {
     * synthetic frame so the timed nlp_analysis finds the real fit's code
     * path compiled. */
   private[graft] def fit(corpus: DataFrame): Fit = {
-    // Same shape as RedditProcessor.analyze: the corpus (clean + VADER) is
-    // consumed by the CountVectorizer fit, the IDF fit, the transform and
-    // the LDA fit — persist it across those passes.
+    // The corpus (clean + VADER) is read by fitFeatures' vocabulary pass
+    // and by the transform the LDA fit consumes — persist it across both.
     // DETERMINISTIC LAYOUT before any fit (round-16): online-VB LDA samples
     // its mini-batches PER PARTITION (seeded Bernoulli keyed on partition
     // index), so the fitted topics follow the corpus' partition layout —

@@ -2,12 +2,14 @@ package graft.operators
 
 import graft.functions.{TextClean, VaderSentiment}
 import graft.plans.{GlobalIndex, GraftExtensions, VaderExpr}
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{Pipeline, PipelineModel, Transformer}
 import org.apache.spark.ml.clustering.{LDA, LDAModel}
-import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, IDF, StopWordsRemover, Tokenizer}
+import org.apache.spark.ml.feature.{CountVectorizerModel, ElementwiseProduct, StopWordsRemover, Tokenizer}
 import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** The reference's batch analytics entry point on reddit-shaped frames —
   * SURVEY.md §3.3 (redditProcessor.py:56-156) end to end:
@@ -29,12 +31,17 @@ import org.apache.spark.sql.functions._
   * (created_utc, id, text, score, subreddit) total order rather than an
   * implicit frame index.
   *
-  * Topic words are NOT reproducible between identical calls: the
-  * CountVectorizer vocabulary breaks equal-frequency ties in whatever
-  * order its aggregation returns them, and the online LDA fit samples its
-  * mini-batches per partition, so two calls on the same input can name
-  * different words (8 calls on one corpus gave 8 distinct topic sets).
-  * Row ids, text and sentiment are exact; pin those, never topic words.
+  * Topic words are reproducible between identical calls on one input
+  * layout: the vocabulary order is total (count, then term) and LDA is
+  * seeded, but the fits run on the cleaned union in its scan layout and
+  * online LDA samples its mini-batches per partition. So they hold per
+  * core count, and across core counts only where the input's split layout
+  * does not follow the core count. Measured on perfbench's 2 000-doc
+  * corpus: its two single-file parquet inputs gave one topic set at
+  * local[1] and local[4]; the same rows as in-memory frames (split into
+  * min(rows, cores) slices) gave a different set at local[4] than at
+  * local[1], each stable across calls. Row ids, text and sentiment are
+  * exact at any layout.
   *
   * The NLP steps after cleaning — sentiment columns, the TF-IDF fit, the
   * LDA estimator, the topic columns and the topic words — are defined
@@ -66,30 +73,69 @@ object RedditProcessor {
           .when(col("sentiment_score") < -VaderSentiment.LabelThreshold, "negative")
           .otherwise("neutral"))
 
-  /** A1 — TF-IDF on `text`: Tokenizer → StopWordsRemover →
-    * CountVectorizer(minDF 2, maxDF 0.95, TfidfVectorizer's pruning at
-    * redditProcessor.py:103) → IDF into `features`. Returns the fitted model
-    * and its vocabulary. maxDF is passed in fraction form (< 1.0 means a
-    * fraction of the doc count), which does not spare the count:
-    * CountVectorizer.fit runs its own count() of the input to size it.
-    * The CountVectorizer and IDF fits each read the corpus, so callers
-    * persist it. */
+  /** TfidfVectorizer's pruning (redditProcessor.py:103): a term is kept when
+    * its document frequency is at least MinDF docs and at most MaxDF · N. */
+  private val MinDF = 2L
+  private val MaxDF = 0.95
+  /** Spark CountVectorizer's default vocabulary cap, 2^18 terms. */
+  private val VocabCap = 1 << 18
+
+  /** A1 — TF-IDF on `text`: Tokenizer → StopWordsRemover → term counts
+    * (`tf`) over the pruned vocabulary → `features` = tf · idf. Returns the
+    * model and its vocabulary.
+    *
+    * The vocabulary comes from ONE Spark action over the tokens: each
+    * term's total count and document frequency `df`, and the doc count `N`.
+    * Terms with df < MinDF are dropped on the executors, df > MaxDF · N
+    * after the collect. The vocabulary is ordered by count descending, then term
+    * ascending — a total order, so the term → index map (and with it the
+    * seeded LDA init) never depends on task completion order — and capped at
+    * VocabCap. idf = log((N + 1) / (df + 1)), Spark IDFModel's arithmetic,
+    * applied as an element-wise product, so the model holds no estimator and
+    * no IDF pass runs. The model's transform is the only other read of the
+    * corpus; a caller that fits LDA on it should persist the corpus. */
   private[graft] def fitFeatures(corpus: DataFrame): (PipelineModel, Array[String]) = {
-    val fm = new Pipeline().setStages(Array(
+    val tokenize = Array[Transformer](
       new Tokenizer().setInputCol("text").setOutputCol("raw_tokens"),
-      new StopWordsRemover().setInputCol("raw_tokens").setOutputCol("tokens"),
-      new CountVectorizer().setInputCol("tokens").setOutputCol("tf")
-        .setMinDF(2.0).setMaxDF(0.95),
-      new IDF().setInputCol("tf").setOutputCol("features"))).fit(corpus)
-    val vocab = fm.stages(2).asInstanceOf[CountVectorizerModel].vocabulary
-    // Degenerate-corpus guard: an empty vocabulary (every term pruned by
-    // minDF/maxDF — e.g. one shared word across all docs falls to maxDF)
-    // only logs a warning in CountVectorizer, and a later ML stage then
-    // aborts with an opaque "requirement failed". Diagnose it here; the
-    // reference crashes identically
+      new StopWordsRemover().setInputCol("raw_tokens").setOutputCol("tokens"))
+    val tokens = tokenize.foldLeft(corpus.select("text"))((df, t) => t.transform(df))
+    // Per partition: term → (count, df) plus the doc count under key None;
+    // one reduceByKey merges them.
+    val stats = tokens.select("tokens").rdd.mapPartitions { rows =>
+      val acc = mutable.HashMap.empty[String, Array[Long]] // count, df, last doc seen
+      var docs = 0L
+      rows.foreach { r =>
+        docs += 1
+        r.getSeq[String](0).foreach { t =>
+          val a = acc.getOrElseUpdate(t, Array(0L, 0L, 0L))
+          a(0) += 1
+          if (a(2) != docs) { a(1) += 1; a(2) = docs }
+        }
+      }
+      Iterator(Option.empty[String] -> (docs, 0L)) ++
+        acc.iterator.map { case (t, a) => Some(t) -> (a(0), a(1)) }
+    }.reduceByKey((x, y) => (x._1 + y._1, x._2 + y._2))
+      .filter { case (t, (_, df)) => t.isEmpty || df >= MinDF }
+      .collect()
+    val n = stats.collectFirst { case (None, (docs, _)) => docs }.getOrElse(0L)
+    val kept = stats
+      .collect { case (Some(t), (count, df)) if df <= MaxDF * n => (t, count, df) }
+      .sortBy { case (t, count, _) => (-count, t) }
+      .take(VocabCap)
+    // Degenerate-corpus guard: an empty vocabulary (every term pruned — e.g.
+    // one shared word across all docs falls to maxDF, and with N ≤ 2 docs
+    // MaxDF · N < MinDF prunes every term) would make a later ML stage abort
+    // with an opaque "requirement failed". The reference crashes identically
     // (sklearn raises on an empty vocabulary).
-    require(vocab.length >= 1,
-      s"corpus too small for topic modeling: vocabulary=${vocab.length} after minDF/maxDF pruning")
+    require(kept.nonEmpty,
+      s"corpus too small for topic modeling: vocabulary=0 after minDF/maxDF pruning of $n docs")
+    val vocab = kept.map(_._1)
+    val idf = Vectors.dense(kept.map { case (_, _, df) => math.log((n + 1.0) / (df + 1.0)) })
+    // Transformers only: Pipeline.fit assembles them without reading data.
+    val fm = new Pipeline().setStages(tokenize ++ Array[Transformer](
+      new CountVectorizerModel(vocab).setInputCol("tokens").setOutputCol("tf"),
+      new ElementwiseProduct().setScalingVec(idf).setInputCol("tf").setOutputCol("features")))
+      .fit(corpus)
     (fm, vocab)
   }
 
@@ -137,29 +183,27 @@ object RedditProcessor {
       .select(col("p_id").as("id"), col("created_utc"), col("subreddit"),
         col("score"), col("body").as("text"))
 
-    // (created_utc, id) is NOT total for comments — they inherit the parent
-    // post's id, so two comments on one post in the same second tie. Extend
-    // the order with the payload columns; remaining ties are fully identical
-    // rows, for which any row_id assignment yields the same output set.
-    // The index is assigned here, on the cleaned union, so the corpus'
-    // only data-scale exchange is GlobalIndex's range shuffle: VADER, the
-    // fits' tokenize/TF-IDF and the LDA transform all run above it in
-    // `spark.sql.shuffle.partitions` parallel tasks.
-    val corpus = withSentiment(GlobalIndex.withRowIndex(
-      p.unionByName(c).withColumn("text", TextClean.clean(col("text"))),
-      Seq(col("created_utc"), col("id"), col("text"), col("score"), col("subreddit")),
-      "__idx"))
+    val cleaned = p.unionByName(c).withColumn("text", TextClean.clean(col("text")))
 
-    // The corpus (scan → filter → union → clean → index → VADER) is consumed
-    // by CountVectorizer.fit, IDF.fit, the LDA fit and the final transform;
-    // without a persist each pass re-runs the regex chain and VADER scorer
-    // over every row.
-    corpus.persist()
+    // The two fits read only `text`: persist that, in the scan layout, and
+    // fit on it. The vocabulary pass fills the cache; the LDA fit reads it.
+    // The range shuffle and VADER run once, on the output path below.
+    val fitCorpus = cleaned.select("text").persist()
     try {
-      val (fm, vocab) = fitFeatures(corpus)
-      val vecs = fm.transform(corpus)
-      val model = lda.fit(vecs)
-      val analysis = topicFrame(model, vecs,
+      val (fm, vocab) = fitFeatures(fitCorpus)
+      val model = lda.fit(fm.transform(fitCorpus))
+      // (created_utc, id) is NOT total for comments — they inherit the parent
+      // post's id, so two comments on one post in the same second tie. Extend
+      // the order with the payload columns; remaining ties are fully identical
+      // rows, for which any row_id assignment yields the same output set.
+      // The index is assigned on the cleaned union, so the output's only
+      // data-scale exchange is GlobalIndex's range shuffle: VADER, TF-IDF and
+      // the LDA transform all run above it in `spark.sql.shuffle.partitions`
+      // parallel tasks.
+      val indexed = withSentiment(GlobalIndex.withRowIndex(cleaned,
+        Seq(col("created_utc"), col("id"), col("text"), col("score"), col("subreddit")),
+        "__idx"))
+      val analysis = topicFrame(model, fm.transform(indexed),
         Seq("id", "created_utc", "subreddit", "score", "text", "sentiment_score", "sentiment")
           .map(col),
         Seq(concat_ws("_", col("__idx"), lit(batchId)).as("row_id"), lit(batchId).as("batch_id")))
@@ -170,16 +214,13 @@ object RedditProcessor {
           lit(batchId).as("batch_id"))
         .orderBy("topic")
       (analysis, topics)
-    // The eager multi-pass phase (the two fits) is over. The returned frames
-    // are lazy: each ACTION a caller takes on them re-runs the corpus chain
-    // once — the range shuffle over scan+clean rows, the one-row-per-
-    // partition offsets, then VADER → TF-IDF → LDA transform in `n` parallel
-    // tasks above the last exchange. A caller that runs several actions (as
-    // StreamScale does) should persist the frames around its own
-    // consumption. We release here anyway: pinning the blocks for an
-    // unbounded caller lifetime is the worse default, and the finally also
-    // covers the failure paths (a fit throwing, the empty-vocabulary
-    // require) that would otherwise leak the cache for the session.
-    } finally corpus.unpersist()
+    // The returned frames are lazy and read no cache: each ACTION a caller
+    // takes on the analysis frame runs scan → clean → range shuffle →
+    // offsets → VADER → TF-IDF → LDA transform once. A caller that runs
+    // several actions (as StreamScale does) should persist the frames around
+    // its own consumption. The finally releases the fit corpus on every
+    // path, the failure paths (a fit throwing, the empty-vocabulary require)
+    // included.
+    } finally fitCorpus.unpersist()
   }
 }

@@ -127,7 +127,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
     // every larger corpus' topics. The sf1 corpus is the ReplicateSf ×10
     // replica of sf0.1 (50,000 docs) — not driver testdata — so the test
     // CANCELS (assume) rather than fails where the replica is absent;
-    // tools/sf10x_verify.sh documents the recipe.
+    // `runMain graft.ReplicateSf <sf0.1 dir> /tmp/sf1 10` builds it.
     assume(new java.io.File("/tmp/sf1/documents.parquet").exists,
       "/tmp/sf1 replica not present on this host")
     val topics = operators.Analytics.queries("nlp_topics")(spark, "/tmp/sf1")

@@ -105,23 +105,96 @@ class RedditProcessorSpec extends AnyFunSuite {
   }
 
   test("analyze rejects a corpus whose vocabulary minDF/maxDF prune to nothing") {
-    // "coffee" is in all 3 docs (over maxDF 0.95), every other word in one
-    // (under minDF 2): the vocabulary is empty. Three docs, not two: with
-    // two, maxDF 0.95 · 2 < minDF and CountVectorizer rejects its own
-    // parameters before pruning anything.
+    // Three docs: "coffee" is in all of them (over maxDF 0.95), every other
+    // word in one (under minDF 2), so the vocabulary is empty. One and two
+    // docs: maxDF 0.95 · N < minDF 2, so every term is pruned whatever it is.
     import spark.implicits._
     val (posts0, comments0) = fixture()
-    val posts = Seq(
+    val three = Seq(
       ("u1", "2024-01-01T10:00:00Z", "p1", 0, 1, "alpha", "melbourne", "coffee", "http://x"),
       ("u2", "2024-01-01T11:00:00Z", "p2", 0, 1, "beta", "sydney", "coffee", "http://x"),
       ("u3", "2024-01-01T12:00:00Z", "p3", 0, 1, "gamma", "perth", "coffee", "http://x"))
-      .toDF(posts0.columns: _*)
     val comments = comments0.limit(0)
     val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalArgumentException](
-      RedditProcessor.analyze(spark, posts, comments, "batch_e"))
-    assert(e.getMessage.contains("corpus too small for topic modeling"), e.getMessage)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0, "the failed fit leaked its corpus")
+    for (n <- Seq(3, 2, 1)) {
+      val posts = three.take(n).toDF(posts0.columns: _*)
+      val e = intercept[IllegalArgumentException](
+        RedditProcessor.analyze(spark, posts, comments, "batch_e"))
+      assert(e.getMessage.contains("corpus too small for topic modeling"), s"$n docs: ${e.getMessage}")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0, s"$n docs: the failed fit leaked its corpus")
+    }
+  }
+
+  /** Spark's CountVectorizer(minDF 2, maxDF 0.95) → IDF: the fit that
+    * `fitFeatures` replaces, kept here as its reference. */
+  private def sparkTfIdf(corpus: DataFrame) = {
+    import org.apache.spark.ml.Pipeline
+    import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, IDF, StopWordsRemover, Tokenizer}
+    val pm = new Pipeline().setStages(Array(
+      new Tokenizer().setInputCol("text").setOutputCol("raw_tokens"),
+      new StopWordsRemover().setInputCol("raw_tokens").setOutputCol("tokens"),
+      new CountVectorizer().setInputCol("tokens").setOutputCol("tf").setMinDF(2.0).setMaxDF(0.95),
+      new IDF().setInputCol("tf").setOutputCol("features"))).fit(corpus)
+    (pm, pm.stages(2).asInstanceOf[CountVectorizerModel].vocabulary)
+  }
+
+  private def featureBits(df: DataFrame): Map[Long, Seq[Long]] =
+    df.select("doc_id", "features").collect().map(r =>
+      r.getLong(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray.toSeq
+        .map(java.lang.Double.doubleToRawLongBits)).toMap
+
+  test("fitFeatures equals Spark's CountVectorizer + IDF: same vocabulary order, bit-identical features") {
+    import spark.implicits._
+    // 12 docs. Term w<j> (j = 1..9) is in docs 0..j, once each, plus j more
+    // times in doc 0: df = j + 1, count = 2j + 1, so every kept count is
+    // distinct. "shared" is in all 12 docs (df 12 > 0.95 · 12, pruned),
+    // w9 sits at df 10 (kept, ≤ 11.4), and each doc's own word has df 1
+    // (pruned); stop words are removed before counting.
+    val names = Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel", "india")
+    val docs = (0 until 12).map { i =>
+      val terms = names.zipWithIndex.flatMap { case (w, k) =>
+        val j = k + 1
+        if (i == 0) Seq.fill(j + 1)(w) else if (i <= j) Seq(w) else Nil
+      }
+      (i.toLong, (Seq("the", "shared", s"solo$i") ++ terms).mkString(" "))
+    }
+    val corpus = docs.toDF("doc_id", "text")
+    val (refModel, refVocab) = sparkTfIdf(corpus)
+    val (fm, vocab) = RedditProcessor.fitFeatures(corpus)
+    assert(vocab.toSeq == names.reverse, vocab.mkString(","))
+    assert(vocab.toSeq == refVocab.toSeq, s"${vocab.mkString(",")} vs ${refVocab.mkString(",")}")
+    val (got, want) = (featureBits(fm.transform(corpus)), featureBits(refModel.transform(corpus)))
+    assert(got.size == 12 && got == want)
+  }
+
+  test("fitFeatures keeps Spark's vocabulary set when counts tie") {
+    import spark.implicits._
+    // 40 terms, each in exactly 3 of 30 docs once: every count ties.
+    val docs = (0 until 30).map(i =>
+      (i.toLong, (0 until 40).filter(_ % 10 == i / 3).map(t => s"term$t").mkString("coffee ", " ", "")))
+    val corpus = docs.toDF("doc_id", "text")
+    val (_, vocab) = RedditProcessor.fitFeatures(corpus)
+    val (_, refVocab) = sparkTfIdf(corpus)
+    assert(vocab.nonEmpty && vocab.toSet == refVocab.toSet && vocab.length == refVocab.length)
+  }
+
+  test("analyze gives one topic-word set across repeated calls when many term counts tie") {
+    import spark.implicits._
+    val (posts0, comments0) = fixture()
+    // 48 posts and 48 comments over 60 terms; each term lands in 4 docs
+    // once, so all 60 counts tie (and "coffee", in every doc, is pruned).
+    def words(i: Int) = (0 until 60).filter(_ % 24 == i % 24).map(t => s"w$t").mkString(" ")
+    val posts = (0 until 48).map(i =>
+      ("u", f"2024-01-01T10:$i%02d:00Z", s"p$i", 0, i % 5, words(i), "perth", "coffee", "http://x"))
+      .toDF(posts0.columns: _*)
+    val comments = (0 until 48).map(i =>
+      (f"2024-01-01T11:$i%02d:00Z", s"p${i % 7}", s"c$i", "coffee " + words(i + 48), "perth", "t", i % 3))
+      .toDF(comments0.columns: _*)
+    val hashes = (1 to 5).map { _ =>
+      val (_, topics) = RedditProcessor.analyze(spark, posts, comments, "tie")
+      topics.select("topic_name").as[String].collect().sorted.mkString("\n").hashCode
+    }
+    assert(hashes.distinct.size == 1, hashes.mkString(","))
   }
 
   test("Analytics nlp_analysis and nlp_topics reject a corpus whose vocabulary is pruned empty") {
