@@ -161,6 +161,66 @@ object Exact {
     s"CAST(('0x' || substr(md5($expr), 1, 8)) AS UBIGINT)::BIGINT"
 }
 
+/** Candidate-pair building blocks shared by the near-dup, LSH,
+  * co-purchase and link-prediction queries. Each turns a bucket (or a
+  * neighbour set) collected into ONE array row into its pairs map-side:
+  * pair output costs Σ bucket² and the chain that built the buckets runs
+  * once, where a self-join would run it once per side (Spark does not
+  * reuse the exchange across self-join sides). */
+object Pairs {
+  /** Explode of `f(x, y)` over every i < j pair of `arr`, in index order
+    * (Scala's `combinations(2)`); a null or < 2-element array gives no
+    * row. */
+  def within(arr: Column)(f: (Column, Column) => Column): Column =
+    explode(flatten(transform(arr, (x, i) =>
+      transform(slice(arr, i + 2, size(arr)), y => f(x, y)))))
+
+  /** Explode of `struct(a = ids[0], b = d)` for every later id `d`: the
+    * star from a group's first member, which is its minimum when `ids` is
+    * sorted. A 1-element array gives no row. */
+  def star(ids: Column): Column =
+    explode(transform(slice(ids, lit(2), size(ids)),
+      d => struct(ids.getItem(0).as("a"), d.as("b"))))
+
+  /** One `(id, sig, band, key)` row per band of a `bands × bandBits`-bit
+    * signature column `sig`; `key` is that band's bits. */
+  def bandKeys(df: DataFrame, id: String, sig: String, bands: Int,
+      bandBits: Int): DataFrame = {
+    val mask = (1L << bandBits) - 1
+    df.select(col(id), col(sig),
+        explode(array((0 until bands).map(b => struct(
+          lit(b).as("band"),
+          shiftright(col(sig), b * bandBits).bitwiseAND(lit(mask))
+            .as("key"))): _*)).as("bk"))
+      .select(col(id), col(sig), col("bk.band").as("band"), col("bk.key").as("key"))
+  }
+
+  /** Distinct `(out._1 < out._2, hamming)` id pairs whose signatures
+    * differ in at most `maxHam` bits — the Manku/Jain/Sarma banded search.
+    * Pigeonhole-exact: `maxHam` bit flips touch at most `maxHam < bands`
+    * bands, so every such pair agrees exactly on at least one band, and
+    * candidates are only same-(band, key) bucket pairs, verified by
+    * `bit_count(xor)`. `out` names the two id columns, inside the explode
+    * as well, so each caller's plan carries its own column names. */
+  def hamming(df: DataFrame, id: String, sig: String, bands: Int, bandBits: Int,
+      maxHam: Long, out: (String, String)): DataFrame = {
+    require(maxHam < bands,
+      s"Hamming bound $maxHam needs more than $bands bands to be pigeonhole-exact")
+    val (a, b) = out
+    bandKeys(df, id, sig, bands, bandBits)
+      .groupBy("band", "key")
+      .agg(sort_array(collect_list(struct(col(id), col(sig)))).as("ds"))
+      .where(size(col("ds")) > 1)
+      .select(within(col("ds"))((x, y) => struct(
+        x.getField(id).as(a), y.getField(id).as(b),
+        x.getField(sig).bitwiseXOR(y.getField(sig)).as("xr"))).as("p"))
+      .select(col(s"p.$a").as(a), col(s"p.$b").as(b),
+        bit_count(col("p.xr")).cast("long").as("hamming"))
+      .where(col("hamming") <= maxHam)
+      .distinct()
+  }
+}
+
 /** A memo of one deterministic, expensive result per (session, sf dir) —
   * Dedup's component labels and Analytics' LDA fit. Keyed by session
   * identity: a fresh session must not receive a handle into a stopped

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Exact.{hash32, hash32Sql}
+import graft.Pairs
 import graft.Tables.load
 import graft.functions.VectorFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -126,11 +127,49 @@ object Dedup {
       .select(col("doc_id"),
         explode(array_distinct(VectorFns.shingles3(toks(col("text"))))).as("sh"))
 
+  /** The dd_simhash* oracles' SimHash votes (one `v$j` sum per bit over
+    * the token hashes `h`) and the bit fold over them. */
+  private val simVotesSql: String = (0 until SimBits)
+    .map(j => s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS v$j")
+    .mkString(",\n    ")
+  private val simBitsSql: String = (0 until SimBits)
+    .map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END").mkString(" + ")
+
+  /** The `sigv`/`sig`/`banded` CTEs over a `tok` CTE, shared by the
+    * dd_simhash_hamming and dd_simhash_components oracles: one
+    * (doc_id, simhash, band, key) row per band. */
+  private val simBandedCtesSql: String =
+    s"""sigv AS (
+       |  SELECT doc_id,
+       |    $simVotesSql
+       |  FROM tok GROUP BY doc_id),
+       |sig AS (SELECT doc_id, CAST($simBitsSql AS BIGINT) AS simhash FROM sigv),
+       |banded AS (
+       |  SELECT doc_id, simhash, band, (simhash >> (band * $SimBandBits)) & ${(1L << SimBandBits) - 1} AS key
+       |  FROM (SELECT doc_id, simhash, unnest(range($SimBands)) AS band FROM sig))""".stripMargin
+
   private val shingleSetSql: String =
     """SELECT DISTINCT doc_id, sh FROM (
       |  SELECT doc_id, unnest(list_transform(range(1, greatest(len(t) - 1, 1)),
       |         i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
       |  FROM (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents))""".stripMargin
+
+  /** (doc_id, simhash): the SimBits-bit SimHash signature of every doc,
+    * shared by the dd_simhash* queries. Bit j is the sign of the sum of
+    * ±1 votes from bit j of each token's [[graft.Exact.hash32]]; map-side
+    * except one groupBy. */
+  private[graft] def simhashSigs(s: SparkSession, dir: String): DataFrame = {
+    val tok = load(s, dir, "documents")
+      .select(col("doc_id"), explode(toks(col("text"))).as("token"))
+      .withColumn("h", hash32(col("token")))
+    val votes = (0 until SimBits).map(j =>
+      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
+        .as(s"v$j"))
+    val simhash = (0 until SimBits).map(j =>
+      when(col(s"v$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
+    tok.groupBy("doc_id").agg(votes.head, votes.tail: _*)
+      .select(col("doc_id"), simhash.as("simhash"))
+  }
 
   /** n-gram (3-shingle) Jaccard near-dups above JaccardTau — the LSH-
     * candidate-verified form, shared by `dd_ngram_jaccard` (which just adds
@@ -163,9 +202,7 @@ object Dedup {
     val cand = bands.groupBy("band", "bkt")
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
       .where(size(col("ids")) > 1)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+      .select(Pairs.within(col("ids"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()
     val sides = cand
@@ -234,8 +271,7 @@ object Dedup {
       .groupBy(col("k.kind"), col("k.key"))
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
       .where(size(col("ids")) > 1)
-      .select(explode(expr(
-        "transform(slice(ids, 2, size(ids)), d -> struct(ids[0] AS a, d AS b))")).as("e"))
+      .select(Pairs.star(col("ids")).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
     val edges = starEdges
       .unionByName(jaccardPairs(s, dir)
@@ -470,9 +506,8 @@ object Dedup {
       bands.groupBy("band", "bkt")
         .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
         .where(size(col("ids")) > 1)
-        .select(col("band"), explode(flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + 2, size(col("ids"))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+        .select(col("band"),
+          Pairs.within(col("ids"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
         .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
         .agg(countDistinct(col("band")).as("n_bands"))
         .orderBy("doc_a", "doc_b")
@@ -510,9 +545,7 @@ object Dedup {
         .groupBy("band", "bkt")
         .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
         .where(size(col("ids")) > 1)
-        .select(explode(flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + 2, size(col("ids"))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+        .select(Pairs.within(col("ids"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
         .select(col("p.a").as("doc_a"), col("p.b").as("doc_b")).distinct()
       val a = sigs.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
         col("sig").as("sig_a"))
@@ -534,19 +567,8 @@ object Dedup {
     }),
 
     // SimHash: per-token md5 hash; signature bit j is the sign of the sum of
-    // (±1) votes from bit j of each token hash. Map-side except one groupBy.
-    "dd_simhash" -> ((s, dir) => {
-      val tok = load(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("token"))
-        .withColumn("h", hash32(col("token")))
-      val votes = (0 until SimBits).map(j =>
-        sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-          .as(s"v$j"))
-      val sig = tok.groupBy("doc_id").agg(votes.head, votes.tail: _*)
-      val simhash = (0 until SimBits).map(j =>
-        when(col(s"v$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
-      sig.select(col("doc_id"), simhash.as("simhash")).orderBy("doc_id")
-    }),
+    // (±1) votes from bit j of each token hash (see simhashSigs).
+    "dd_simhash" -> ((s, dir) => simhashSigs(s, dir).orderBy("doc_id")),
 
     // SimHash near-duplicate PAIRS at Hamming distance <= SimMaxHam — the
     // Manku/Jain/Sarma (WWW 2007) banded search that makes dd_simhash's
@@ -554,45 +576,15 @@ object Dedup {
     // can touch at most SimMaxHam < SimBands bands, so every true
     // near-dup pair agrees exactly on >= 1 band — candidates are ONLY
     // same-(band, band-bits) bucket pairs, generated with the ann_lsh
-    // grouped shape (one scan, no self-join re-computation), then verified
-    // by bit_count(xor). At production scale the signature widens (64-bit,
+    // grouped shape (one scan, no self-join re-computation; Pairs.hamming),
+    // then verified by bit_count(xor). At production scale the signature widens (64-bit,
     // 4x16-bit bands = 65k buckets/band) so bucket occupancy — the Σ
     // bucket² pair cost — stays bounded; the 16-bit test signature keeps
     // the DuckDB oracle cheap while exercising the identical chain.
-    "dd_simhash_hamming" -> ((s, dir) => {
-      val tok = load(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("token"))
-        .withColumn("h", hash32(col("token")))
-      val votes = (0 until SimBits).map(j =>
-        sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-          .as(s"v$j"))
-      val sigW = tok.groupBy("doc_id").agg(votes.head, votes.tail: _*)
-      val simhash = (0 until SimBits).map(j =>
-        when(col(s"v$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
-      val sig = sigW.select(col("doc_id"), simhash.as("simhash"))
-      val bandMask = (1L << SimBandBits) - 1
-      val banded = sig.select(col("doc_id"), col("simhash"),
-        explode(array((0 until SimBands).map(b => struct(
-          lit(b).as("band"),
-          shiftright(col("simhash"), b * SimBandBits).bitwiseAND(lit(bandMask))
-            .as("key"))): _*)).as("bk"))
-        .select(col("doc_id"), col("simhash"),
-          col("bk.band").as("band"), col("bk.key").as("key"))
-      banded.groupBy("band", "key")
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash")))).as("ds"))
-        .where(size(col("ds")) > 1)
-        .select(explode(flatten(transform(col("ds"), (x, i) =>
-          transform(slice(col("ds"), i + 2, size(col("ds"))), y => struct(
-            x.getField("doc_id").as("doc_a"),
-            y.getField("doc_id").as("doc_b"),
-            x.getField("simhash").bitwiseXOR(y.getField("simhash")).as("xr"))))))
-          .as("p"))
-        .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-          bit_count(col("p.xr")).cast("long").as("hamming"))
-        .where(col("hamming") <= SimMaxHam)
-        .distinct()
-        .orderBy("doc_a", "doc_b")
-    }),
+    "dd_simhash_hamming" -> ((s, dir) =>
+      Pairs.hamming(simhashSigs(s, dir), "doc_id", "simhash", SimBands, SimBandBits,
+        SimMaxHam, ("doc_a", "doc_b"))
+        .orderBy("doc_a", "doc_b")),
 
     // SimHash near-duplicate CLASSES — the heavy-duplication scale form
     // of dd_simhash_hamming, with the SAME transitive closure. The
@@ -614,32 +606,14 @@ object Dedup {
     // computes); one output row per class: label, size, keeper — what a
     // 100 TB dedup actually materializes.
     "dd_simhash_components" -> ((s, dir) => {
-      val tok = load(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("token"))
-        .withColumn("h", hash32(col("token")))
-      val votes = (0 until SimBits).map(j =>
-        sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-          .as(s"v$j"))
-      val sigW = tok.groupBy("doc_id").agg(votes.head, votes.tail: _*)
-      val simhash = (0 until SimBits).map(j =>
-        when(col(s"v$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
-      val sig = sigW.select(col("doc_id"), simhash.as("simhash"))
-      val bandMask = (1L << SimBandBits) - 1
-      val banded = sig.select(col("doc_id"), col("simhash"),
-        explode(array((0 until SimBands).map(b => struct(
-          lit(b).as("band"),
-          shiftright(col("simhash"), b * SimBandBits).bitwiseAND(lit(bandMask))
-            .as("key"))): _*)).as("bk"))
-        .select(col("doc_id"), col("simhash"),
-          col("bk.band").as("band"), col("bk.key").as("key"))
+      val banded = Pairs.bandKeys(simhashSigs(s, dir), "doc_id", "simhash",
+        SimBands, SimBandBits)
       // (1) exact-signature groups: min-doc stars, Hamming 0 by identity
       val sgrp = banded.groupBy("band", "key", "simhash")
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
         .localCheckpoint() // stars + reps both ride this frame
       val exactStar = sgrp.where(size(col("ids")) > 1)
-        .select(explode(expr(
-          "transform(slice(ids, 2, size(ids)), d -> struct(ids[0] AS a, d AS b))"))
-          .as("e"))
+        .select(Pairs.star(col("ids")).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
       // (2) distinct-signature reps pairwise-verified per bucket — the
       // dd_simhash_hamming explode shape, but over content-distinct reps
@@ -649,11 +623,9 @@ object Dedup {
         .groupBy("band", "key")
         .agg(sort_array(collect_list(col("r"))).as("rs"))
         .where(size(col("rs")) > 1)
-        .select(explode(flatten(transform(col("rs"), (x, i) =>
-          transform(slice(col("rs"), i + 2, size(col("rs"))), y => struct(
-            x.getField("rep").as("a"), y.getField("rep").as("b"),
-            x.getField("simhash").bitwiseXOR(y.getField("simhash")).as("xr"))))))
-          .as("p"))
+        .select(Pairs.within(col("rs"))((x, y) => struct(
+          x.getField("rep").as("a"), y.getField("rep").as("b"),
+          x.getField("simhash").bitwiseXOR(y.getField("simhash")).as("xr"))).as("p"))
         .where(bit_count(col("p.xr")) <= SimMaxHam)
         .select(col("p.a").as("a"), col("p.b").as("b"))
       val edges = exactStar.unionByName(repPairs).distinct()
@@ -1153,88 +1125,54 @@ object Dedup {
          |FROM sc ORDER BY doc_a, doc_b""".stripMargin
     },
 
-    "dd_simhash" -> {
-      val votes = (0 until SimBits)
-        .map(j => s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS v$j")
-        .mkString(",\n    ")
-      val bits = (0 until SimBits)
-        .map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END").mkString(" + ")
+    "dd_simhash" ->
       s"""WITH tok AS (
-         |  SELECT doc_id, ${hash32Sql("token")} AS h FROM (
-         |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents)),
-         |sig AS (
-         |  SELECT doc_id,
-         |    $votes
-         |  FROM tok GROUP BY doc_id)
-         |SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM sig ORDER BY doc_id""".stripMargin
-    },
+        |  SELECT doc_id, ${hash32Sql("token")} AS h FROM (
+        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |    $simVotesSql
+        |  FROM tok GROUP BY doc_id)
+        |SELECT doc_id, CAST($simBitsSql AS BIGINT) AS simhash FROM sig ORDER BY doc_id""".stripMargin,
 
-    "dd_simhash_hamming" -> {
-      val votes = (0 until SimBits)
-        .map(j => s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS v$j")
-        .mkString(",\n    ")
-      val bits = (0 until SimBits)
-        .map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END").mkString(" + ")
-      val mask = (1L << SimBandBits) - 1
+    "dd_simhash_hamming" ->
       s"""WITH tok AS (
-         |  SELECT doc_id, ${hash32Sql("token")} AS h FROM (
-         |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents)),
-         |sigv AS (
-         |  SELECT doc_id,
-         |    $votes
-         |  FROM tok GROUP BY doc_id),
-         |sig AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM sigv),
-         |banded AS (
-         |  SELECT doc_id, simhash, band, (simhash >> (band * $SimBandBits)) & $mask AS key
-         |  FROM (SELECT doc_id, simhash, unnest(range($SimBands)) AS band FROM sig))
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |FROM banded a JOIN banded b
-         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= $SimMaxHam
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
+        |  SELECT doc_id, ${hash32Sql("token")} AS h FROM (
+        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents)),
+        |$simBandedCtesSql
+        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+        |FROM banded a JOIN banded b
+        |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.simhash, b.simhash)) <= $SimMaxHam
+        |ORDER BY doc_a, doc_b""".stripMargin,
 
-    "dd_simhash_components" -> {
-      val votes = (0 until SimBits)
-        .map(j => s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS v$j")
-        .mkString(",\n    ")
-      val bits = (0 until SimBits)
-        .map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END").mkString(" + ")
-      val mask = (1L << SimBandBits) - 1
+    "dd_simhash_components" ->
       s"""WITH RECURSIVE tok AS (
-         |  SELECT doc_id, ${hash32Sql("token")} AS h FROM (
-         |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents)),
-         |sigv AS (
-         |  SELECT doc_id,
-         |    $votes
-         |  FROM tok GROUP BY doc_id),
-         |sig AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM sigv),
-         |banded AS (
-         |  SELECT doc_id, simhash, band, (simhash >> (band * $SimBandBits)) & $mask AS key
-         |  FROM (SELECT doc_id, simhash, unnest(range($SimBands)) AS band FROM sig)),
-         |sgrp AS (
-         |  SELECT band, key, simhash, list_sort(list(doc_id)) AS ids
-         |  FROM banded GROUP BY 1, 2, 3),
-         |exact_star AS (
-         |  SELECT ids[1] AS a, unnest(ids[2:]) AS b FROM sgrp
-         |  WHERE len(ids) > 1),
-         |rep_pairs AS (
-         |  SELECT a.ids[1] AS a, b.ids[1] AS b
-         |  FROM sgrp a JOIN sgrp b
-         |    ON a.band = b.band AND a.key = b.key AND a.ids[1] < b.ids[1]
-         |  WHERE bit_count(xor(a.simhash, b.simhash)) <= $SimMaxHam),
-         |star AS (SELECT a, b FROM exact_star UNION SELECT a, b FROM rep_pairs),
-         |edges AS (SELECT a, b FROM star UNION SELECT b, a FROM star),
-         |nodes AS (SELECT DISTINCT a AS doc FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT doc, doc FROM nodes
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-         |comp AS (SELECT src AS doc_id, min(dst) AS lbl FROM reach GROUP BY src)
-         |SELECT lbl AS component, count(*) AS n_members, min(doc_id) AS keep_id
-         |FROM comp GROUP BY lbl ORDER BY component""".stripMargin
-    },
+        |  SELECT doc_id, ${hash32Sql("token")} AS h FROM (
+        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents)),
+        |$simBandedCtesSql,
+        |sgrp AS (
+        |  SELECT band, key, simhash, list_sort(list(doc_id)) AS ids
+        |  FROM banded GROUP BY 1, 2, 3),
+        |exact_star AS (
+        |  SELECT ids[1] AS a, unnest(ids[2:]) AS b FROM sgrp
+        |  WHERE len(ids) > 1),
+        |rep_pairs AS (
+        |  SELECT a.ids[1] AS a, b.ids[1] AS b
+        |  FROM sgrp a JOIN sgrp b
+        |    ON a.band = b.band AND a.key = b.key AND a.ids[1] < b.ids[1]
+        |  WHERE bit_count(xor(a.simhash, b.simhash)) <= $SimMaxHam),
+        |star AS (SELECT a, b FROM exact_star UNION SELECT a, b FROM rep_pairs),
+        |edges AS (SELECT a, b FROM star UNION SELECT b, a FROM star),
+        |nodes AS (SELECT DISTINCT a AS doc FROM edges),
+        |reach(src, dst) AS (
+        |  SELECT doc, doc FROM nodes
+        |  UNION
+        |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
+        |comp AS (SELECT src AS doc_id, min(dst) AS lbl FROM reach GROUP BY src)
+        |SELECT lbl AS component, count(*) AS n_members, min(doc_id) AS keep_id
+        |FROM comp GROUP BY lbl ORDER BY component""".stripMargin,
 
     "dd_components" ->
       s"""$componentsCteSql

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Exact.hugeint
+import graft.Pairs
 import graft.Tables.load
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -165,10 +166,8 @@ object Graph {
     val wLow = o.join(hiApex, Seq("lo"), "left_anti")
       .groupBy("lo")
       .agg(sort_array(collect_list(struct(col("khi"), col("hi")))).as("ns"))
-      .select(col("lo").as("u"), explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-          "transform(slice(ns, i + 2, size(ns) - i - 1), " +
-          "y -> struct(x.hi AS v, y.hi AS w))))")).as("p"))
+      .select(col("lo").as("u"), Pairs.within(col("ns"))((x, y) =>
+        struct(x.getField("hi").as("v"), y.getField("hi").as("w"))).as("p"))
       .select(col("u"), col("p.v").as("v"), col("p.w").as("w"))
     val oHi = o.join(hiApex, Seq("lo"), "left_semi")
     val wHi = oHi.as("w1").join(oHi.as("w2"),
@@ -268,10 +267,7 @@ object Graph {
       val subDeg = sub.groupBy("u").agg(count(lit(1)).as("d"))
       val pairs = sub.groupBy("u")
         .agg(sort_array(collect_set(col("v"))).as("ns"))
-        .select(explode(expr(
-          "flatten(transform(ns, (x, i) -> " +
-            "transform(slice(ns, i + 2, size(ns) - i - 1), " +
-            "y -> struct(x AS a, y AS b))))")).as("p"))
+        .select(Pairs.within(col("ns"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(count(lit(1)).as("n_common"))
         .where(col("n_common") >= LpMinCommon)
@@ -311,10 +307,7 @@ object Graph {
         .agg(sort_array(collect_set(col("v"))).as("ns"))
         .select(col("u").as("z"),
           (lit(1.0) / log(size(col("ns")).cast("double"))).as("w"),
-          explode(expr(
-            "flatten(transform(ns, (x, i) -> " +
-              "transform(slice(ns, i + 2, size(ns) - i - 1), " +
-              "y -> struct(x AS a, y AS b))))")).as("p"))
+          Pairs.within(col("ns"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
       val pairs = wedges
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(count(lit(1)).as("n_common"),

@@ -13,6 +13,7 @@ import javax.imageio.ImageIO
 // in-memory byte arrays.
 import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
+import graft.Pairs
 import graft.Tables.load
 import graft.functions.{Mp4, Png}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -444,44 +445,19 @@ object Multimodal {
     // Image near-duplicate pairs over the perceptual average-hash — the
     // multimodal leg of the dedup suite: two renders of (near-)identical
     // content land within a few aHash bits of each other, and a training
-    // pipeline drops one. SAME banded shape as dd_simhash_hamming (the
-    // pigeonhole guarantee transfers: 4 bands × 16 bits catch every pair
-    // at Hamming ≤ 3 exactly — a pair below the threshold must agree on
-    // at least one full band): signatures band into 4 exact-match keys,
-    // buckets group ONE scan chain (no self-join), intra-bucket pairs
-    // verify with bit_count(xor), distinct across bands. The heavy-
+    // pipeline drops one. SAME banded search as dd_simhash_hamming
+    // (Pairs.hamming; the pigeonhole guarantee transfers: 4 bands × 16
+    // bits catch every pair at Hamming ≤ 3 exactly — a pair below the
+    // threshold must agree on at least one full band). The heavy-
     // duplication caveat and its fix are dd_simhash_components' —
     // identical-image floods belong in the class form, not the pair
     // form. Scale: the decode is partition-wise (one reader per
     // partition); everything after rides the signatures frame (one row
     // per image), banded buckets bound each task's pair fan-out.
-    "mm_dup_images" -> ((s, dir) => {
-      val bandMask = (1L << 16) - 1
-      val banded = ahashFrame(s, dir)
-        .select(col("media_id"), col("sig"),
-          explode(array((0 until 4).map(b => struct(
-            lit(b).as("band"),
-            shiftright(col("sig"), b * 16).bitwiseAND(lit(bandMask))
-              .as("key"))): _*)).as("bk"))
-        .select(col("media_id"), col("sig"),
-          col("bk.band").as("band"), col("bk.key").as("key"))
-      banded.groupBy("band", "key")
-        .agg(sort_array(collect_list(struct(col("media_id"), col("sig"))))
-          .as("ds"))
-        .where(size(col("ds")) > 1)
-        .select(explode(flatten(transform(col("ds"), (x, i) =>
-          transform(slice(col("ds"), i + 2, size(col("ds"))), y => struct(
-            x.getField("media_id").as("media_a"),
-            y.getField("media_id").as("media_b"),
-            x.getField("sig").bitwiseXOR(y.getField("sig")).as("xr"))))))
-          .as("p"))
-        .select(col("p.media_a").as("media_a"),
-          col("p.media_b").as("media_b"),
-          bit_count(col("p.xr")).cast("long").as("hamming"))
-        .where(col("hamming") <= MaxImgHam)
-        .distinct()
-        .orderBy("media_a", "media_b")
-    }),
+    "mm_dup_images" -> ((s, dir) =>
+      Pairs.hamming(ahashFrame(s, dir), "media_id", "sig", 4, 16, MaxImgHam,
+        ("media_a", "media_b"))
+        .orderBy("media_a", "media_b")),
 
     "mm_resize" -> ((s, dir) => {
       import s.implicits._

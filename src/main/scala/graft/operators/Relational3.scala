@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Exact.{cents, dec, hugeint}
+import graft.Pairs
 import graft.Tables.load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -75,20 +76,18 @@ object Relational3 {
   private[graft] val MaxBasket = 2048
 
   /** Shared basket→ordered-pair explode for the rec_* family: ONE groupBy
-    * on the order key, then map-side generation of the (pa < pb) pairs
-    * from each order's sorted, `MaxBasket`-capped item set — never a
-    * self-join of the fact table, so the shuffle input is Σ min(k,cap)²
-    * over basket sizes k, not n². Output column: `pr` = struct(pa, pb).
+    * on the order key, then map-side generation ([[graft.Pairs.within]]) of
+    * the (pa < pb) pairs from each order's sorted, `MaxBasket`-capped item
+    * set — never a self-join of the fact table, so the shuffle input is
+    * Σ min(k,cap)² over basket sizes k, not n². Output column: `pr` =
+    * struct(pa, pb).
     */
   private[graft] def basketPairs(items: DataFrame): DataFrame =
     items
       .groupBy("l_orderkey")
       .agg(slice(sort_array(collect_set(col("l_partkey"))), 1, MaxBasket)
         .as("ps"))
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps) - i - 1), " +
-          "y -> struct(x AS pa, y AS pb))))")).as("pr"))
+      .select(Pairs.within(col("ps"))((x, y) => struct(x.as("pa"), y.as("pb"))).as("pr"))
   /** prof_inclusion candidate (child table, child col, parent table,
     * parent col) pairs — the five real TPC-H FKs + three reverse probes.
     * Shared by the Spark side and the generated oracle so the dep labels

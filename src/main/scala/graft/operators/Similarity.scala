@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Exact.hash32Sql
+import graft.Pairs
 import graft.Tables.load
 import graft.functions.VectorFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -99,9 +100,7 @@ object Similarity {
       e.groupBy("bucket")
         .agg(sort_array(collect_list(struct(col("vec_id"), col("v"), col("nrm")))).as("es"))
         .where(size(col("es")) > 1)
-        .select(col("bucket"), explode(flatten(transform(col("es"), (x, i) =>
-          transform(slice(col("es"), i + 2, size(col("es"))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+        .select(col("bucket"), Pairs.within(col("es"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
         .select(col("bucket"),
           col("p.a.vec_id").as("vec_a"), col("p.b.vec_id").as("vec_b"),
           round(dotProduct(col("p.a.v"), col("p.b.v")) / (col("p.a.nrm") * col("p.b.nrm")), 6).as("score"))

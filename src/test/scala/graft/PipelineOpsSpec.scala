@@ -329,6 +329,78 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert((200L to 205L).forall(labels(_) == 200L))
   }
 
+  test("Pairs.within: exactly combinations(2) in index order; a null array gives no row") {
+    import spark.implicits._
+    // Distinct but unsorted values, so index order and value order differ.
+    val arrays = Seq(Seq.empty[Long], Seq(5L), Seq(9L, 3L), Seq(4L, 1L, 7L, 6L, 0L, 8L, 2L))
+    for (arr <- arrays) {
+      val got = Seq(Tuple1(arr)).toDF("xs")
+        .select(Pairs.within(col("xs"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
+        .select("p.a", "p.b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == arr.combinations(2).map(c => (c(0), c(1))).toSeq, s"array $arr")
+    }
+    val nulls = Seq(Tuple1(Option.empty[Seq[Long]])).toDF("xs")
+      .select(Pairs.within(col("xs"))((x, y) => struct(x.as("a"), y.as("b"))))
+    assert(nulls.count() == 0)
+  }
+
+  test("Pairs.star: the first id to every later one; one id gives no row") {
+    import spark.implicits._
+    def star(ids: Seq[Long]) = Seq(Tuple1(ids)).toDF("ids")
+      .select(Pairs.star(col("ids")).as("e"))
+      .select("e.a", "e.b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(star(Seq(3L, 5L, 9L)) == Seq((3L, 5L), (3L, 9L)))
+    assert(star(Seq(3L)).isEmpty)
+  }
+
+  test("Pairs.hamming: verified bucket pairs, and maxHam >= bands fails the require") {
+    import spark.implicits._
+    // 2 bands × 4 bits: 0x11 and 0x13 differ in 1 bit (same high band);
+    // 0x11 and 0xEE differ in all 8 and share no band.
+    val sigs = Seq((1L, 0x11L), (2L, 0x13L), (3L, 0xEEL)).toDF("id", "sig")
+    val got = Pairs.hamming(sigs, "id", "sig", 2, 4, 1L, ("x", "y"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((1L, 2L, 1L)))
+    for (maxHam <- Seq(2L, 3L))
+      intercept[IllegalArgumentException](
+        Pairs.hamming(sigs, "id", "sig", 2, 4, maxHam, ("x", "y")))
+  }
+
+  test("Par.spread: no-op on a scan that fills the cores and on a frame with no scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val target = spark.sparkContext.defaultParallelism
+    val tmp = java.nio.file.Files.createTempDirectory("spread")
+    try {
+      val rows = (0 until 400).toDF("v")
+      val many = s"$tmp/many"
+      rows.repartition(target).write.parquet(many)
+      val one = s"$tmp/one"
+      rows.coalesce(1).write.parquet(one)
+      def repartitions(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+        df.queryExecution.logical.collect { case r: Repartition => r.numPartitions }
+      // (1) one scan partition per file, already >= defaultParallelism
+      val wide = spark.read.parquet(many)
+      assert(wide.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.inputRDD.getNumPartitions
+      }.max >= target)
+      val wideOut = Par.spread(wide)
+      assert(wideOut eq wide)
+      assert(repartitions(wideOut).isEmpty)
+      // (2) no file scan at all
+      val local = rows.select((col("v") * 2).as("w"))
+      assert(Par.spread(local) eq local)
+      // (3) the control: one small file is spread to defaultParallelism
+      assert(repartitions(Par.spread(spark.read.parquet(one))) == Seq(target))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(tmp.toFile)
+    }
+  }
+
   test("emb_kmeans: total assignment, valid clusters, deterministic") {
     val out = operators.Embeddings.queries("emb_kmeans")(spark, dir)
     val n = Tables.load(spark, dir, "embeddings").count()

@@ -77,5 +77,8 @@ class SessionSpec extends AnyFunSuite {
     assert(centsSites.isEmpty, s"encode cents with Exact.cents, not in: $centsSites")
     val hugeintSites = offenders("cast(\"decimal(38,0)" + "\")", testOrCore)
     assert(hugeintSites.isEmpty, s"widen with Exact.hugeint, not in: $hugeintSites")
+    val pairSites = Seq("i + 2" + ", size(", "d -> struct(ids[0]" + " AS a")
+      .flatMap(offenders(_, testOrCore)).distinct
+    assert(pairSites.isEmpty, s"build candidate pairs with graft.Pairs, not in: $pairSites")
   }
 }
