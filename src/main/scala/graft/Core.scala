@@ -161,6 +161,30 @@ object Exact {
     s"CAST(('0x' || substr(md5($expr), 1, 8)) AS UBIGINT)::BIGINT"
 }
 
+/** Dense-vector building blocks shared by the retrieval, ANN, k-means and
+  * near-dup queries over the embeddings table. Norms are computed once
+  * per vector, not per pair, and every cosine the queries rank or compare
+  * is rounded to 6 places first, so ties and cuts are engine-exact. */
+object Dense {
+  import graft.plans.ArrayExprs.dotProduct
+
+  /** L2 norm of an array column. */
+  def norm(v: Column): Column = sqrt(dotProduct(v, v))
+
+  /** The embeddings table as `(vec_id, v, cols…, nrm)`: `v` is the vector
+    * (the raw `embedding` column, or an expression over it) and `nrm` its
+    * [[norm]]. */
+  def normed(s: SparkSession, dir: String, v: Column, cols: Column*): DataFrame =
+    Tables.load(s, dir, "embeddings")
+      .select(col("vec_id") +: v.as("v") +: cols: _*)
+      .withColumn("nrm", norm(col("v")))
+
+  /** Cosine of columns `a` and `b` with norms `an` and `bn`, rounded to 6
+    * places. */
+  def cos(a: String, an: String, b: String, bn: String): Column =
+    round(dotProduct(col(a), col(b)) / (col(an) * col(bn)), 6)
+}
+
 /** Candidate-pair building blocks shared by the near-dup, LSH,
   * co-purchase and link-prediction queries. Each turns a bucket (or a
   * neighbour set) collected into ONE array row into its pairs map-side:

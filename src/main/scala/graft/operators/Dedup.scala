@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Exact.{hash32, hash32Sql}
-import graft.Pairs
+import graft.{Dense, Pairs}
 import graft.Tables.load
 import graft.functions.VectorFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -838,9 +838,7 @@ object Dedup {
     // HOF/DuckDB formulation bit-for-bit, only faster.
     "dd_embed_cos" -> ((s, dir) => {
       import graft.plans.ArrayExprs.dotProduct
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+      val e = Dense.normed(s, dir, col("embedding"))
       e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
           (dotProduct(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("cos"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Exact.dec
+import graft.Dense
 import graft.Tables.load
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -341,11 +341,7 @@ object Embeddings {
   }
 
   private def kmeansAssigned(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.ArrayExprs.dotProduct
-    val e = load(s, dir, "embeddings")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+    val e = Dense.normed(s, dir, transform(col("embedding"), x => x.cast("double")))
     val seeds = e.where(col("vec_id") < KmK)
       .select(col("vec_id").cast("int").as("cluster"), col("v").as("cv"),
         col("nrm").as("cnrm"))
@@ -354,7 +350,7 @@ object Embeddings {
     def assign(cents: DataFrame): DataFrame =
       e.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("v"), col("cluster"),
-          round(dotProduct(col("v"), col("cv")) / (col("nrm") * col("cnrm")), 6).as("c"))
+          Dense.cos("v", "nrm", "cv", "cnrm").as("c"))
         .withColumn("rn", row_number().over(wBest))
         .where(col("rn") === 1)
         .select("vec_id", "v", "cluster", "c")
@@ -368,22 +364,36 @@ object Embeddings {
         .agg(sort_array(collect_list(struct(col("dim"), (col("sx") / col("n")).as("m"))))
           .as("dm"))
         .select(col("cluster"), transform(col("dm"), s => s.getField("m")).as("cv"))
-        .withColumn("cnrm", sqrt(dotProduct(col("cv"), col("cv"))))
+        .withColumn("cnrm", Dense.norm(col("cv")))
 
     assign(update(assign(seeds)))
   }
 
   /** The anchor/query subset shared by emb_knn_label and
     * emb_triplet_mine: the first KnnNq vectors with their norms. */
-  private def anchors(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.ArrayExprs.dotProduct
-    load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").as("v"), col("label"))
-      .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+  private def anchors(s: SparkSession, dir: String): DataFrame =
+    Dense.normed(s, dir, col("embedding"), col("label"))
       .where(col("vec_id") < KnnNq)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qnrm"), col("label").as("q_label"))
-  }
+
+  /** The IVF coarse quantizer's seeds: the first [[Cells]] vectors of a
+    * [[Dense.normed]] frame `e`, as `(cell, cv, cnrm)`. */
+  private def ivfSeeds(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < Cells)
+      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
+
+  /** Every row of `df` against every broadcast seed: the columns `cols`
+    * (the first is the row key), `c` the rounded cosine of vector `v`
+    * (norm `nrm`) to the seed, and `rn` the seed's rank for that key by
+    * (c desc, cell). `rn = 1` is a vector's cell assignment (each vector
+    * lands in exactly one cell), `rn <= NProbe` a query's probe list. */
+  private def seedRank(df: DataFrame, seeds: DataFrame, v: String, nrm: String,
+      cols: String*): DataFrame =
+    df.crossJoin(broadcast(seeds))
+      .select(cols.map(col) :+ Dense.cos(v, nrm, "cv", "cnrm").as("c"): _*)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(cols.head).orderBy(col("c").desc, col("cell"))))
 
   /** Cell-probed labeled candidates shared by emb_knn_label (vote layer)
     * and emb_triplet_mine (hard pos/neg layer): every vector assigns to
@@ -393,33 +403,19 @@ object Embeddings {
     * cell-keyed joins — never all-pairs; per-anchor windows partition on
     * the anchor key. Columns: (q_id, q_label, n_id, label, score). */
   private def knnCandidates(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.ArrayExprs.dotProduct
-    val e = load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").as("v"), col("label"))
-      .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-    val seeds = e.where(col("vec_id") < Cells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    def cos(a: String, an: String, b: String, bn: String) =
-      round(dotProduct(col(a), col(b)) / (col(an) * col(bn)), 6)
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("c").desc, col("cell"))
-    val assigned = e.crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("v"), col("nrm"), col("label"), col("cell"),
-        cos("v", "nrm", "cv", "cnrm").as("c"))
-      .withColumn("rn", row_number().over(wAssign))
+    val e = Dense.normed(s, dir, col("embedding"), col("label"))
+    val seeds = ivfSeeds(e)
+    val assigned = seedRank(e, seeds, "v", "nrm", "vec_id", "v", "nrm", "label", "cell")
       .where(col("rn") === 1)
       .select("vec_id", "v", "nrm", "label", "cell")
-    val q = anchors(s, dir)
-    val wProbe = Window.partitionBy("q_id").orderBy(col("c").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(seeds))
-      .select(col("q_id"), col("qv"), col("qnrm"), col("q_label"), col("cell"),
-        cos("qv", "qnrm", "cv", "cnrm").as("c"))
-      .withColumn("rn", row_number().over(wProbe))
+    val probes = seedRank(anchors(s, dir), seeds, "qv", "qnrm",
+        "q_id", "qv", "qnrm", "q_label", "cell")
       .where(col("rn") <= NProbe)
       .select("q_id", "qv", "qnrm", "q_label", "cell")
     probes.join(assigned, "cell")
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("q_label"), col("vec_id").as("n_id"),
-        col("label"), cos("qv", "qnrm", "v", "nrm").as("score"))
+        col("label"), Dense.cos("qv", "qnrm", "v", "nrm").as("score"))
       .groupBy("q_id", "q_label", "n_id", "label")
       .agg(max(col("score")).as("score"))
   }
@@ -464,10 +460,9 @@ object Embeddings {
     // A production run raises k with corpus size so clusters stay bounded;
     // the dataflow (cluster shuffle + within-cluster pairs) is identical.
     "emb_semdedup" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
       val a = kmeansAssigned(s, dir)
         .select(col("vec_id"), col("v"), col("cluster"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+        .withColumn("nrm", Dense.norm(col("v")))
         .localCheckpoint(true)
       a.select(col("cluster"), col("vec_id").as("vec_a"), col("v").as("va"),
           col("nrm").as("na"))
@@ -475,7 +470,7 @@ object Embeddings {
           col("nrm").as("nb")), "cluster")
         .where(col("vec_a") < col("vec_b"))
         .select(col("cluster"), col("vec_a"), col("vec_b"),
-          round(dotProduct(col("va"), col("vb")) / (col("na") * col("nb")), 6).as("score"))
+          Dense.cos("va", "na", "vb", "nb").as("score"))
         .where(col("score") >= SemTau)
         .orderBy("cluster", "vec_a", "vec_b")
     }),
@@ -540,33 +535,18 @@ object Embeddings {
     // each query probe the NProbe nearest cells and take cosine top-k among
     // their members.
     "ann_ivf" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val seeds = e.where(col("vec_id") < Cells)
-        .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-
-      def cos(a: String, an: String, b: String, bn: String) =
-        round(dotProduct(col(a), col(b)) / (col(an) * col(bn)), 6)
+      val e = Dense.normed(s, dir, col("embedding"))
+      val seeds = ivfSeeds(e)
 
       // cell assignment: best cosine to any seed (map-side vs broadcast seeds)
-      val wAssign = Window.partitionBy("vec_id").orderBy(col("c").desc, col("cell"))
-      val assigned = e.crossJoin(broadcast(seeds))
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
-          cos("v", "nrm", "cv", "cnrm").as("c"))
-        .withColumn("rn", row_number().over(wAssign))
+      val assigned = seedRank(e, seeds, "v", "nrm", "vec_id", "v", "nrm", "cell")
         .where(col("rn") === 1)
         .select("vec_id", "v", "nrm", "cell")
 
       // probe list: NProbe best cells per query
       val q = e.where(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      val wProbe = Window.partitionBy("q_id").orderBy(col("c").desc, col("cell"))
-      val probes = q.crossJoin(broadcast(seeds))
-        .select(col("q_id"), col("qv"), col("qnrm"), col("cell"),
-          cos("qv", "qnrm", "cv", "cnrm").as("c"))
-        .withColumn("rn", row_number().over(wProbe))
+      val probes = seedRank(q, seeds, "qv", "qnrm", "q_id", "qv", "qnrm", "cell")
         .where(col("rn") <= NProbe)
         .select("q_id", "qv", "qnrm", "cell")
 
@@ -575,7 +555,7 @@ object Embeddings {
       probes.join(assigned, "cell")
         .where(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
-          cos("qv", "qnrm", "v", "nrm").as("score"))
+          Dense.cos("qv", "qnrm", "v", "nrm").as("score"))
         .groupBy("q_id", "n_id").agg(max(col("score")).as("score")) // dedup multi-probe hits
         .withColumn("rank", row_number().over(wRank))
         .where(col("rank") <= TopK)
@@ -602,11 +582,8 @@ object Embeddings {
     // scan + per-group top-k; the overlap is an integer count. The
     // battery twin of AnnRecallSpec's fidelity study, oracle-checked.
     "emb_recall" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
       val ivf = queries("ann_ivf")(s, dir).select(col("q_id"), col("n_id"))
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+      val e = Dense.normed(s, dir, col("embedding"))
       val q = e.where(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("nrm").as("qnrm"))
@@ -614,8 +591,7 @@ object Embeddings {
       val truth = e.crossJoin(broadcast(q))
         .where(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
+          Dense.cos("qv", "qnrm", "v", "nrm").as("score"))
         .withColumn("rank", row_number().over(wT))
         .where(col("rank") <= TopK)
         .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
@@ -858,28 +834,16 @@ object Embeddings {
     * candidate set (the 15 returned rows are too small a sample to measure
     * how well adist tracks the true distance). */
   private[graft] def ivfPqScored(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.ArrayExprs.dotProduct
-    val e = load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-    val seeds = e.where(col("vec_id") < Cells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    def cos(a: String, an: String, b: String, bn: String) =
-      round(dotProduct(col(a), col(b)) / (col(an) * col(bn)), 6)
+    val e = Dense.normed(s, dir, col("embedding"))
+    val seeds = ivfSeeds(e)
     // IVF leg (same shapes as ann_ivf): each vector lands in exactly one
     // cell, so the probe⋈assigned join emits each (q_id, vec_id) once.
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("c").desc, col("cell"))
-    val assigned = e.crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("cell"), cos("v", "nrm", "cv", "cnrm").as("c"))
-      .withColumn("rn", row_number().over(wAssign))
+    val assigned = seedRank(e, seeds, "v", "nrm", "vec_id", "cell")
       .where(col("rn") === 1)
       .select("vec_id", "cell")
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wProbe = Window.partitionBy("q_id").orderBy(col("c").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(seeds))
-      .select(col("q_id"), col("cell"), cos("qv", "qnrm", "cv", "cnrm").as("c"))
-      .withColumn("rn", row_number().over(wProbe))
+    val probes = seedRank(q, seeds, "qv", "qnrm", "q_id", "cell")
       .where(col("rn") <= NProbe)
       .select("q_id", "cell")
     val cands = probes.join(assigned, "cell")
@@ -905,22 +869,11 @@ object Embeddings {
   /** Residual IVF-PQ candidates with ADC distances, PRE top-k cut — see
     * the ann_ivfpq_res query doc for the design. */
   private[graft] def ivfPqResScored(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.ArrayExprs.dotProduct
-    val e = load(s, dir, "embeddings")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-    val seeds = e.where(col("vec_id") < Cells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    def cos(a: String, an: String, b: String, bn: String) =
-      round(dotProduct(col(a), col(b)) / (col(an) * col(bn)), 6)
+    val e = Dense.normed(s, dir, transform(col("embedding"), x => x.cast("double")))
+    val seeds = ivfSeeds(e)
     // IVF leg: same cells as ann_ivfpq, keeping the vector for the
     // mean update + residual.
-      val wAssign = Window.partitionBy("vec_id").orderBy(col("c").desc, col("cell"))
-      val assignedV = e.crossJoin(broadcast(seeds))
-        .select(col("vec_id"), col("v"), col("cell"),
-          cos("v", "nrm", "cv", "cnrm").as("c"))
-        .withColumn("rn", row_number().over(wAssign))
+      val assignedV = seedRank(e, seeds, "v", "nrm", "vec_id", "v", "cell")
         .where(col("rn") === 1)
         .select("vec_id", "v", "cell")
       // Trained coarse centroid: exact per-dimension cell mean
@@ -947,11 +900,7 @@ object Embeddings {
       // Probe list with the per-cell QUERY residual.
       val q = e.where(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      val wProbe = Window.partitionBy("q_id").orderBy(col("c").desc, col("cell"))
-      val probes = q.crossJoin(broadcast(seeds))
-        .select(col("q_id"), col("cell"), col("qv"),
-          cos("qv", "qnrm", "cv", "cnrm").as("c"))
-        .withColumn("rn", row_number().over(wProbe))
+      val probes = seedRank(q, seeds, "qv", "qnrm", "q_id", "cell", "qv")
         .where(col("rn") <= NProbe)
         .join(broadcast(cellMean), "cell")
         .select(col("q_id"), col("cell"),

@@ -45,10 +45,7 @@ object Graph {
   /** Shared by gr_labelprop / gr_modularity: the fixed-round synchronous
     * min-label propagation. Returns (final labels, symmetrized edges). */
   private def labelLoop(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val e = edges(s, dir)
-    val sym = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-      .localCheckpoint()
+    val sym = both(edges(s, dir), "src", "dst").localCheckpoint()
     var lab = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl")).localCheckpoint()
     for (_ <- 1 to LabelPropRounds) {
@@ -110,6 +107,23 @@ object Graph {
       .agg(count(lit(1)).as("pair_orders"))
       .where(col("pair_orders") >= MinSupport)
       .select(col("pa"), col("pb"))
+  }
+
+  /** The undirected edge list `e(pa, pb)` symmetrized: each edge in both
+    * directions, as columns `(a, b)`. */
+  private def both(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(col("pa").as(a), col("pb").as(b))
+      .unionAll(e.select(col("pb").as(a), col("pa").as(b)))
+
+  /** The symmetrized edges `g(u, v)` whose endpoints both pass the degree
+    * test `ok`, degrees taken in `g`: one keyed degree aggregate and two
+    * semi-join trims. */
+  private def trim(g: DataFrame, ok: Column => Column): DataFrame = {
+    val keep = g.groupBy("u").agg(count(lit(1)).as("d"))
+      .where(ok(col("d"))).select("u")
+    g.join(keep, "u")
+      .join(keep.select(col("u").as("v")), "v")
+      .select("u", "v")
   }
 
   /** The degree-oriented triangle pipeline shared by `gr_triangles` and
@@ -220,17 +234,9 @@ object Graph {
     // run-to-fixpoint) so the DuckDB oracle is the identical computation;
     // convergence at the fixed depth is pinned separately in GraphSpec.
     "gr_kcore" -> ((s, dir) => {
-      val e0 = edges(s, dir)
-      val und0 = e0.select(col("pa").as("u"), col("pb").as("v"))
-        .unionAll(e0.select(col("pb").as("u"), col("pa").as("v")))
-        .localCheckpoint()
+      val und0 = both(edges(s, dir), "u", "v").localCheckpoint()
       val fin = (0 until KcoreRounds).foldLeft(und0) { (g, _) =>
-        val keep = g.groupBy("u").agg(count(lit(1)).as("d"))
-          .where(col("d") >= KcoreK).select("u")
-        g.join(keep, "u")
-          .join(keep.select(col("u").as("v")), "v")
-          .select("u", "v")
-          .localCheckpoint()
+        trim(g, _ >= KcoreK).localCheckpoint()
       }
       fin.groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
         .orderBy("node")
@@ -255,15 +261,8 @@ object Graph {
     // the anti-join now reads the checkpointed `und`, and the basket
     // build runs exactly once per cold query.
     "gr_linkpred" -> ((s, dir) => {
-      val e = edges(s, dir)
-      val und = e.select(col("pa").as("u"), col("pb").as("v"))
-        .unionAll(e.select(col("pb").as("u"), col("pa").as("v")))
-        .localCheckpoint()
-      val keep = und.groupBy("u").agg(count(lit(1)).as("d"))
-        .where(col("d") <= LpMaxDeg).select("u")
-      val sub = und.join(keep, "u")
-        .join(keep.select(col("u").as("v")), "v")
-        .select("u", "v").localCheckpoint()
+      val und = both(edges(s, dir), "u", "v").localCheckpoint()
+      val sub = trim(und, _ <= LpMaxDeg).localCheckpoint()
       val subDeg = sub.groupBy("u").agg(count(lit(1)).as("d"))
       val pairs = sub.groupBy("u")
         .agg(sort_array(collect_set(col("v"))).as("ns"))
@@ -294,15 +293,8 @@ object Graph {
     // center always has ≥ 2 neighbors, so ln(deg z) ≥ ln 2 > 0 by
     // construction.
     "gr_adamic_adar" -> ((s, dir) => {
-      val e = edges(s, dir)
-      val und = e.select(col("pa").as("u"), col("pb").as("v"))
-        .unionAll(e.select(col("pb").as("u"), col("pa").as("v")))
-        .localCheckpoint()
-      val keep = und.groupBy("u").agg(count(lit(1)).as("d"))
-        .where(col("d") <= LpMaxDeg).select("u")
-      val sub = und.join(keep, "u")
-        .join(keep.select(col("u").as("v")), "v")
-        .select("u", "v").localCheckpoint()
+      val und = both(edges(s, dir), "u", "v").localCheckpoint()
+      val sub = trim(und, _ <= LpMaxDeg).localCheckpoint()
       val wedges = sub.groupBy("u")
         .agg(sort_array(collect_set(col("v"))).as("ns"))
         .select(col("u").as("z"),
@@ -438,10 +430,7 @@ object Graph {
     // node-keyed joins + one global agg — never materializes anything
     // beyond the edge list.
     "gr_assortativity" -> ((s, dir) => {
-      val e = edges(s, dir)
-      val sym = e.select(col("pa").as("x"), col("pb").as("y"))
-        .unionAll(e.select(col("pb").as("x"), col("pa").as("y")))
-        .localCheckpoint()
+      val sym = both(edges(s, dir), "x", "y").localCheckpoint()
       val deg = sym.groupBy(col("x").as("node")).agg(count(lit(1)).as("deg"))
       val g = sym
         .join(deg.select(col("node").as("x"), col("deg").as("dx")), "x")
@@ -545,9 +534,7 @@ object Graph {
     }),
 
     "gr_pagerank" -> ((s, dir) => {
-      val e = edges(s, dir)
-      val e2 = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+      val e2 = both(edges(s, dir), "src", "dst")
       val adj = e2.groupBy(col("src"))
         .agg(collect_list(col("dst")).as("dsts"), count(lit(1)).as("outdeg"))
         .cache()
@@ -607,10 +594,7 @@ object Graph {
     //    deployment trades ε against wall-clock by k alone, never by
     //    touching the plan shape.
     "gr_closeness" -> ((s, dir) => {
-      val e = edges(s, dir)
-      val e2 = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-        .cache()
+      val e2 = both(edges(s, dir), "src", "dst").cache()
       val lms = e2.select(col("src").as("node")).distinct()
         .orderBy("node").limit(LmCount)
         .select(col("node"), col("node").as("lm"))
@@ -636,10 +620,7 @@ object Graph {
     // shared landmarkBfs: bounded rounds, early exit, keyed anti-joins);
     // the ecc/diameter rollups ride the landmarks-scale frame.
     "gr_diameter" -> ((s, dir) => {
-      val e = edges(s, dir)
-      val e2 = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-        .cache()
+      val e2 = both(edges(s, dir), "src", "dst").cache()
       val lms = e2.select(col("src").as("node")).distinct()
         .orderBy("node").limit(LmCount)
         .select(col("node"), col("node").as("lm"))
@@ -654,10 +635,7 @@ object Graph {
     }),
 
     "gr_shortest_path" -> ((s, dir) => {
-      val e = edges(s, dir)
-      val e2 = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-        .cache()
+      val e2 = both(edges(s, dir), "src", "dst").cache()
       var frontier = e2.select(col("src").as("node")).distinct()
         .where(col("node") % SpSeedMod === 0)
         .select(col("node"), lit(0L).as("d"))

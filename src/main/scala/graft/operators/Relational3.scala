@@ -3,7 +3,7 @@ package graft.operators
 import graft.Exact.{cents, dec, hugeint}
 import graft.Pairs
 import graft.Tables.load
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -143,6 +143,53 @@ object Relational3 {
     load(s, dir, "events")
       .select(col("event_type"), cents(col("value")).as("c"))
       .groupBy("event_type", "c").agg(count(lit(1)).as("m"))
+
+  /** The pooled sample of every unordered pair of event types, on the
+    * [[centsHistogram]]: `(type_a < type_b, c, ca, cb)` with ca / cb the
+    * multiplicity of cents value c in type_a / type_b (0 where absent).
+    * The ×(types − 1) pair explode rides the value-domain-scale histogram
+    * against one broadcast type list; one event type gives no row. */
+  private def typePairs(s: SparkSession, dir: String): DataFrame = {
+    val h = centsHistogram(s, dir)
+    val tys = h.select(col("event_type").as("t2")).distinct()
+    h.crossJoin(broadcast(tys))
+      .where(col("t2") =!= col("event_type"))
+      .select(least(col("event_type"), col("t2")).as("type_a"),
+        greatest(col("event_type"), col("t2")).as("type_b"),
+        col("event_type").as("own"), col("c"), col("m"))
+      .groupBy("type_a", "type_b", "c")
+      .agg(sum(when(col("own") === col("type_a"), col("m")).otherwise(0L)).as("ca"),
+        sum(when(col("own") === col("type_b"), col("m")).otherwise(0L)).as("cb"))
+  }
+
+  /** Per type pair of [[typePairs]]: its sample sizes (na, nb) and the
+    * aggregate `stat` over the pair's value rows, which carry ca, cb, na,
+    * nb and the CDF counts through c, cuma and cumb (per-pair windows on
+    * the histogram frame). */
+  private def cdfStat(s: SparkSession, dir: String, stat: Column): DataFrame = {
+    val wCdf = Window.partitionBy("type_a", "type_b").orderBy("c")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val wAll = Window.partitionBy("type_a", "type_b")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    typePairs(s, dir)
+      .withColumn("cuma", sum(col("ca")).over(wCdf))
+      .withColumn("cumb", sum(col("cb")).over(wCdf))
+      .withColumn("na", sum(col("ca")).over(wAll))
+      .withColumn("nb", sum(col("cb")).over(wAll))
+      .groupBy("type_a", "type_b")
+      .agg(max(col("na")).as("na"), max(col("nb")).as("nb"), stat)
+  }
+
+  /** cuma·nb − cumb·na, the CDF gap F_a − F_b at c scaled by na·nb: an
+    * exact HUGEINT integer. */
+  private def cdfGap: Column =
+    hugeint(col("cuma")) * col("nb") - hugeint(col("cumb")) * col("na")
+
+  /** Σ `term` over a pair's value rows, folded in c order so the double
+    * sum is the same on any partitioning and in the oracle. */
+  private def cOrderedSum(term: Column): Column =
+    aggregate(transform(array_sort(collect_list(struct(col("c"), term.as("t")))),
+      x => x.getField("t")), lit(0.0), (a, t) => a + t)
 
   private val ErWindow = 5 // er_fuzzy_match sorted-neighborhood width
   private val ErMaxDist = 2 // er_fuzzy_match Levenshtein accept threshold
@@ -842,19 +889,9 @@ object Relational3 {
     // (type, cents) aggregate; the ×(types−1) pair explode and the rank
     // window run on the value-domain-scale histogram frame.
     "a17_mwu" -> ((s, dir) => {
-      val h = centsHistogram(s, dir)
-      val tys = h.select(col("event_type").as("t2")).distinct()
-      val paired = h.crossJoin(broadcast(tys))
-        .where(col("t2") =!= col("event_type"))
-        .select(least(col("event_type"), col("t2")).as("type_a"),
-          greatest(col("event_type"), col("t2")).as("type_b"),
-          col("event_type").as("own"), col("c"), col("m"))
-        .groupBy("type_a", "type_b", "c")
-        .agg(sum(when(col("own") === col("type_a"), col("m")).otherwise(0L)).as("ca"),
-          sum(when(col("own") === col("type_b"), col("m")).otherwise(0L)).as("cb"))
       val wCum = Window.partitionBy("type_a", "type_b").orderBy("c")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val agg = paired
+      val agg = typePairs(s, dir)
         .withColumn("r0", coalesce(sum(col("ca") + col("cb")).over(wCum), lit(0L)) + 1)
         .groupBy("type_a", "type_b")
         .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
@@ -889,31 +926,9 @@ object Relational3 {
     // (type, cents) aggregate; pair explode + CDF windows on the
     // value-domain-scale histogram frame.
     "a18_ks" -> ((s, dir) => {
-      val h = centsHistogram(s, dir)
-      val tys = h.select(col("event_type").as("t2")).distinct()
-      val paired = h.crossJoin(broadcast(tys))
-        .where(col("t2") =!= col("event_type"))
-        .select(least(col("event_type"), col("t2")).as("type_a"),
-          greatest(col("event_type"), col("t2")).as("type_b"),
-          col("event_type").as("own"), col("c"), col("m"))
-        .groupBy("type_a", "type_b", "c")
-        .agg(sum(when(col("own") === col("type_a"), col("m")).otherwise(0L)).as("ca"),
-          sum(when(col("own") === col("type_b"), col("m")).otherwise(0L)).as("cb"))
-      val wCdf = Window.partitionBy("type_a", "type_b").orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val wAll = Window.partitionBy("type_a", "type_b")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       val naD = col("na").cast("double")
       val nbD = col("nb").cast("double")
-      paired
-        .withColumn("cuma", sum(col("ca")).over(wCdf))
-        .withColumn("cumb", sum(col("cb")).over(wCdf))
-        .withColumn("na", sum(col("ca")).over(wAll))
-        .withColumn("nb", sum(col("cb")).over(wAll))
-        .groupBy("type_a", "type_b")
-        .agg(max(col("na")).as("na"), max(col("nb")).as("nb"),
-          max(abs(hugeint(col("cuma")) * col("nb") - hugeint(col("cumb")) * col("na")))
-            .as("mx"))
+      cdfStat(s, dir, max(abs(cdfGap)).as("mx"))
         .select(col("type_a"), col("type_b"), col("na").as("n_a"),
           col("nb").as("n_b"),
           round(col("mx").cast("double") / (naD * nbD), 6).as("d"),
@@ -938,36 +953,12 @@ object Relational3 {
     // (type, cents) agg, ×(types−1) broadcast pair explode, histogram-
     // frame windows.
     "a35_cvm" -> ((s, dir) => {
-      val h = centsHistogram(s, dir)
-      val tys = h.select(col("event_type").as("t2")).distinct()
-      val paired = h.crossJoin(broadcast(tys))
-        .where(col("t2") =!= col("event_type"))
-        .select(least(col("event_type"), col("t2")).as("type_a"),
-          greatest(col("event_type"), col("t2")).as("type_b"),
-          col("event_type").as("own"), col("c"), col("m"))
-        .groupBy("type_a", "type_b", "c")
-        .agg(sum(when(col("own") === col("type_a"), col("m")).otherwise(0L)).as("ca"),
-          sum(when(col("own") === col("type_b"), col("m")).otherwise(0L)).as("cb"))
-      val wCdf = Window.partitionBy("type_a", "type_b").orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val wAll = Window.partitionBy("type_a", "type_b")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val dd = (hugeint(col("cuma")) * col("nb") - hugeint(col("cumb")) * col("na"))
-        .cast("double")
+      val dd = cdfGap.cast("double")
       val term = (col("ca") + col("cb")).cast("double") * (dd * dd)
       val naD = col("na").cast("double")
       val nbD = col("nb").cast("double")
       val nD = (col("na") + col("nb")).cast("double")
-      paired
-        .withColumn("cuma", sum(col("ca")).over(wCdf))
-        .withColumn("cumb", sum(col("cb")).over(wCdf))
-        .withColumn("na", sum(col("ca")).over(wAll))
-        .withColumn("nb", sum(col("cb")).over(wAll))
-        .groupBy("type_a", "type_b")
-        .agg(max(col("na")).as("na"), max(col("nb")).as("nb"),
-          aggregate(transform(array_sort(collect_list(
-            struct(col("c"), term.as("t")))),
-            x => x.getField("t")), lit(0.0), (a, t) => a + t).as("f"))
+      cdfStat(s, dir, cOrderedSum(term).as("f"))
         .select(col("type_a"), col("type_b"), col("na").as("n_a"),
           col("nb").as("n_b"),
           round(col("f") / (nD * nD * naD * nbD), 6).as("t"))
@@ -987,22 +978,7 @@ object Relational3 {
     // terms go to double before the c-sorted fold, one final division,
     // round(6). Scale: the a18_ks histogram shape exactly.
     "a36_ad2" -> ((s, dir) => {
-      val h = centsHistogram(s, dir)
-      val tys = h.select(col("event_type").as("t2")).distinct()
-      val paired = h.crossJoin(broadcast(tys))
-        .where(col("t2") =!= col("event_type"))
-        .select(least(col("event_type"), col("t2")).as("type_a"),
-          greatest(col("event_type"), col("t2")).as("type_b"),
-          col("event_type").as("own"), col("c"), col("m"))
-        .groupBy("type_a", "type_b", "c")
-        .agg(sum(when(col("own") === col("type_a"), col("m")).otherwise(0L)).as("ca"),
-          sum(when(col("own") === col("type_b"), col("m")).otherwise(0L)).as("cb"))
-      val wCdf = Window.partitionBy("type_a", "type_b").orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val wAll = Window.partitionBy("type_a", "type_b")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val dd = (hugeint(col("cuma")) * col("nb") - hugeint(col("cumb")) * col("na"))
-        .cast("double")
+      val dd = cdfGap.cast("double")
       val bD = (col("cuma") + col("cumb")).cast("double")
       val nD = (col("na") + col("nb")).cast("double")
       val term = when(col("cuma") + col("cumb") < col("na") + col("nb"),
@@ -1010,16 +986,7 @@ object Relational3 {
           (bD * (nD - bD))).otherwise(lit(0.0))
       val naD = col("na").cast("double")
       val nbD = col("nb").cast("double")
-      paired
-        .withColumn("cuma", sum(col("ca")).over(wCdf))
-        .withColumn("cumb", sum(col("cb")).over(wCdf))
-        .withColumn("na", sum(col("ca")).over(wAll))
-        .withColumn("nb", sum(col("cb")).over(wAll))
-        .groupBy("type_a", "type_b")
-        .agg(max(col("na")).as("na"), max(col("nb")).as("nb"),
-          aggregate(transform(array_sort(collect_list(
-            struct(col("c"), term.as("t")))),
-            x => x.getField("t")), lit(0.0), (a, t) => a + t).as("f"))
+      cdfStat(s, dir, cOrderedSum(term).as("f"))
         .select(col("type_a"), col("type_b"), col("na").as("n_a"),
           col("nb").as("n_b"),
           round(col("f") / (naD * nbD), 6).as("a2"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Dense
 import graft.Tables.load
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -86,9 +87,6 @@ object Retrieval {
   private val RboWeights: Seq[(Long, Double)] =
     (1 to RboK).map(d => (d.toLong, (1 - RboP) * math.pow(RboP, d - 1)))
 
-  /** The ir_bm25 plan (shared with ir_rrf's lexical leg): top-[[TopN]] docs
-    * for [[QueryTerms]] by rounded BM25 score, ordered (score desc, doc_id).
-    * Two scans of documents, one broadcast stats row, TakeOrdered cut. */
   /** ir_ql: Dirichlet smoothing pseudo-count μ (Zhai & Lafferty 2001),
     * sized to the corpus mean document length. */
   private val QlMu = 50.0
@@ -122,6 +120,9 @@ object Retrieval {
       .limit(TopN)
   }
 
+  /** The ir_bm25 plan (shared with ir_rrf's lexical leg): top-[[TopN]] docs
+    * for [[QueryTerms]] by rounded BM25 score, ordered (score desc, doc_id).
+    * Two scans of documents, one broadcast stats row, TakeOrdered cut. */
   private def bm25Top(s: SparkSession, dir: String): DataFrame = {
     val d = load(s, dir, "documents")
       .select(col("doc_id") +: size(toks(col("text"))).cast("long").as("dl") +:
@@ -146,6 +147,49 @@ object Retrieval {
       .orderBy(col("score").desc, col("doc_id"))
       .limit(TopN)
   }
+
+  /** The dense run the ir_* evals and fusions score: the top-`k` vectors
+    * by rounded cosine to query vector 0 (itself excluded), as
+    * `(id, score)` ordered (score desc, id). One broadcast query row and
+    * a TakeOrdered cut. Package-private so a spec can check the scores
+    * against a driver-side cosine. */
+  private[graft] def denseTop(s: SparkSession, dir: String, k: Int, id: String): DataFrame = {
+    val e = Dense.normed(s, dir, col("embedding"))
+    val q = e.where(col("vec_id") === 0)
+      .select(col("v").as("qv"), col("nrm").as("qnrm"))
+    e.crossJoin(broadcast(q))
+      .where(col("vec_id") =!= 0)
+      .select(col("vec_id").as(id), Dense.cos("qv", "qnrm", "v", "nrm").as("score"))
+      .orderBy(col("score").desc, col(id))
+      .limit(k)
+  }
+
+  /** `run` plus its 1-based position by (score desc, `id`) as the long
+    * column `rank`. */
+  private def ranked(run: DataFrame, id: String, rank: String): DataFrame =
+    run.withColumn(rank, row_number().over(
+      Window.orderBy(col("score").desc, col(id))).cast("long"))
+
+  /** The top-[[NdcgK]] dense run the judged evals (ir_ndcg, ir_err,
+    * ir_bpref, ir_map, ir_pr11) score: `(doc_id, score, rank)`. */
+  private def evalRun(s: SparkSession, dir: String): DataFrame =
+    ranked(denseTop(s, dir, NdcgK, "doc_id"), "doc_id", "rank")
+
+  /** How many distinct [[QueryTerms]] a document's text contains (0–3):
+    * the graded judgment, and the binary one at ≥ 1. */
+  private def hits: Column =
+    QueryTerms.map(t => array_contains(toks(col("text")), t).cast("long"))
+      .reduce(_ + _)
+
+  /** Graded judgments `(doc_id, rel)`, rel = [[hits]]. */
+  private def graded(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "documents").select(col("doc_id"), hits.as("rel"))
+
+  /** Binary judgments `(doc_id, relevant)`: 1 when the text holds any
+    * query term. */
+  private def qrels(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "documents")
+      .select(col("doc_id"), (hits >= 1).cast("long").as("relevant"))
 
   val queries: Map[String, Q] = Map(
     // term → (df, sorted posting list of distinct doc_ids). The groupBy is
@@ -371,26 +415,8 @@ object Retrieval {
     // Output: per-position rank/doc/grade with running dcg/idcg/ndcg —
     // all running sums over the k-row frame above TakeOrdered cuts.
     "ir_ndcg" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val rel = load(s, dir, "documents")
-        .select(col("doc_id"),
-          QueryTerms.map(t => array_contains(toks(col("text")), t).cast("long"))
-            .reduce(_ + _).as("rel"))
-        .localCheckpoint()
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("doc_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(NdcgK)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      val rel = graded(s, dir).localCheckpoint()
+      val dense = evalRun(s, dir)
       val grades = rel.groupBy()
         .agg(sum(when(col("rel") === 3, 1L).otherwise(0L)).as("n3"),
           sum(when(col("rel") === 2, 1L).otherwise(0L)).as("n2"),
@@ -425,26 +451,8 @@ object Retrieval {
     // engines. Single-row output: ERR@k, the residual continue mass,
     // and the relevant-in-list count.
     "ir_err" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val rel = load(s, dir, "documents")
-        .select(col("doc_id"),
-          QueryTerms.map(t => array_contains(toks(col("text")), t).cast("long"))
-            .reduce(_ + _).as("rel"))
-        .localCheckpoint()
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("doc_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(NdcgK)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      val rel = graded(s, dir).localCheckpoint()
+      val dense = evalRun(s, dir)
       val lst = dense.join(rel, "doc_id")
         .agg(sort_array(collect_list(struct(col("rank"), col("rel")))).as("a"),
           sum((col("rel") > 0).cast("long")).as("n_rel"))
@@ -485,26 +493,8 @@ object Retrieval {
     // (sequential by frame definition, so the double stream is identical
     // on both engines — the ir_map precedent).
     "ir_bpref" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val rel = load(s, dir, "documents")
-        .select(col("doc_id"),
-          (QueryTerms.map(t => array_contains(toks(col("text")), t).cast("long"))
-            .reduce(_ + _) >= 1).cast("long").as("relevant"))
-        .localCheckpoint()
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("doc_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(NdcgK)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      val rel = qrels(s, dir).localCheckpoint()
+      val dense = evalRun(s, dir)
       val lst = dense.join(rel, "doc_id")
       val tot = lst.groupBy()
         .agg(sum("relevant").as("r_tot"),
@@ -542,9 +532,6 @@ object Retrieval {
     // and the expression tree is identical on both engines), round(6);
     // NULL when p_e = 1 (both judges constant). One scan, one-row frame.
     "ir_kappa" -> ((s, dir) => {
-      val hits = QueryTerms
-        .map(t => array_contains(toks(col("text")), t).cast("long"))
-        .reduce(_ + _)
       val g = load(s, dir, "documents")
         .select((hits >= 1).cast("long").as("ja"),
           (hits >= 2).cast("long").as("jb"))
@@ -566,27 +553,9 @@ object Retrieval {
     }),
 
     "ir_map" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val rel = load(s, dir, "documents")
-        .select(col("doc_id"),
-          (QueryTerms.map(t => array_contains(toks(col("text")), t).cast("long"))
-            .reduce(_ + _) >= 1).cast("long").as("relevant"))
-        .localCheckpoint()
+      val rel = qrels(s, dir).localCheckpoint()
       val totRel = rel.groupBy().agg(sum("relevant").as("r"))
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("doc_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(NdcgK)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      val dense = evalRun(s, dir)
       val wCum = Window.orderBy("rank")
         .rowsBetween(Window.unboundedPreceding, 0)
       dense.join(rel, "doc_id").crossJoin(broadcast(totRel))
@@ -616,27 +585,9 @@ object Retrieval {
     // for scores, a K-bounded TakeOrdered run; the 11-level join rides
     // an 11×K broadcast frame.
     "ir_pr11" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val rel = load(s, dir, "documents")
-        .select(col("doc_id"),
-          (QueryTerms.map(t => array_contains(toks(col("text")), t).cast("long"))
-            .reduce(_ + _) >= 1).cast("long").as("relevant"))
-        .localCheckpoint()
+      val rel = qrels(s, dir).localCheckpoint()
       val totRel = rel.groupBy().agg(sum("relevant").as("r"))
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("doc_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(NdcgK)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      val dense = evalRun(s, dir)
       val wCum = Window.orderBy("rank")
         .rowsBetween(Window.unboundedPreceding, 0)
       val run = dense.join(rel, "doc_id").crossJoin(broadcast(totRel))
@@ -713,24 +664,9 @@ object Retrieval {
     // arrive as shared Scala-computed literals (see [[RboWeights]]);
     // every other number is an integer or an integer ratio, round(6).
     "ir_rbo" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val wA = Window.orderBy(col("score").desc, col("doc_id"))
-      val lex = bm25Top(s, dir).limit(RboK)
-        .withColumn("ra", row_number().over(wA).cast("long"))
+      val lex = ranked(bm25Top(s, dir).limit(RboK), "doc_id", "ra")
         .select(col("doc_id"), col("ra"))
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("doc_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(RboK)
-        .withColumn("rb", row_number().over(wA).cast("long"))
+      val dense = ranked(denseTop(s, dir, RboK, "doc_id"), "doc_id", "rb")
         .select(col("doc_id"), col("rb"))
       val entered = lex.join(dense, "doc_id")
         .select(greatest(col("ra"), col("rb")).as("md"))
@@ -760,7 +696,6 @@ object Retrieval {
     // anchors, so the normalization arithmetic is the identical double
     // tree.
     "ir_combsum" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
       val lex = bm25Top(s, dir)
       val lmm = lex.groupBy().agg(min("score").as("mn"), max("score").as("mx"))
       val lexN = lex.crossJoin(broadcast(lmm))
@@ -768,18 +703,7 @@ object Retrieval {
           when(col("mx") > col("mn"),
             (col("score") - col("mn")) / (col("mx") - col("mn")))
             .otherwise(lit(1.0)).as("nl"))
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("id"))
-        .limit(TopN)
+      val dense = denseTop(s, dir, TopN, "id")
       val dmm = dense.groupBy().agg(min("score").as("mn"), max("score").as("mx"))
       val denseN = dense.crossJoin(broadcast(dmm))
         .select(col("id"),
@@ -800,25 +724,9 @@ object Retrieval {
     }),
 
     "ir_rrf" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val lex = bm25Top(s, dir)
-        .withColumn("lex_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      val lex = ranked(bm25Top(s, dir), "doc_id", "lex_rank")
         .select(col("doc_id").as("id"), col("lex_rank"))
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("id"))
-        .limit(TopN)
-        .withColumn("dense_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("id"))).cast("long"))
+      val dense = ranked(denseTop(s, dir, TopN, "id"), "id", "dense_rank")
         .select(col("id"), col("dense_rank"))
       val lexTerm =
         when(col("lex_rank").isNotNull, lit(1.0) / (lit(RrfK) + col("lex_rank")))
@@ -844,25 +752,9 @@ object Retrieval {
     // identical to ir_rrf — two top-k cuts (k-bounded) + one k-row
     // full-outer join; the fusion itself never touches the corpus.
     "ir_borda" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val lex = bm25Top(s, dir)
-        .withColumn("lex_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      val lex = ranked(bm25Top(s, dir), "doc_id", "lex_rank")
         .select(col("doc_id").as("id"), col("lex_rank"))
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val dense = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id").as("id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("id"))
-        .limit(TopN)
-        .withColumn("dense_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("id"))).cast("long"))
+      val dense = ranked(denseTop(s, dir, TopN, "id"), "id", "dense_rank")
         .select(col("id"), col("dense_rank"))
       val lexPts = when(col("lex_rank").isNotNull,
         lit(TopN + 1L) - col("lex_rank")).otherwise(lit(0L))

@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.Dense
 import graft.Exact.hash32Sql
 import graft.Pairs
 import graft.Tables.load
-import graft.functions.VectorFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,17 +66,14 @@ object Similarity {
     // Brute-force cosine top-k: exact ANN baseline. Norms precomputed per
     // vector; the pair loop is one codegen'd dot product.
     "ann_topk" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+      val e = Dense.normed(s, dir, col("embedding"))
       val q = e.where(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
       val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
       e.crossJoin(broadcast(q))
         .where(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6).as("score"))
+          Dense.cos("qv", "qnrm", "v", "nrm").as("score"))
         .withColumn("rank", row_number().over(w))
         .where(col("rank") <= TopK)
         .select("q_id", "rank", "n_id", "score")
@@ -92,10 +89,7 @@ object Similarity {
     // governed by the plane count (each added plane halves expected bucket
     // size), which is the knob a 100 TB deployment sizes to its data volume.
     "ann_lsh" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+      val e = Dense.normed(s, dir, col("embedding"))
         .withColumn("bucket", bucket(col("v")))
       e.groupBy("bucket")
         .agg(sort_array(collect_list(struct(col("vec_id"), col("v"), col("nrm")))).as("es"))
@@ -103,7 +97,7 @@ object Similarity {
         .select(col("bucket"), Pairs.within(col("es"))((x, y) => struct(x.as("a"), y.as("b"))).as("p"))
         .select(col("bucket"),
           col("p.a.vec_id").as("vec_a"), col("p.b.vec_id").as("vec_b"),
-          round(dotProduct(col("p.a.v"), col("p.b.v")) / (col("p.a.nrm") * col("p.b.nrm")), 6).as("score"))
+          Dense.cos("p.a.v", "p.a.nrm", "p.b.v", "p.b.nrm").as("score"))
         .orderBy("bucket", "vec_a", "vec_b")
     }),
 
@@ -179,22 +173,19 @@ object Similarity {
     // windows don't re-run the scan); both top-k cuts rank on rounded
     // scores with id tiebreaks — engine-exact.
     "emb_matryoshka" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
       val e = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))
         .withColumn("pv", slice(col("v"), 1, MatDim))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
-        .withColumn("pnrm", sqrt(dotProduct(col("pv"), col("pv"))))
+        .withColumn("nrm", Dense.norm(col("v")))
+        .withColumn("pnrm", Dense.norm(col("pv")))
       val q = e.where(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("pv").as("qpv"), col("nrm").as("qnrm"), col("pnrm").as("qpnrm"))
       val scored = e.crossJoin(broadcast(q))
         .where(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
-          round(dotProduct(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-            .as("fscore"),
-          round(dotProduct(col("qpv"), col("pv")) / (col("qpnrm") * col("pnrm")), 6)
-            .as("pscore"))
+          Dense.cos("qv", "qnrm", "v", "nrm").as("fscore"),
+          Dense.cos("qpv", "qpnrm", "pv", "pnrm").as("pscore"))
         .localCheckpoint()
       val wF = Window.partitionBy("q_id").orderBy(col("fscore").desc, col("n_id"))
       val full = scored.withColumn("r", row_number().over(wF))
@@ -211,19 +202,14 @@ object Similarity {
     }),
 
     "ann_mmr" -> ((s, dir) => {
-      import graft.plans.ArrayExprs.dotProduct
-      val e = load(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
+      val e = Dense.normed(s, dir, transform(col("embedding"), x => x.cast("double")))
       val q = e.where(col("vec_id") === 0)
         .select(col("v").as("qv"), col("nrm").as("qn"))
       def mmrCol = round(lit(MmrLam) * col("rel") -
         lit(1 - MmrLam) * col("msim"), 6)
       var m = e.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
         .select(col("vec_id"), col("v"), col("nrm"),
-          round(dotProduct(col("v"), col("qv")) / (col("nrm") * col("qn")), 6)
-            .as("rel"))
+          Dense.cos("v", "nrm", "qv", "qn").as("rel"))
         .withColumn("msim", lit(0.0))
         .withColumn("mmr", mmrCol)
         .localCheckpoint()
@@ -241,7 +227,7 @@ object Similarity {
             .where(col("vec_id") =!= col("c_id"))
             .select(col("vec_id"), col("v"), col("nrm"), col("rel"),
               greatest(col("msim"),
-                round(dotProduct(col("v"), col("cv")) / (col("nrm") * col("cn")), 6))
+                Dense.cos("v", "nrm", "cv", "cn"))
                 .as("msim"))
             .withColumn("mmr", mmrCol)
             .localCheckpoint()

@@ -1998,6 +1998,70 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("a17_mwu, a18_ks, a35_cvm, a36_ad2: one event type gives no pair and no row") {
+    import spark.implicits._
+    val one = java.nio.file.Files.createTempDirectory("graft_one_type").toString
+    Seq((1L, 7L, "click", 1.25), (2L, 7L, "click", 3.5), (3L, 8L, "click", 1.25))
+      .toDF("event_id", "user_id", "event_type", "value")
+      .write.parquet(s"$one/events.parquet")
+    for (q <- Seq("a17_mwu", "a18_ks", "a35_cvm", "a36_ad2"))
+      assert(SparkEntry.queries(q)(spark, one).collect().isEmpty, q)
+  }
+
+  test("ir_ndcg, ir_err, ir_bpref, ir_map and ir_pr11 score one dense run") {
+    val k = 10 // Retrieval.NdcgK
+    def dot(a: Seq[Double], b: Seq[Double]) =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))
+    def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val vecs = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble)).toMap
+    val q = vecs(0L)
+    val top = vecs.toSeq.filter(_._1 != 0L)
+      .map { case (id, v) =>
+        id -> round6(dot(q, v) / (math.sqrt(dot(q, q)) * math.sqrt(dot(v, v))))
+      }
+      .sortBy { case (id, sc) => (-sc, id) }.take(k)
+    val ids = top.map(_._1)
+    // the run every judged eval reads, against the driver-side cosine
+    val run = operators.Retrieval.denseTop(spark, dir, k, "doc_id").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(run.map(_._1) == ids)
+    run.zip(top).foreach { case ((_, got), (id, want)) =>
+      assert(math.abs(got - want) <= 1e-9, s"doc $id: score $got vs $want") }
+    // judgments: how many distinct query terms each document holds
+    val terms = Seq("merge", "spark", "window")
+    val hits = Tables.load(spark, dir, "documents").select("doc_id", "text").collect()
+      .map { r =>
+        val toks = r.getString(1).toLowerCase.split(" ").toSet
+        r.getLong(0) -> terms.count(toks.contains).toLong
+      }.toMap
+    val ndcg = SparkEntry.queries("ir_ndcg")(spark, dir).collect()
+    assert(ndcg.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      ids.zipWithIndex.map { case (id, i) => (i + 1L, id) })
+    assert(ndcg.map(_.getLong(2)).toSeq == ids.map(hits))
+    for (qn <- Seq("ir_bpref", "ir_map"))
+      assert(SparkEntry.queries(qn)(spark, dir).collect().map(_.getLong(1)).toSeq == ids, qn)
+    // ir_err: the cascade fold over this run's grades
+    val (p, err) = ids.map(hits).zipWithIndex.foldLeft((1.0, 0.0)) {
+      case ((cont, e), (g, i)) =>
+        val r = ((1L << g) - 1).toDouble / 8.0
+        (cont * (1.0 - r), e + cont * r / (i + 1))
+    }
+    val er = SparkEntry.queries("ir_err")(spark, dir).collect().head
+    assert(er.getLong(0) == k && er.getLong(3) == ids.count(hits(_) > 0))
+    assert(math.abs(er.getDouble(1) - err) <= 1e-6 && math.abs(er.getDouble(2) - p) <= 1e-6)
+    // ir_pr11: the interpolated envelope of this run's binary judgments
+    val rTot = hits.values.count(_ >= 1).toDouble
+    val cum = ids.map(id => if (hits(id) >= 1) 1 else 0).scanLeft(0)(_ + _).tail
+    val pr = cum.zipWithIndex.map { case (c, i) => (c.toDouble / (i + 1), c / rTot) }
+    for (row <- SparkEntry.queries("ir_pr11")(spark, dir).collect()) {
+      val reach = pr.filter(_._2 >= row.getLong(0) / 10.0).map(_._1)
+      if (reach.isEmpty) assert(row.isNullAt(2))
+      else assert(math.abs(row.getDouble(2) - reach.max) <= 1e-6)
+    }
+  }
+
   test("ir_pr11: interpolated envelope recomputes from the ir_map run") {
     val out = SparkEntry.queries("ir_pr11")(spark, dir).collect()
     assert(out.length == 11)

@@ -80,5 +80,26 @@ class SessionSpec extends AnyFunSuite {
     val pairSites = Seq("i + 2" + ", size(", "d -> struct(ids[0]" + " AS a")
       .flatMap(offenders(_, testOrCore)).distinct
     assert(pairSites.isEmpty, s"build candidate pairs with graft.Pairs, not in: $pairSites")
+    val denseSites = Seq("sqrt(dot" + "Product(", "round(dot" + "Product(")
+      .flatMap(offenders(_, testOrCore)).distinct
+    assert(denseSites.isEmpty, s"take norms and cosines from graft.Dense, not in: $denseSites")
+    // Blocks private to one operator file: each pattern matches once there,
+    // in the helper that defines the block.
+    def matches(path: String, pattern: String): Int = {
+      val src = scala.io.Source.fromFile(new File(root, s"src/main/scala/graft/operators/$path"), "UTF-8")
+      try pattern.r.findAllMatchIn(src.mkString).size finally src.close()
+    }
+    val q = java.util.regex.Pattern.quote _
+    val blocks = Seq(
+      "Retrieval.scala" -> q("crossJoin(broadcast(q))"), // the query-0 dense run
+      "Retrieval.scala" -> q("array_contains(toks("), // the query-term judgment
+      "Embeddings.scala" -> q("\"vec_id\") < Cells"), // the IVF seeds
+      "Embeddings.scala" -> q("orderBy(col(\"c\").desc, col(\"cell\"))"), // the seed ranking
+      "Relational3.scala" -> q("crossJoin(broadcast(tys))"), // the type-pair histogram
+      "Relational3.scala" -> q("withColumn(\"cuma\""), // its CDF windows
+      "Graph.scala" -> """col\("pb"\)\.as\([^)]*\), col\("pa"\)\.as\(""", // the symmetrized edges
+      "Graph.scala" -> q("keep.select(col(\"u\").as(\"v\"))")) // the degree trim
+    val copies = blocks.map { case (f, p) => (f, p, matches(f, p)) }.filter(_._3 != 1)
+    assert(copies.isEmpty, s"write each block once and call its helper; (file, pattern, count): $copies")
   }
 }
